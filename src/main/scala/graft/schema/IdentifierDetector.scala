@@ -19,12 +19,21 @@ import org.apache.spark.sql.types.StringType
   *
   * Rules 1–3 are pure metadata (zero data reads). Rule 4 — which the
   * reference implements as a Python set() over fully-collected rows
-  * (neo4j_export.py:162-167) — runs distributed in two cheap steps:
-  * one pass of `approx_count_distinct` over ALL candidate columns at once
-  * (HyperLogLog, map-side combinable), then an exact
-  * `count(distinct)` confirmation only for columns whose approximate
-  * cardinality could plausibly equal the non-null count. Never N full
-  * scans, never a collect.
+  * (neo4j_export.py:162-167) — runs distributed in two steps. A screen:
+  * ONE aggregate over all candidate columns at once, carrying each
+  * column's sanitized non-null `count` and a DataSketches HLL estimate of
+  * its distinct count (`hll_sketch_agg` at lgK 12, one binary buffer per
+  * column, map-side mergeable). Then an exact `count_distinct`
+  * confirmation, in original property order, only for columns whose
+  * estimate could plausibly equal their count; the first confirmed one
+  * wins. Never N full scans, never a collect.
+  *
+  * The screen is not Spark's built-in HLL++ distinct-count aggregate: at
+  * the precision rule 4 needs, that aggregate lays each column's 4,096
+  * registers out as 410 separate `LongType` aggregation-buffer fields. A
+  * six-column label then drags ~2,460 fields through the partial and
+  * final aggregates and ships a ~1 MB task binary per job; the
+  * DataSketches aggregate keeps one buffer per column.
   */
 object IdentifierDetector {
 
@@ -71,29 +80,37 @@ object IdentifierDetector {
       throw new IllegalArgumentException(s"No properties found for label $label"))
   }
 
-  /** First property (in sorted order) whose non-null values are all
-    * distinct and non-empty. One approximate pass + at most a few exact
-    * confirmations. */
-  private[schema] def allUniqueColumn(df: DataFrame, properties: Seq[String]): Option[String] = {
-    if (properties.isEmpty) return None
-    val aggs = properties.flatMap { c =>
-      val s = sanitized(df, c)
-      // rsd 0.02 with a 0.8 acceptance margin = 10 sigma: a genuinely
-      // unique column essentially never fails the screen (a 2-sigma cut
-      // would randomly drop true identifiers), while clearly-non-unique
-      // columns still skip the exact confirmation scan
-      Seq(count(s).as(s"__n_$c"), approx_count_distinct(s, rsd = 0.02).as(s"__ad_$c"))
-    }
-    val row = df.agg(aggs.head, aggs.tail: _*).head()
-    val candidates = properties.zipWithIndex.collect {
-      case (c, i) if row.getLong(2 * i) > 0 &&
-        row.getLong(2 * i + 1) >= (row.getLong(2 * i) * 0.8).toLong => c
-    }
+  /** First property (in original order) whose sanitized non-null values
+    * are all distinct: the sketch screen, then exact confirmations of the
+    * survivors until one holds. */
+  private[schema] def allUniqueColumn(df: DataFrame, properties: Seq[String]): Option[String] =
     // exact confirmation, first in property order wins (matches ref iteration)
-    candidates.find { c =>
+    screen(df, properties).find { c =>
       val s = sanitized(df, c)
       val r = df.agg(count(s).as("n"), count_distinct(s).as("d")).head()
       r.getLong(0) == r.getLong(1)
+    }
+
+  /** The properties, in original order, that have a sanitized non-null
+    * value and whose estimated distinct count is within the acceptance
+    * margin of their non-null count. One aggregate over all of them. */
+  private[schema] def screen(df: DataFrame, properties: Seq[String]): Seq[String] = {
+    if (properties.isEmpty) return Nil
+    val aggs = properties.flatMap { c =>
+      val s = sanitized(df, c)
+      // hll_sketch_agg takes only int/long/string/binary and skips empty
+      // strings, so every type goes through one hashed long; xxhash64(null)
+      // is the seed, not null, hence the guard. lgK 12 (~1.6% error) with
+      // a 0.8 acceptance margin is ~12 sigma: a genuinely unique column
+      // essentially never fails the screen, while clearly non-unique
+      // columns still skip the exact confirmation scan
+      val h = when(s.isNull, lit(null)).otherwise(xxhash64(s))
+      Seq(count(s).as(s"__n_$c"), hll_sketch_estimate(hll_sketch_agg(h, 12)).as(s"__hll_$c"))
+    }
+    val row = df.agg(aggs.head, aggs.tail: _*).head()
+    properties.zipWithIndex.collect {
+      case (c, i) if row.getLong(2 * i) > 0 &&
+        row.getLong(2 * i + 1) >= (row.getLong(2 * i) * 0.8).toLong => c
     }
   }
 }

@@ -50,9 +50,13 @@ object SchemaInference {
     * column (columnar parquet: N one-column scans ≈ one full-row scan in
     * bytes), plans the single distinct as a cheap two-phase partial agg,
     * and the branches schedule concurrently inside one job. At 100 TB
-    * swap the exact distinct for approx_count_distinct (HLL, see
-    * operators.Sketches) — exact kept here because exactness is what the
-    * cross-engine oracle can check. */
+    * swap the exact distinct for the one-buffer DataSketches HLL that
+    * IdentifierDetector's rule-4 screen uses (`hll_sketch_agg` over a
+    * hashed long), not Spark's built-in HLL++ distinct-count aggregate:
+    * that one lays its registers out as separate `LongType` buffer fields
+    * (410 per column at rsd 0.02), which every partial and final
+    * aggregate and every task binary carries. Exact kept here because
+    * exactness is what the cross-engine oracle can check. */
   def profile(df: DataFrame): DataFrame = {
     df.columns.toSeq.map { c =>
       df.select(col(c))

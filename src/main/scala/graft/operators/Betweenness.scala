@@ -70,31 +70,28 @@ object Betweenness {
       seed: Long = 11L, srcCol: String = "src", dstCol: String = "dst",
       broadcastState: Boolean = true,
       stagingRowsHint: Option[Long] = None,
-      localStateCap: Long = BcLocalStateCap): DataFrame = {
+      localStateCap: Long = LocalGraph.EdgeCap): DataFrame = {
     require(nPivots >= 1 && horizon >= 1, "need nPivots >= 1, horizon >= 1")
     val spark = edges.sparkSession
     val e0 = edges.select(col(srcCol).as("u"), col(dstCol).as("v"))
       .where(col("u") =!= col("v"))
     val eRows = stagingRowsHint.getOrElse(e0.count())
-    // DRIVER-LOCAL Brandes under the cap (the jpColoring/hllBallDeltas
-    // localization class, r16): EVERY quantity in this operator is exact
-    // integer arithmetic — σ sums, the micro-δ `σ_v·(10⁶+δ_w) div σ_w`
-    // truncating division, the per-vid δ sum — so a driver replay over
-    // the collected doubled adjacency is provably bit-identical (integer
-    // math has no ordering or engine sensitivity; the one decimal→double
-    // cast at the end IS BigDecimal.doubleValue in both engines). The
-    // first cut of this localization kept per-round distributed jobs
-    // against LocalRelation frontier broadcasts and LOST to the legacy
-    // loop at 32 cores (isolated med 75 s vs 23.6 baseline): V·k-row
-    // frontiers made every round pay a ~1-2 s driver-side collect +
-    // broadcast-relation build, 12 rounds of pure driver gap (QueryProbe:
-    // 21 s of gaps, 10 s of stages). The full-driver form pays ONE edge
-    // collect (no staging exchange at all — dedup and doubling are
-    // driver-side) + one tiny md5 job instead. Past the cap (or non-long
-    // vids) the legacy distributed loop runs unchanged.
-    if (eRows <= localStateCap &&
-        e0.schema.head.dataType == org.apache.spark.sql.types.LongType)
-      return pivotBetweennessLocalState(e0, nPivots, horizon, seed)
+    // DRIVER-LOCAL Brandes under the cap: EVERY quantity in this
+    // operator is exact integer arithmetic — σ sums, the micro-δ
+    // `σ_v·(10⁶+δ_w) div σ_w` truncating division, the per-vid δ sum —
+    // so a driver replay over the [[LocalGraph]] is provably
+    // bit-identical (the one decimal→double cast at the end IS
+    // BigDecimal.doubleValue in both engines). The first cut of this
+    // localization kept per-round distributed jobs against LocalRelation
+    // frontier broadcasts and LOST to the legacy loop at 32 cores
+    // (isolated med 75 s vs 23.6 baseline): V·k-row frontiers made every
+    // round pay a ~1-2 s driver-side collect + broadcast-relation build.
+    // The full-driver form pays ONE edge collect + one tiny md5 job.
+    // Past the cap (or non-integral vids) the distributed loop runs.
+    LocalGraph.collect(e0, eRows, localStateCap, undirected = true) match {
+      case Some(g) => return pivotBetweennessLocalState(spark, g, nPivots, horizon, seed)
+      case None =>
+    }
     // one staging exchange keyed by the message key v (the landmark
     // recipe): every forward σ-sum and reverse δ-sum then rides the
     // pinned layout. Level memory-budgeted ([[GraphAnalytics.pinLevel]]):
@@ -211,57 +208,25 @@ object Betweenness {
     out
   }
 
-  /** Directed-edge-row cap for [[pivotBetweennessLocalState]] — the
-    * hllBallDeltas localization class: the collected adjacency is two
-    * longs per row, tens of MB at the cap, and the Brandes state is
-    * V·k ≤ 2·cap·k entries. Past it the legacy distributed round loop
-    * runs unchanged. */
-  private[graft] val BcLocalStateCap = 2000000L
-
-  /** Full driver-side Brandes replay over the collected adjacency —
-    * zero per-round jobs. Per-pivot BFS levels, σ accumulation, the
-    * exact micro-δ truncating division and the per-vid δ sum all run in
+  /** Full driver-side Brandes replay over the [[LocalGraph]] — zero
+    * per-round jobs. Per-pivot BFS levels, σ accumulation, the exact
+    * micro-δ truncating division and the per-vid δ sum all run in
     * BigInteger (the legacy DECIMAL(38,0) values ARE integers, and
     * integer arithmetic is ordering- and engine-insensitive, so the
-    * replay is bit-identical — spec-pinned local ≡ legacy). The ONLY
-    * distributed work: the edge collect and one md5 job over a
-    * LocalRelation of the vertex ids, so pivot selection uses the exact
-    * Dedup.md5Long expression. */
-  private def pivotBetweennessLocalState(e0: DataFrame, nPivots: Int,
-      horizon: Int, seed: Long): DataFrame = {
+    * replay is bit-identical). Besides the edge collect, the ONLY
+    * distributed work is one md5 job over [[LocalGraph.vertexFrame]],
+    * so pivot selection uses the exact Dedup.md5Long expression. */
+  private def pivotBetweennessLocalState(spark: org.apache.spark.sql.SparkSession,
+      g: LocalGraph, nPivots: Int, horizon: Int, seed: Long): DataFrame = {
     import org.apache.spark.sql.types._
     import org.apache.spark.sql.Row
-    val spark = e0.sparkSession
-    // collected directed edges → deduped doubled adjacency, driver-side
-    val raw = e0.collect()
-    val undSet = new java.util.HashSet[(Long, Long)](raw.length * 4)
-    raw.foreach { r =>
-      val (a, b) = (r.getLong(0), r.getLong(1))
-      undSet.add((a, b)); undSet.add((b, a))
-    }
-    val vidIdx = scala.collection.mutable.LinkedHashMap.empty[Long, Int]
-    undSet.forEach { e => vidIdx.getOrElseUpdate(e._1, vidIdx.size); () }
-    undSet.forEach { e => vidIdx.getOrElseUpdate(e._2, vidIdx.size); () }
-    val nV = vidIdx.size
-    val vids = new Array[Long](nV)
-    vidIdx.foreach { case (v, i) => vids(i) = v }
-    val deg = new Array[Int](nV)
-    undSet.forEach { e => deg(vidIdx(e._1)) += 1; () }
-    val nbr = Array.tabulate(nV)(i => new Array[Int](deg(i)))
-    val pos = new Array[Int](nV)
-    undSet.forEach { e =>
-      val a = vidIdx(e._1)
-      nbr(a)(pos(a)) = vidIdx(e._2)
-      pos(a) += 1
-    }
+    val nV = g.numVertices
     // pivots: k minimum-(md5, vid) vertices — the same expression as the
     // legacy loop, one tiny job over a LocalRelation of the vertex ids
-    val vertsDf = org.apache.spark.sql.graft.DatasetBridge.localRelation(spark,
-      StructType(Seq(StructField("vid", LongType))), vids.map(Row(_)).toIndexedSeq)
-    val pivots: Array[Int] = vertsDf
+    val pivots: Array[Int] = g.vertexFrame(spark, "vid")
       .withColumn("p", Dedup.md5Long(concat(lit(s"$seed:"), col("vid").cast("string"))))
       .orderBy(col("p").asc, col("vid").asc).limit(nPivots)
-      .select(col("vid")).collect().map(r => vidIdx(r.getLong(0)))
+      .select(col("vid")).collect().map(r => g.index(r.getAs[Number](0).longValue()))
 
     val Micro = java.math.BigInteger.valueOf(1000000L)
     val bcm = new Array[java.math.BigInteger](nV) // Σ_pivot δμ per vid
@@ -277,7 +242,7 @@ object Betweenness {
       while (ell < horizon && levels(ell).nonEmpty) {
         val next = scala.collection.mutable.ArrayBuffer.empty[Int]
         levels(ell).foreach { u =>
-          nbr(u).foreach { v =>
+          g.foreachNbr(u) { v =>
             if (dist(v) == -1) { dist(v) = ell + 1; sigma(v) = java.math.BigInteger.ZERO; next += v }
             if (dist(v) == ell + 1) sigma(v) = sigma(v).add(sigma(u))
           }
@@ -296,7 +261,7 @@ object Betweenness {
       while (l >= 1) {
         levels(l).foreach { w =>
           val t = Micro.add(delta(w))
-          nbr(w).foreach { v =>
+          g.foreachNbr(w) { v =>
             if (dist(v) == l - 1)
               delta(v) = delta(v).add(sigma(v).multiply(t).divide(sigma(w)))
           }
@@ -311,11 +276,11 @@ object Betweenness {
     // one decimal→double cast per vid (BigDecimal.doubleValue — the same
     // correctly-rounded conversion Spark's Decimal.toDouble performs),
     // then the single IEEE division by 10⁶, exactly the legacy select
-    val outSchema = StructType(Seq(StructField("vid", LongType),
+    val outSchema = StructType(Seq(StructField("vid", g.vidType),
       StructField("betweenness", DoubleType)))
     val outRows = (0 until nV).map { i =>
       val b = bcm(i)
-      Row(vids(i), if (b == null) 0.0
+      Row(g.vid(i), if (b == null) 0.0
         else new java.math.BigDecimal(b).doubleValue() / 1000000.0)
     }
     org.apache.spark.sql.graft.DatasetBridge.localRelation(spark, outSchema, outRows)

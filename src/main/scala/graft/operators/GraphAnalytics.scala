@@ -1921,7 +1921,7 @@ object GraphAnalytics {
       broadcastDist: Boolean = true,
       collectStats: Boolean = true,
       unitWeight: Boolean = false,
-      localStateCap: Long = SsspLocalStateCap): (DataFrame, Seq[Long]) = {
+      localStateCap: Long = LocalGraph.EdgeCap): (DataFrame, Seq[Long]) = {
     require(rounds >= 0, "rounds must be >= 0")
     import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val e0 = edges.select(col(srcCol).as("u"), col(dstCol).as("v"),
@@ -1929,13 +1929,6 @@ object GraphAnalytics {
       .where(col("u") =!= col("v"))
     // parallel edges collapse to their min weight up front — fewer rows
     // in every round's join, identical distances
-    val dbg = sys.props.contains("graft.frontier.debug")
-    def t[A](label: String)(f: => A): A = {
-      val t0 = System.nanoTime()
-      val a = f
-      if (dbg) println(s"[sssp] $label ${(System.nanoTime() - t0) / 1e9}s")
-      a
-    }
     // ONE shuffle stages the edge list: repartition by the message key v
     // FIRST, then the parallel-edge min-collapse groupBy runs exchange-
     // free on top (HashPartitioning(v) satisfies the (u, v) clustering)
@@ -1953,44 +1946,33 @@ object GraphAnalytics {
     val eProj = if (unitWeight) e0.select(col("u"), col("v")) else e0
     val eDirRows = eProj.count()
     val eRowsBound = (if (undirected) 2L else 1L) * eDirRows
-    // DRIVER-LOCAL bounded relaxation under the cap (r16, the
-    // pivotBetweennessLocalState localization class): every quantity in
+    // DRIVER-LOCAL bounded relaxation under the cap: every quantity in
     // this operator is exact integer min-plus — distances are long sums
     // of long weights folded with min, the frontier is "strictly
     // improved this round", and the round bound truncates identically —
-    // so a synchronous driver replay over the one-collect edge list is
-    // provably bit-identical to the distributed rounds (integer math
-    // has no ordering or engine sensitivity; SsspLocalSpec pins local ≡
-    // legacy). Replaces ~3 jobs/round (two broadcast builds + the
-    // materializing count) with ONE edge collect and zero staging
-    // exchange. Past the cap (or non-long vids) the legacy loop runs
-    // unchanged; `localStateCap = 0` forces it for specs. The cap
-    // counts DIRECTED edge rows (the BcLocalStateCap convention —
-    // doubling is driver-side).
-    if (localStateCap > 0 && eDirRows <= localStateCap &&
-        e0.schema(0).dataType == org.apache.spark.sql.types.LongType &&
-        e0.schema(1).dataType == org.apache.spark.sql.types.LongType &&
-        (sources.schema.head.dataType match {
-          case org.apache.spark.sql.types.ByteType |
-               org.apache.spark.sql.types.ShortType |
-               org.apache.spark.sql.types.IntegerType |
-               org.apache.spark.sql.types.LongType => true
-          case _ => false
-        }))
-      return ssspLocalState(eProj, sources, rounds, undirected, unitWeight,
-        collectStats)
-    val (eBase, eParts) = t("eCheckpoint")(volumeStage(eProj, eRowsBound))
+    // so a synchronous replay over the [[LocalGraph]] is provably
+    // bit-identical to the distributed rounds. Replaces ~3 jobs/round
+    // (two broadcast builds + the materializing count) with ONE edge
+    // collect and zero staging exchange. Past the cap (or non-integral
+    // vids) the distributed loop runs; `localStateCap = 0` forces it.
+    LocalGraph.collect(eProj, eDirRows, localStateCap, undirected,
+        weightCol = if (unitWeight) None else Some("w"),
+        extraVids = Some(sources)) match {
+      case Some(g) => return ssspLocalState(edges.sparkSession, g, rounds, collectStats)
+      case None =>
+    }
+    val (eBase, eParts) = volumeStage(eProj, eRowsBound)
     val eRaw =
       if (!undirected) eBase
       else if (unitWeight) eBase.unionAll(eBase.select(col("v").as("u"), col("u").as("v")))
       else eBase.unionAll(eBase.select(col("v").as("u"), col("u").as("v"), col("w")))
-    val e = t("eStage")(
+    val e =
       if (unitWeight)
         persistPinned(repartitionSized(eRaw, eParts, col("v"))
           .dropDuplicates("u", "v")
           .withColumn("w", lit(1L)), eRowsBound)
       else persistPinned(repartitionSized(eRaw, eParts, col("v"))
-        .groupBy("u", "v").agg(min(col("w")).as("w")), eRowsBound))
+        .groupBy("u", "v").agg(min(col("w")).as("w")), eRowsBound)
     val src = sources.select(col(sources.columns.head).as("vid")).distinct()
     // DENSE-INIT state: every vertex that can ever hold a distance is a
     // row from round 0 (dist NULL = unreached, `fresh` marking the
@@ -2013,8 +1995,8 @@ object GraphAnalytics {
     val endpoints =
       if (undirected) e.select(col("u").as("vid"))
       else e.select(col("u").as("vid")).unionAll(e.select(col("v").as("vid")))
-    val verts = t("verts")(endpoints.unionAll(src).distinct().localCheckpoint(true))
-    val nVerts = t("nVerts")(verts.count())
+    val verts = endpoints.unionAll(src).distinct().localCheckpoint(true)
+    val nVerts = verts.count()
     // the frontier broadcast-joins into the v-pinned cache and the
     // min-combine runs in place — a round exchanges NOTHING. Past
     // MaxBroadcastVertices the guard falls back to shuffle joins
@@ -2024,10 +2006,10 @@ object GraphAnalytics {
     def maybeBroadcast(df: DataFrame): DataFrame =
       if (useBroadcast) broadcast(df) else df
     val d0 = src.withColumn("d0", lit(0L))
-    var dist = t("init")(verts
+    var dist = verts
       .join(maybeBroadcast(d0), Seq("vid"), "left_outer")
       .select(col("vid"), col("d0").as("dist"), col("d0").isNotNull.as("fresh"))
-      .localCheckpoint(true))
+      .localCheckpoint(true)
     val frontierSizes = scala.collection.mutable.ListBuffer.empty[Long]
     var moved = -1L // unknown before the first count
     var r = 0
@@ -2047,10 +2029,7 @@ object GraphAnalytics {
       // (it lands the lazy checkpoint) AND the empty-frontier
       // short-circuit (a fixpoint round is the identity, so stopping
       // early is exact)
-      val tR = System.nanoTime()
       moved = merged.where(col("fresh")).count()
-      if (sys.props.contains("graft.frontier.debug"))
-        println(s"[sssp] round $r moved=$moved count=${(System.nanoTime() - tR) / 1e9}s")
       dist = merged
       if (collectStats) frontierSizes += moved
     }
@@ -2060,83 +2039,61 @@ object GraphAnalytics {
     (out, frontierSizes.toSeq)
   }
 
-  /** Directed/doubled edge-row cap for the local relaxation path — the
-    * [[Betweenness.BcLocalStateCap]] localization class: the collected
-    * edge list is two/three longs per row (tens of MB at the cap) and
-    * the distance state is ≤ V ≤ cap entries. */
-  private[graft] val SsspLocalStateCap = 2000000L
-
   /** Full driver-side synchronous bounded relaxation over the
-    * one-collect edge list — zero per-round jobs, zero staging
-    * exchange. The recurrence is exactly the distributed loop's: round
-    * i relaxes only the frontier (vertices whose distance STRICTLY
-    * improved in round i−1), candidate messages fold with min, the
-    * merge keeps the smaller of old and candidate, and the loop stops
-    * at `rounds` or on an empty frontier — all long integer arithmetic,
-    * so the replay is bit-identical (spec-pinned local ≡ legacy). The
-    * returned frontier-size list matches the legacy hook: one entry per
-    * EXECUTED round (a trailing 0 when the last round converged). */
-  private def ssspLocalState(eProj: DataFrame, sources: DataFrame,
-      rounds: Int, undirected: Boolean, unitWeight: Boolean,
+    * [[LocalGraph]] (unweighted means unit weights, the BFS case) —
+    * zero per-round jobs, zero staging exchange. The recurrence is
+    * exactly the distributed loop's: round i relaxes only the frontier
+    * (vertices whose distance STRICTLY improved in round i−1),
+    * candidate messages fold with min, the merge keeps the smaller of
+    * old and candidate, and the loop stops at `rounds` or once a round
+    * improves nothing — all long integer arithmetic, so the replay is
+    * bit-identical. The returned frontier-size list matches the legacy
+    * hook: one entry per EXECUTED round (a trailing 0 when the last
+    * round converged). */
+  private def ssspLocalState(spark: SparkSession, g: LocalGraph, rounds: Int,
       collectStats: Boolean): (DataFrame, Seq[Long]) = {
     import org.apache.spark.sql.types._
     import org.apache.spark.sql.Row
-    val spark = eProj.sparkSession
-    val raw = eProj.collect()
-    // adjacency: vid → packed (neighbor, weight) pairs; parallel edges
-    // stay (the relaxation min absorbs them, same as the staged
-    // min-collapse — identical distances)
-    val adj = new java.util.HashMap[Long, scala.collection.mutable.ArrayBuffer[(Long, Long)]]()
-    def add(a: Long, b: Long, w: Long): Unit = {
-      var buf = adj.get(a)
-      if (buf == null) {
-        buf = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-        adj.put(a, buf)
-      }
-      buf += ((b, w))
-    }
-    raw.foreach { r =>
-      val (a, b) = (r.getLong(0), r.getLong(1))
-      val w = if (unitWeight) 1L else r.getLong(2)
-      add(a, b, w)
-      if (undirected) add(b, a, w)
-    }
-    val srcVids = sources
-      .select(col(sources.columns.head).cast("long").as("vid")).distinct()
-      .collect().map(_.getLong(0))
-    val dist = new java.util.HashMap[Long, Long]()
-    srcVids.foreach(dist.put(_, 0L))
-    var frontier: Array[Long] = srcVids
+    val (nV, offsets, nbrs) = (g.numVertices, g.offsets, g.nbrs)
+    val unitWeight = g.weights.isEmpty
+    val w = g.weights.getOrElse(Array.emptyLongArray)
+    val Unreached = Long.MaxValue
+    val dist = Array.fill(nV)(Unreached)
+    g.extra.foreach(dist(_) = 0L)
+    var frontier: Array[Int] = g.extra
     val frontierSizes = scala.collection.mutable.ListBuffer.empty[Long]
+    // synchronous: candidates read round-start distances only
+    val nd = Array.fill(nV)(Unreached)
+    var moved = -1L // unknown before the first round, as in the legacy loop
     var r = 0
-    while (r < rounds && frontier.nonEmpty) {
+    while (r < rounds && moved != 0L) {
       r += 1
-      // synchronous: candidates read round-start distances only
-      val nd = new java.util.HashMap[Long, Long]()
+      val touched = scala.collection.mutable.ArrayBuffer.empty[Int]
       frontier.foreach { u =>
-        val du = dist.get(u)
-        val nbrs = adj.get(u)
-        if (nbrs != null) nbrs.foreach { case (v, w) =>
-          val c = du + w
-          if (!nd.containsKey(v) || c < nd.get(v)) nd.put(v, c)
+        var j = offsets(u)
+        while (j < offsets(u + 1)) {
+          val v = nbrs(j)
+          val c = dist(u) + (if (unitWeight) 1L else w(j))
+          if (nd(v) == Unreached) touched += v
+          if (c < nd(v)) nd(v) = c
+          j += 1
         }
       }
-      val improved = scala.collection.mutable.ArrayBuffer.empty[Long]
-      nd.forEach { (v, c) =>
-        if (!dist.containsKey(v) || c < dist.get(v)) {
-          dist.put(v, c)
-          improved += v
-        }
+      val improved = scala.collection.mutable.ArrayBuffer.empty[Int]
+      touched.foreach { v =>
+        if (nd(v) < dist(v)) { dist(v) = nd(v); improved += v }
+        nd(v) = Unreached
       }
       frontier = improved.toArray
-      if (collectStats) frontierSizes += improved.size.toLong
+      moved = improved.size.toLong
+      if (collectStats) frontierSizes += moved
     }
-    val outSchema = StructType(Seq(StructField("vid", LongType),
+    val outSchema = StructType(Seq(StructField("vid", g.vidType),
       StructField("dist", LongType)))
-    val outRows = scala.collection.mutable.ArrayBuffer.empty[Row]
-    dist.forEach { (v, d) => outRows += Row(v, d) }
+    val outRows = (0 until nV).filter(dist(_) != Unreached)
+      .map(i => Row(g.vid(i), dist(i)))
     (org.apache.spark.sql.graft.DatasetBridge.localRelation(spark, outSchema,
-      outRows.toIndexedSeq), frontierSizes.toList)
+      outRows), frontierSizes.toList)
   }
 
   // ----------------------------------------------------- walk-family staging
@@ -2759,7 +2716,7 @@ object GraphAnalytics {
     // two value joins vanish from the plan. The legacy join loop below
     // stays as the type-generic / past-guard fallback. Trace effect:
     // the ~0.5 s/round zero-job gap (driver HashedRelation build +
-    // torrent serialize per round, CorenessProbe r11) collapses to a
+    // torrent serialize per round, r11 coreness trace) collapses to a
     // primitive-array map build from already-collected rows.
     val integralVids = e0.schema("u").dataType match {
       case org.apache.spark.sql.types.ByteType | org.apache.spark.sql.types.ShortType |
@@ -2774,10 +2731,7 @@ object GraphAnalytics {
     // vertices (16g → ~12.5M: sf1's 1.9M rides the map loop, sf10's
     // 18.6M falls back to the join loop, whose sf10 probe is green)
     val mapModeMaxVerts = perExecutorHeapBytes(spark0) / 64 * 5 / 100
-    // -Dgraft.coreness.noMapMode forces the legacy join loop — the
-    // same-container A/B switch for the probe traces
-    if (useBroadcast && integralVids && nVerts <= mapModeMaxVerts &&
-        !sys.props.contains("graft.coreness.noMapMode")) {
+    if (useBroadcast && integralVids && nVerts <= mapModeMaxVerts) {
       import graft.functions.{BroadcastLongMapLookup, LongLongMap}
       import spark0.implicits._
       val sc = spark0.sparkContext
@@ -2794,7 +2748,6 @@ object GraphAnalytics {
         BroadcastLongMapLookup(k.cast("long"), bcOverlay, bcBase, -1L)
       while (r < budget && !done) {
         r += 1
-        val tRound = System.nanoTime()
         val frontierMode = r > 1 && lastMoved * FrontierSwitchFactor < nVerts
         val src =
           if (!frontierMode) und
@@ -2838,10 +2791,6 @@ object GraphAnalytics {
           bcOverlay = sc.broadcast(LongLongMap.build(overlayAcc.iterator, overlayAcc.size))
           oldO.destroy()
         }
-        if (sys.props.contains("graft.coreness.debug"))
-          println(s"[coreness] round $r mode=${if (frontierMode) "frontier" else "dense"} " +
-            s"moved=$lastMoved overlay=${overlayAcc.size} " +
-            s"elapsed=${(System.nanoTime() - tRound) / 1e9}")
       }
       // final values: one exchange-free distinct over the cached
       // adjacency (every vertex appears as u in the doubled list) probed
@@ -2879,7 +2828,6 @@ object GraphAnalytics {
     var prevRoundCache: DataFrame = null
     while (r < budget && !done) {
       r += 1
-      val tRound = System.nanoTime()
       // dense rounds while the frontier is a large fraction of V (the
       // candidate discovery joins would touch ~everything anyway);
       // frontier rounds once it shrinks — on slow fixpoints (the dense
@@ -2969,9 +2917,6 @@ object GraphAnalytics {
       // lazy checkpoint, whose anti-join side scans it)
       if (prevRoundCache != null) prevRoundCache.unpersist(false)
       prevRoundCache = roundCache
-      if (sys.props.contains("graft.coreness.debug"))
-        println(s"[coreness] round $r mode=${if (frontierMode) "frontier" else "dense"} " +
-          s"moved=$lastMoved elapsed=${(System.nanoTime() - tRound) / 1e9}")
     }
     // pin the final state eagerly, then release the cached adjacency —
     // the caller's actions must not re-derive it from the source scans
@@ -3151,64 +3096,32 @@ object GraphAnalytics {
     * rounds are exact no-ops. Also returns the per-round changed-set
     * sizes (the spec hook proving per-round work tracks the frontier).
     */
-  /** Doubled-edge-row cap for [[hllBallDeltasLocal]]: V ≤ 2·E ≤ this,
-    * so dense per-vertex register arrays stay ≤ cap·2^b bytes (64 MB at
-    * b = 8) and the edge collect ≤ cap/2 rows — metadata-sized driver
-    * state. Past it the distributed frontier loop runs unchanged. */
-  private[graft] val HllLocalStateCap = 262144L
-
   /** Driver-local HLL ball propagation (see the gate in
-    * [[hllBallDeltas]]): edges and dense register arrays live on the
-    * driver; each round is pure register-wise integer max restricted to
-    * the changed frontier (the exact legacy recurrence — registers never
-    * shrink, a vertex re-absorbs nothing from an unchanged neighbor),
-    * and the round's old/new estimates come from ONE
-    * [[Sketches.hllEstimateGrouped]] job over a LocalRelation of the
-    * changed vertices' register rows — the same expressions, the same
-    * bits. Returns the same (est0, deltas, frontierSizes) triple. */
-  private def hllBallDeltasLocal(eFull: DataFrame, rounds: Int, b: Int,
+    * [[hllBallDeltas]]): dense register arrays live on the driver next
+    * to the [[LocalGraph]] and its reverse; each round is pure
+    * register-wise integer max restricted to the changed frontier (the
+    * exact legacy recurrence — registers never shrink, a vertex
+    * re-absorbs nothing from an unchanged neighbor), and the round's
+    * old/new estimates come from ONE [[Sketches.hllEstimateGrouped]] job
+    * over a LocalRelation of the changed vertices' register rows — the
+    * same expressions, the same bits. Returns the same (est0, deltas,
+    * frontierSizes) triple. */
+  private def hllBallDeltasLocal(spark: SparkSession, g: LocalGraph,
+      rounds: Int, b: Int,
       collectStats: Boolean): (DataFrame, Seq[DataFrame], Seq[Long]) = {
     import org.apache.spark.sql.types._
     import org.apache.spark.sql.Row
-    val spark = eFull.sparkSession
     val m = 1 << b
-    val edgeRows = eFull.collect()
-    val vidIdx = scala.collection.mutable.LinkedHashMap.empty[Long, Int]
-    edgeRows.foreach { r =>
-      vidIdx.getOrElseUpdate(r.getLong(0), vidIdx.size)
-      vidIdx.getOrElseUpdate(r.getLong(1), vidIdx.size)
-    }
-    val nV = vidIdx.size
-    val vids = new Array[Long](nV)
-    vidIdx.foreach { case (v, i) => vids(i) = v }
-    // per-src out-neighbor lists: ball(src) ∪= ball(dst) per edge
-    val outDeg = new Array[Int](nV)
-    edgeRows.foreach(r => outDeg(vidIdx(r.getLong(0))) += 1)
-    val outNbr = Array.tabulate(nV)(i => new Array[Int](outDeg(i)))
-    val outPos = new Array[Int](nV)
-    edgeRows.foreach { r =>
-      val s = vidIdx(r.getLong(0))
-      outNbr(s)(outPos(s)) = vidIdx(r.getLong(1))
-      outPos(s) += 1
-    }
-    // reverse adjacency for the candidate scan (who absorbs from d?)
-    val inDeg = new Array[Int](nV)
-    edgeRows.foreach(r => inDeg(vidIdx(r.getLong(1))) += 1)
-    val inNbr = Array.tabulate(nV)(i => new Array[Int](inDeg(i)))
-    val inPos = new Array[Int](nV)
-    edgeRows.foreach { r =>
-      val d = vidIdx(r.getLong(1))
-      inNbr(d)(inPos(d)) = vidIdx(r.getLong(0))
-      inPos(d) += 1
-    }
+    val (nV, vids) = (g.numVertices, g.vids)
+    // ball(src) ∪= ball(dst) per edge; the reverse adjacency drives the
+    // candidate scan (who absorbs from d?)
+    val inG = g.reverse
     // initial registers: the SAME hash/rho expressions, one job over a
     // LocalRelation of the vertex ids
-    val vertsDf = org.apache.spark.sql.graft.DatasetBridge.localRelation(spark,
-      StructType(Seq(StructField("vid", LongType))), vids.map(Row(_)).toIndexedSeq)
     val regs: Array[Array[Byte]] = Array.fill(nV)(new Array[Byte](m))
-    Sketches.hllRegistersGrouped(vertsDf, "vid", col("vid"), b).collect()
+    Sketches.hllRegistersGrouped(g.vertexFrame(spark, "vid"), "vid", col("vid"), b).collect()
       .foreach { r =>
-        regs(vidIdx(r.getLong(0)))(r.getLong(1).toInt) = r.getInt(2).toByte
+        regs(g.index(r.getLong(0)))(r.getLong(1).toInt) = r.getInt(2).toByte
       }
     // one estimate job over (k, register) rows — hllEstimateGrouped only
     // reads the register column and the per-group row count
@@ -3246,14 +3159,14 @@ object GraphAnalytics {
         // candidates: in-neighbors of the changed set (synchronous — all
         // reads see the PREVIOUS round's registers; writes land after)
         val candSet = scala.collection.mutable.LinkedHashSet.empty[Int]
-        changedPrev.foreach(d => inNbr(d).foreach(s => candSet.add(s)))
+        changedPrev.foreach(d => inG.foreachNbr(d)(s => candSet.add(s)))
         val changedFlag = new Array[Boolean](nV)
         changedPrev.foreach(changedFlag(_) = true)
         val updates = scala.collection.mutable.ArrayBuffer.empty[(Int, Array[Byte], Array[Byte])]
         candSet.foreach { s =>
           val old = regs(s)
           var merged: Array[Byte] = null
-          outNbr(s).foreach { d =>
+          g.foreachNbr(s) { d =>
             if (changedFlag(d)) {
               val src = regs(d)
               var j = 0
@@ -3291,23 +3204,25 @@ object GraphAnalytics {
   private[graft] def hllBallDeltas(edges: DataFrame, rounds: Int, b: Int,
       srcCol: String, dstCol: String,
       collectStats: Boolean = false,
-      localStateCap: Long = HllLocalStateCap): (DataFrame, Seq[DataFrame], Seq[Long]) = {
+      localStateCap: Long = LocalGraph.WideStateCap): (DataFrame, Seq[DataFrame], Seq[Long]) = {
     val eFull = edges.select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
       .where(col("src").isNotNull && col("dst").isNotNull)
       .distinct().localCheckpoint(true)
     val eRows = eFull.count()
-    // LOCAL-STATE register loop under the cap (the jpColoring/coreness
-    // localization class, r16): V ≤ 2·E bounds the vertex count, so the
-    // gate is free. Register state is V·2^b BYTES of pure integer max —
-    // the driver replays the exact recurrence — while every FLOATING
-    // value (initial registers' hashes, all estimates) still comes out
-    // of the same Sketches expressions run over LocalRelations, so the
-    // output is bit-identical to the distributed loop (spec-pinned).
-    // The legacy loop pays ~4 jobs per round (broadcast builds + the
-    // materializing count) over frontier frames that are metadata-sized
-    // here; the local path is ~3 jobs + one tiny estimate job per round.
-    if (2 * eRows <= localStateCap && rounds >= 0)
-      return hllBallDeltasLocal(eFull, rounds, b, collectStats)
+    // LOCAL-STATE register loop under the wide-state cap: register
+    // state is V·2^b BYTES of pure integer max — the driver replays the
+    // exact recurrence — while every FLOATING value (initial registers'
+    // hashes, all estimates) still comes out of the same Sketches
+    // expressions run over LocalRelations, so the output is
+    // bit-identical to the distributed loop. The legacy loop pays ~4
+    // jobs per round (broadcast builds + the materializing count) over
+    // frontier frames that are metadata-sized here; the local path pays
+    // one tiny estimate job per round.
+    LocalGraph.collect(eFull, eRows, localStateCap, undirected = false) match {
+      case Some(g) =>
+        return hllBallDeltasLocal(edges.sparkSession, g, rounds, b, collectStats)
+      case None =>
+    }
     // volume-sized scan width over the cached edge blocks (narrow — each
     // coalesced task reads several cached partitions; no shuffle)
     val eParts = volumeParts(edges.sparkSession, eRows)
@@ -3852,8 +3767,6 @@ object DataFramePregel {
     // memory ceiling and sent sf1's 4.9M-row forest to disk — measured)
     val forestRowsEst =
       if (probeParts.isEmpty) 0L else sampleOut * nPart / probeParts.size
-    if (sys.env.contains("GRAFT_CC_DEBUG"))
-      println(s"[cc] pre-probe parts=$probeParts/$nPart in=$sampleIn out=$sampleOut pays=$contractionPays forestEst=$forestRowsEst")
 
     // raw fallback: the canonical multiset view of eIn (child = greater
     // id, root candidate = smaller — the orientation the star rounds
@@ -3992,13 +3905,9 @@ object DataFramePregel {
       // volume-aware (DISK_ONLY past the cap — round 0 of a 10x-scale
       // list must not park gigabytes of deserialized rows in protected
       // storage; rounds shrink geometrically back under the cap)
-      val t0 = System.nanoTime()
       e = ckpt(small, 2L * edgeCount)
-      val t1 = System.nanoTime()
       val probe = starProbe(e)
       edgeCount = probe._1; isStar = probe._2
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        println(f"[cc] round $rounds: edges $edgeCount parts $parts star $isStar ckpt ${(t1-t0)/1e9}%.2f s probe ${(System.nanoTime()-t1)/1e9}%.2f s")
       converged = isStar
       rounds += 1
     }

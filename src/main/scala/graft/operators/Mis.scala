@@ -218,63 +218,28 @@ object Mis {
     misWithStats(edges, rounds, seed, srcCol, dstCol, collectStats = false,
       stagingRowsHint = stagingRowsHint)._1
 
-  /** Vertex-state cap for [[maximalIndependentSet]]'s local-state loop —
-    * the same coreness-broadcast-map localization class (and size) as
-    * [[JpLocalStateCap]]: V rows of (vid, priority) plus the selected
-    * map on the driver. Past it the legacy distributed round loop runs
-    * unchanged. */
-  private[graft] val MisLocalStateCap = 2000000L
-
-  /** Full driver-side Luby replay over the collected adjacency — zero
-    * per-round jobs (the jpColoring/hllBallDeltas localization class,
-    * r16). Every round is pure integer comparison: sel = active vertices
-    * whose (priority, vid) is a strict lexicographic local min among
-    * ACTIVE neighbors; sel and its neighbors retire — exactly the legacy
-    * semantics, so the replay is value-identical (MisSpec local ≡ legacy
-    * pin, incl. the sentinel). The ONLY distributed work: the edge
-    * collect (no staging exchange at all — dedup is driver-side) and one
-    * md5 job over a LocalRelation of the vertex ids, so priorities use
-    * the exact Dedup.md5Long expression. A first cut kept two
+  /** Full driver-side Luby replay over the [[LocalGraph]] — zero
+    * per-round jobs. Every round is pure integer comparison: sel =
+    * active vertices whose (priority, vid) is a strict lexicographic
+    * local min among ACTIVE neighbors; sel and its neighbors retire —
+    * exactly the legacy semantics, so the replay is value-identical,
+    * sentinel included. Besides the edge collect, the ONLY distributed
+    * work is one md5 job over [[LocalGraph.vertexFrame]], so priorities
+    * use the exact Dedup.md5Long expression. A first cut kept two
     * distributed jobs per round against LocalRelation broadcasts and
     * LOST to the legacy loop at 32 cores (isolated med 12.2 s vs 9.7
     * baseline): V-row collects + broadcast-relation builds per round are
     * driver gap, not work. */
-  private def misLocalState(e0: DataFrame, rounds: Int, seed: Long): DataFrame = {
+  private def misLocalState(spark: org.apache.spark.sql.SparkSession,
+      g: LocalGraph, rounds: Int, seed: Long): DataFrame = {
     import org.apache.spark.sql.types._
     import org.apache.spark.sql.Row
-    val spark = e0.sparkSession
-    // ONE lineage execution: directed edges collect; doubling and dedup
-    // are driver-side
-    val raw = e0
-      .select(col("u").cast("long").as("u"), col("v").cast("long").as("v"))
-      .collect()
-    val undSet = new java.util.HashSet[(Long, Long)](raw.length * 4)
-    raw.foreach { r =>
-      val (a, b) = (r.getLong(0), r.getLong(1))
-      undSet.add((a, b)); undSet.add((b, a))
-    }
-    val vidIdx = scala.collection.mutable.LinkedHashMap.empty[Long, Int]
-    undSet.forEach { e => vidIdx.getOrElseUpdate(e._1, vidIdx.size); () }
-    undSet.forEach { e => vidIdx.getOrElseUpdate(e._2, vidIdx.size); () }
-    val nV = vidIdx.size
-    val vids = new Array[Long](nV)
-    vidIdx.foreach { case (v, i) => vids(i) = v }
-    val deg = new Array[Int](nV)
-    undSet.forEach { e => deg(vidIdx(e._1)) += 1; () }
-    val nbr = Array.tabulate(nV)(i => new Array[Int](deg(i)))
-    val pos = new Array[Int](nV)
-    undSet.forEach { e =>
-      val a = vidIdx(e._1)
-      nbr(a)(pos(a)) = vidIdx(e._2)
-      pos(a) += 1
-    }
+    val (nV, vids, offsets, nbrs) = (g.numVertices, g.vids, g.offsets, g.nbrs)
     // priorities: the exact md5 expression, one job over a LocalRelation
     val prio = new Array[Long](nV)
-    org.apache.spark.sql.graft.DatasetBridge.localRelation(spark,
-        StructType(Seq(StructField("u", LongType))),
-        vids.map(Row(_)).toIndexedSeq)
+    g.vertexFrame(spark, "u")
       .withColumn("p", Dedup.md5Long(concat(lit(s"$seed:"), col("u").cast("string"))))
-      .collect().foreach(r => prio(vidIdx(r.getLong(0))) = r.getLong(1))
+      .collect().foreach(r => prio(g.index(r.getAs[Number](0).longValue())) = r.getLong(1))
 
     val active = new Array[Boolean](nV)
     java.util.Arrays.fill(active, true)
@@ -290,10 +255,9 @@ object Mis {
       while (u < nV) {
         if (active(u)) {
           var isMin = true
-          val ns = nbr(u)
-          var j = 0
-          while (j < ns.length && isMin) {
-            val v = ns(j)
+          var j = offsets(u)
+          while (j < offsets(u + 1) && isMin) {
+            val v = nbrs(j)
             if (active(v) &&
                 (prio(v) < prio(u) ||
                   (prio(v) == prio(u) && vids(v) < vids(u)))) isMin = false
@@ -307,7 +271,7 @@ object Mis {
       sel.foreach { s =>
         selected += ((vids(s), i.toLong))
         if (active(s)) { active(s) = false; nActive -= 1 }
-        nbr(s).foreach { v =>
+        g.foreachNbr(s) { v =>
           if (active(v)) { active(v) = false; nActive -= 1 }
         }
       }
@@ -337,16 +301,12 @@ object Mis {
     // its per-round active-edge counts ARE the maintained shrinking
     // table's property. With a caller hint the gate is free (no lineage
     // execution before the one collect).
-    val integralVids = {
-      import org.apache.spark.sql.types._
-      e0.schema.take(2).forall(_.dataType match {
-        case ByteType | ShortType | IntegerType | LongType => true
-        case _ => false
-      })
-    }
-    val eRows0 = stagingRowsHint.getOrElse(e0.count())
-    if (!collectStats && integralVids && eRows0 <= MisLocalStateCap)
-      return (misLocalState(e0, rounds, seed), Seq.empty)
+    val eRows = stagingRowsHint.getOrElse(e0.count())
+    if (!collectStats)
+      LocalGraph.collect(e0, eRows, LocalGraph.EdgeCap, undirected = true) match {
+        case Some(g) => return (misLocalState(edges.sparkSession, g, rounds, seed), Seq.empty)
+        case None =>
+      }
     // the coreness staging/round recipe, whole: ONE shuffle stages the
     // doubled edge list hash(u)-partitioned (dedup exchange-free on top),
     // and the shrinking active-edge table stays PERSISTED — never
@@ -359,7 +319,6 @@ object Mis {
     // sel/closed/active ARE checkpointed: each round's aEdges plan wraps
     // the previous cached table once plus two broadcast anti-joins.
     // sf1: 1.76 GB -> ~30 MB total shuffle for identical output.
-    val eRows = eRows0
     val parts = GraphAnalytics.volumeParts(edges.sparkSession, 2 * eRows)
     val persisted = scala.collection.mutable.ListBuffer.empty[DataFrame]
     def pin(df: DataFrame, rowsBound: Long): DataFrame = {

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.model.TpchGraph
-import graft.operators.{Betweenness, DataFramePregel, GraphAnalytics}
+import graft.operators.{Betweenness, DataFramePregel, GraphAnalytics, LocalGraph}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -1027,21 +1027,21 @@ object AnalyticsQueries {
     val approx = GraphAnalytics.hyperAnf(e, AnfRounds)
     // the exact side is oracle-comparison-only and fixture-sized BY
     // CONTRACT (ring-sized reach sets); under the cap the bounded
-    // closure is a driver BFS — set semantics, value-identical to the
-    // distributed per-round distinct/count loop it replaces (which paid
-    // ~3 jobs + an eager checkpoint per round on metadata-sized frames)
-    val exact: Seq[(Int, Long)] =
-      if (e.count() <= AnfExactLocalCap) {
-        val (out, vids) = collectDirectedAdjacency(e)
+    // closure is a driver BFS over the [[LocalGraph]] — set semantics,
+    // value-identical to the distributed per-round distinct/count loop
+    // (which pays ~3 jobs + an eager checkpoint per round on
+    // metadata-sized frames)
+    val exact: Seq[(Int, Long)] = localFixture(e) match {
+      case Some(g) =>
         val counts = new Array[Long](AnfRounds + 1)
-        vids.indices.foreach { a =>
+        (0 until g.numVertices).foreach { a =>
           val reach = new java.util.HashSet[Int]()
           reach.add(a)
           var frontier = List(a)
           counts(0) += 1
           (1 to AnfRounds).foreach { t =>
             val next = scala.collection.mutable.ListBuffer.empty[Int]
-            frontier.foreach(v => out(v).foreach { w =>
+            frontier.foreach(v => g.foreachNbr(v) { w =>
               if (reach.add(w)) next += w
             })
             frontier = next.toList
@@ -1049,7 +1049,7 @@ object AnalyticsQueries {
           }
         }
         (0 to AnfRounds).map(t => (t, counts(t)))
-      } else {
+      case None =>
         val verts = e.select(col("src").as("a")).unionAll(e.select(col("dst").as("a"))).distinct()
         var pairs = verts.select(col("a"), col("a").as("b")).localCheckpoint(true)
         val acc = scala.collection.mutable.ListBuffer((0, pairs.count()))
@@ -1060,7 +1060,7 @@ object AnalyticsQueries {
           acc += ((t, pairs.count()))
         }
         acc.toSeq
-      }
+    }
     approx
       // micro-units: the decimal total is exact, so ×1e6 → BIGINT is the
       // engine-portable all-integer form (the fixed-point PageRank trick)
@@ -1069,35 +1069,11 @@ object AnalyticsQueries {
       .join(exact.toDF("t", "exact_pairs"), Seq("t"))
   }
 
-  /** Edge-row cap for the driver-local exact-closure sides of the ANF
-    * fixture queries (the jpColoring localization class): the fixture's
-    * reach sets are ring-sized by construction, so the closure is
-    * metadata-sized driver work; past the cap the distributed loops run
-    * unchanged. */
-  private val AnfExactLocalCap = 131072L
-
-  /** Collect a small directed edge table to (out-adjacency, vid-per-index).
-    * Wait-free BFS fodder for the exact closure replays. */
-  private def collectDirectedAdjacency(e: DataFrame): (Array[Array[Int]], Array[Long]) = {
-    val rows = e.collect()
-    val idx = scala.collection.mutable.LinkedHashMap.empty[Long, Int]
-    rows.foreach { r =>
-      idx.getOrElseUpdate(r.getLong(0), idx.size)
-      idx.getOrElseUpdate(r.getLong(1), idx.size)
-    }
-    val vids = new Array[Long](idx.size)
-    idx.foreach { case (v, i) => vids(i) = v }
-    val deg = new Array[Int](idx.size)
-    rows.foreach(r => deg(idx(r.getLong(0))) += 1)
-    val out = Array.tabulate(idx.size)(i => new Array[Int](deg(i)))
-    val pos = new Array[Int](idx.size)
-    rows.foreach { r =>
-      val a = idx(r.getLong(0))
-      out(a)(pos(a)) = idx(r.getLong(1))
-      pos(a) += 1
-    }
-    (out, vids)
-  }
+  /** The fixture's directed edges as a [[LocalGraph]] under the
+    * wide-state cap (per-source closures), for the exact-closure sides;
+    * past it the distributed loops run. */
+  private def localFixture(e: DataFrame): Option[LocalGraph] =
+    LocalGraph.collect(e, e.count(), LocalGraph.WideStateCap, undirected = false)
 
   /** Effective diameter (90%, linearly interpolated) and mean distance
     * from the HyperANF curve — the graph-shape statistics the
@@ -1145,31 +1121,29 @@ object AnalyticsQueries {
     // [[hyperAnf]]'s: min-distance BFS ≡ the per-round min-t fold, and
     // HarmonicScale = LCM(1..10) keeps every 2520 div t term exact in
     // both formulations
-    val exact: DataFrame =
-      if (e.count() <= AnfExactLocalCap) {
-        val (out, vids) = collectDirectedAdjacency(e)
-        val rows = vids.indices.map { a =>
+    val exact: DataFrame = localFixture(e) match {
+      case Some(g) =>
+        val rows = (0 until g.numVertices).map { a =>
           val seen = new java.util.HashSet[Int]()
           seen.add(a)
           var frontier = List(a)
           var h = 0L
           (1 to AnfRounds).foreach { t =>
             val next = scala.collection.mutable.ListBuffer.empty[Int]
-            frontier.foreach(v => out(v).foreach { w =>
+            frontier.foreach(v => g.foreachNbr(v) { w =>
               if (seen.add(w)) next += w
             })
             h += (GraphAnalytics.HarmonicScale / t) * next.size
             frontier = next.toList
           }
-          org.apache.spark.sql.Row(vids(a), h)
+          org.apache.spark.sql.Row(g.vid(a), h)
         }.filter(_.getLong(1) != 0L)
         org.apache.spark.sql.graft.DatasetBridge.localRelation(s,
           org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("vid",
-              org.apache.spark.sql.types.LongType),
+            org.apache.spark.sql.types.StructField("vid", g.vidType),
             org.apache.spark.sql.types.StructField("exact_h_scaled",
               org.apache.spark.sql.types.LongType))), rows)
-      } else {
+      case None =>
         var pairs = e.select(col("src").as("a")).unionAll(e.select(col("dst").as("a")))
           .distinct().select(col("a"), col("a").as("b"), lit(0).as("t"))
           .localCheckpoint(true)
@@ -1183,7 +1157,7 @@ object AnalyticsQueries {
           .select(col("a").as("vid"), col("t"))
           .groupBy("vid")
           .agg(sum(expr(s"${GraphAnalytics.HarmonicScale} div t")).cast("long").as("exact_h_scaled"))
-      }
+    }
     approx.join(exact, Seq("vid"), "left")
       .select(col("vid").as("s_suppkey"), col("h_scaled").as("h_scaled_micro"),
         coalesce(col("exact_h_scaled"), lit(0L)).as("exact_h_scaled"))

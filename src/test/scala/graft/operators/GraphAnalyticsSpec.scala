@@ -531,7 +531,7 @@ class GraphAnalyticsSpec extends SparkTestBase {
           deltas.map(_.collect()
             .map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2))).toSet))
       }
-      val (e0l, dl) = run(GraphAnalytics.HllLocalStateCap)
+      val (e0l, dl) = run(LocalGraph.WideStateCap)
       val (e0d, dd) = run(0L)
       assert(e0l == e0d, s"est0 diverged on $g")
       assert(dl == dd, s"deltas diverged on $g")

@@ -1,9 +1,9 @@
 #!/usr/bin/env bash
-# Plain-java isolated per-query probe (the family_probe.sh methodology —
-# one fresh JVM per query so cumulative session pressure can't
-# contaminate the measurement — minus the ~30 s sbt launch each query
-# paid; the classpath comes from a one-time `sbt export Runtime/fullClasspath`
-# snapshot, same classes dir sbt runMain uses).
+# Plain-java isolated per-query probe: one fresh JVM per query, so
+# cumulative session pressure can't contaminate the measurement, and no
+# ~30 s sbt launch per query. Works at any SF dir (sf0.1 through sf10).
+# The classpath comes from a one-time `sbt export Runtime/fullClasspath`
+# snapshot, the same classes dir `sbt runMain` uses.
 #
 #   tools/java_probe.sh sf_dir out.jsonl q1 q2 ...
 # env: SPARK_DRIVER_MEM (default 17g, the r11+ probe heap),

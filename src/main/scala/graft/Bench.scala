@@ -110,13 +110,11 @@ object Bench {
         // on g_biased_walks) clustered in exactly the localCheckpoint-heavy
         // family that runs late in the alphabetical order. Results are
         // discarded after count(), so nothing recomputes from these RDDs.
-        // JVM-lifetime memoized frames (localCheckpointed, lineage
-        // truncated) would throw 'Checkpoint block not found' if reused
-        // after their blocks are dropped — invalidating the memo with the
-        // blocks downgrades that to a re-encode on next use.
+        // StageCache serves a cached localCheckpointed frame only while
+        // its blocks are persisted, so the sweep costs a re-encode on
+        // next use, never a 'Checkpoint block not found'.
         spark.sparkContext.getPersistentRDDs.values
           .foreach(_.unpersist(blocking = false))
-        graft.queries.PipelineQueries.invalidateCheckpointedMemos()
         // untimed GC hint: interpreted-HOF-heavy queries allocate hard,
         // and in a single-JVM 170+-query suite the collector otherwise
         // runs INSIDE later queries' timed reps (measured: dd_setsim_join

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.cache.StageCache
 import graft.model.PropertyGraph
 import org.apache.spark.graphx.{Edge, Graph}
 import org.apache.spark.rdd.RDD
@@ -76,14 +77,9 @@ object GraphAnalytics {
     * [[maxBroadcastRows]], routing it to the shuffle-join fallback. On a
     * production 64 GB executor the static 50M hard-cap ceiling binds
     * again. */
-  private[graft] def maxBroadcastVerticesDyn: Long = {
-    val spark = org.apache.spark.sql.SparkSession.active
-    // SPARK_GRAFT_MAX_BCAST_V: probe-only override so the shuffle
-    // fallbacks can be stage-profiled at bench SFs without a 10× corpus
-    // (the guard normally crosses only past ~19M vertices on this heap)
-    sys.env.get("SPARK_GRAFT_MAX_BCAST_V").map(_.toLong).getOrElse(
-      math.min(MaxBroadcastVertices, perExecutorHeapBytes(spark) / 900))
-  }
+  private[graft] def maxBroadcastVerticesDyn: Long =
+    math.min(MaxBroadcastVertices,
+      perExecutorHeapBytes(org.apache.spark.sql.SparkSession.active) / 900)
 
   /** Heap of ONE executor — the budget for anything replicated
     * per-executor (broadcast variables), as opposed to
@@ -498,39 +494,6 @@ object GraphAnalytics {
     val pairs = l.join(r, Seq("g")).where(col("item_a") < col("item_b"))
       .select(col("item_a"), col("item_b"))
     if (distinctPairs) pairs.distinct() else pairs
-  }
-
-  /** RDD-free static PageRank — GraphX-semantics (rank₀ = 1.0, rankᵢ =
-    * resetProb + (1−resetProb)·Σ in-contributions, dangling mass not
-    * redistributed), as a DataFrame join-agg loop: per round one join of
-    * the edge list against (ranks ⋈ out-degrees) and one groupBy-sum,
-    * with lineage truncated every 3 rounds. The scale path when GraphX's
-    * RDD lineage/serialization becomes the ceiling. */
-  def pageRankDF(edges: DataFrame, numIter: Int = 10, resetProb: Double = 0.15,
-      srcCol: String = "src", dstCol: String = "dst"): DataFrame = {
-    // heap-budgeted pins (r14): E-row checkpoints demote to serialized
-    // DISK_ONLY past pinRowCeiling instead of squatting deserialized in
-    // the storage pool (the r11/r12 OOM class)
-    val (e, _) = pinTwoPhase(
-      edges.select(col(srcCol).as("src"), col(dstCol).as("dst")))
-    val deg = e.groupBy("src").agg(count(lit(1)).as("deg"))
-    // the degree join is loop-invariant — pay it once, not once per round
-    val (ed, _) = pinTwoPhase(
-      e.join(deg, "src").select(col("src"), col("dst"), col("deg")))
-    val verts = e.select(col("src").as("vid"))
-      .unionAll(e.select(col("dst").as("vid"))).distinct().localCheckpoint(true)
-    var ranks = verts.withColumn("rank", lit(1.0))
-    val gen = new GenerationPin
-    (1 to numIter).foreach { i =>
-      val contribs = ed.join(ranks, ed("src") === ranks("vid"))
-        .select(col("dst").as("vid"), (col("rank") / col("deg")).as("c"))
-        .groupBy("vid").agg(sum(col("c")).as("in_sum"))
-      ranks = verts.join(contribs, Seq("vid"), "left")
-        .select(col("vid"),
-          (lit(resetProb) + lit(1 - resetProb) * coalesce(col("in_sum"), lit(0.0))).as("rank"))
-      if (i % 3 == 0) ranks = gen.next(ranks)
-    }
-    ranks
   }
 
   /** Synchronous label-propagation community detection (Raghavan et al.
@@ -1114,11 +1077,12 @@ object GraphAnalytics {
         (col("two_m") * col("two_m")).cast("double"), 6).as("modularity"))
   }
 
-  /** PageRank in FIXED-POINT integer arithmetic — identical join-agg loop
-    * to [[pageRankDF]], but ranks live in micro-units (rank × 10⁶) as
-    * BIGINT, contributions use integral division, and damping is the
-    * exact rational (10⁶ − resetMicro)/10⁶ applied as multiply-then-
-    * integer-divide. Every operation is integer → the result is
+  /** PageRank in FIXED-POINT integer arithmetic — GraphX semantics
+    * (rank₀ = 1, rankᵢ = resetProb + (1−resetProb)·Σ in-contributions,
+    * dangling mass not redistributed) as a DataFrame join-agg loop, with
+    * ranks in micro-units (rank × 10⁶) as BIGINT, contributions in
+    * integral division, and damping as the exact rational
+    * (10⁶ − resetMicro)/10⁶ applied as multiply-then-integer-divide. Every operation is integer → the result is
     * bit-reproducible across partitionings, engines, and reruns, which
     * no floating-point formulation achieves (even per-round round(x, s)
     * quantization diverges cross-engine: thousands of summed roundings
@@ -2098,21 +2062,6 @@ object GraphAnalytics {
 
   // ----------------------------------------------------- walk-family staging
 
-  /** Per-session registry of staged walk adjacencies, keyed on the
-    * canonicalized edge-plan hash + column/direction config. FILES, not
-    * blocks: Bench's between-query unpersist sweep cannot invalidate a
-    * staged dir, so the four walk-family queries (random walks, biased
-    * walks, skip-gram, negative samples) — which all stage the SAME
-    * doubled edge list from the same input — share one copy per JVM
-    * (the r14 verdict #3 finding: the private per-query doubled-edge
-    * checkpoint was 150 s of g_negative_samples' 229 s sf10 wall, paid
-    * again by every walk query). Same JVM-lifetime staging class as the
-    * bucketed-table stage in RelationalQueries (Bench's documented
-    * "bucketed staging, checkpoint reuse" steady-state convention). */
-  private val walkStages =
-    new java.util.WeakHashMap[SparkSession, scala.collection.concurrent.TrieMap[
-      (Int, String, String, Boolean), (String, org.apache.spark.sql.types.StructType)]]
-
   /** Frontier sizes up to this many rows round-trip through the driver
     * each step (collect → LocalRelation): the step's frontier broadcast
     * then builds driver-side with no extra job, and the frontier's vids
@@ -2129,19 +2078,18 @@ object GraphAnalytics {
   private[graft] val WalkProbePruneCap = 2048
 
   /** Staging root for the walk adjacency: the `spark.graft.walkStageDir`
-    * conf, then the `SPARK_GRAFT_STAGE_DIR` env (honored like SF_DIR),
-    * then the JVM temp dir. On a real cluster the root MUST be a
+    * conf, else the JVM temp dir. On a real cluster the root MUST be a
     * shared filesystem (hdfs://, s3a://, NFS) — executors commit their
     * task files to this path, and a driver-local default would leave the
     * driver-side read seeing a partial table (r15 verdict #1); local
     * mode shares one FS, so the temp-dir default is safe there. */
   private[graft] def walkStageRoot(spark: SparkSession): String =
     spark.conf.getOption("spark.graft.walkStageDir")
-      .orElse(sys.env.get("SPARK_GRAFT_STAGE_DIR"))
       .getOrElse(System.getProperty("java.io.tmpdir"))
 
-  /** Stage the doubled (u, v) walk adjacency ONCE per JVM per edge input
-    * as a sorted columnar temp table: u-sorted within map partitions
+  /** Stage the doubled (u, v) walk adjacency ONCE per session per edge
+    * input fingerprint ([[graft.cache.StageCache]]) as a sorted columnar
+    * temp table: u-sorted within map partitions
     * (map-only — no exchange) with small row groups, so a pushed
     * frontier-In filter prunes at the parquet zone-map level and a walk
     * step reads O(frontier · deg) rows instead of re-scanning the full
@@ -2149,25 +2097,22 @@ object GraphAnalytics {
     * sf10 for g_biased_walks on 0.18 MB shuffle). The 100 TB shape: one
     * E-linear staging write amortized over steps × queries, then every
     * probe is zone-map-pruned columnar I/O — the IVFADC cell-partitioned
-    * probe recipe applied to adjacency. The staging dir lives under
-    * [[walkStageRoot]] and is written/removed through the Hadoop FS API,
-    * so a cluster-shared root (conf/env) round-trips executor-committed
-    * files exactly like the local default does. */
+    * probe recipe applied to adjacency. FILES, not blocks, so an
+    * unpersist sweep cannot invalidate the stage, and the four
+    * walk-family queries (random walks, biased walks, skip-gram, negative
+    * samples), which all stage the SAME doubled edge list from the same
+    * input, share one copy (the r14 verdict #3 finding: a private
+    * per-query doubled-edge checkpoint was 150 s of g_negative_samples'
+    * 229 s sf10 wall). The staging dir lives under [[walkStageRoot]] and
+    * is written/removed through the Hadoop FS API, so a cluster-shared
+    * root round-trips executor-committed files exactly like the local
+    * default does. */
   private[graft] def stageWalkAdjacency(edges: DataFrame, srcCol: String,
       dstCol: String, undirected: Boolean)
       : (String, org.apache.spark.sql.types.StructType) = {
     val spark = edges.sparkSession
-    val perSession = walkStages.synchronized {
-      var m = walkStages.get(spark)
-      if (m == null) {
-        m = scala.collection.concurrent.TrieMap
-          .empty[(Int, String, String, Boolean), (String, org.apache.spark.sql.types.StructType)]
-        walkStages.put(spark, m)
-      }
-      m
-    }
-    val key = (edges.queryExecution.analyzed.semanticHash(), srcCol, dstCol, undirected)
-    perSession.getOrElseUpdate(key, {
+    val params = (srcCol, dstCol, undirected)
+    StageCache.getOrCompute(spark, "walkAdjacency", params, edges) {
       val e0 = edges.select(col(srcCol).as("u"), col(dstCol).as("v"))
         .where(col("u") =!= col("v"))
       // deliberately NOT deduplicated (the long-standing walk-staging
@@ -2176,20 +2121,13 @@ object GraphAnalytics {
       // distinct would be this family's only full edge exchange
       val doubled =
         if (undirected) e0.unionAll(e0.select(col("v").as("u"), col("u").as("v"))) else e0
-      val dir = s"${walkStageRoot(spark).stripSuffix("/")}/graft_walk_adj_" +
-        java.util.UUID.randomUUID().toString
-      System.err.println(s"[walkstage] staging $key -> $dir")
+      val dir = StageCache.stageDir(spark, walkStageRoot(spark), "graft_walk_adj")
+      System.err.println(s"[walkstage] staging $params -> $dir")
       doubled.sortWithinPartitions("u")
         .write.mode("overwrite").option("parquet.block.size", 4 * 1024 * 1024)
         .parquet(dir)
-      val hPath = new org.apache.hadoop.fs.Path(dir)
-      val hConf = spark.sessionState.newHadoopConf()
-      val hook = new Thread(() =>
-        try hPath.getFileSystem(hConf).delete(hPath, true)
-        catch { case _: Throwable => () })
-      Runtime.getRuntime.addShutdownHook(hook)
       (dir, doubled.schema)
-    })
+    }
   }
 
   /** Run `body` with `spark.sql.parquet.pushdown.inFilterThreshold`
@@ -2371,6 +2309,7 @@ object GraphAnalytics {
     val wIn = org.apache.spark.sql.expressions.Window
       .partitionBy("pid").orderBy("vid")
       .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
+    // global window, bounded input: one row per range partition (cumPartitions)
     val wOff = org.apache.spark.sql.expressions.Window.orderBy("pid")
       .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
     val offsets = parted.groupBy("pid").agg(sum(col("w")).as("psum"))
@@ -3356,6 +3295,7 @@ object GraphAnalytics {
     val spark = edges.sparkSession
     val zeroPad = (deltas.size + 1 to rounds).map(t =>
       spark.range(1).select(lit(t).as("t"), lit(0).cast(dec).as("d")))
+    // global window, bounded input: one row per round (rounds + 1 rows)
     val w = org.apache.spark.sql.expressions.Window.orderBy("t")
       .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
     (Seq(nf0) ++ deltaRows ++ zeroPad).reduce(_ unionAll _)

@@ -397,6 +397,7 @@ object TextAnalysis {
     // hash-compares differently from 0.0 across engines (caught at sf0.1,
     // where long docs push ln(u)/w inside the 6dp rounding radius of 0)
     val key = round(log(u) / weight, 6) + lit(0.0)
+    // global window, bounded input: it ranks the n rows left by limit(n)
     val w = Window.orderBy(col("sample_key").desc, col(idCol))
     df.where(weight > 0)
       .withColumn("sample_key", key)
@@ -478,6 +479,7 @@ object TextAnalysis {
     val keyed = scored.withColumn("sample_key",
       (col("logw") + round(-log(-log(u)), 6).cast("decimal(18,6)"))
         .cast("double") + lit(0.0))
+    // global window, bounded input: it ranks the topK rows left by limit(topK)
     val w = Window.orderBy(col("sample_key").desc, col("doc_id"))
     keyed.orderBy(col("sample_key").desc, col("doc_id")).limit(topK)
       .select(col("doc_id"), col("n_feats"),

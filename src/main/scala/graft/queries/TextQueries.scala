@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.Tables
+import graft.cache.StageCache
 import graft.operators.{Dedup, TextAnalysis => TA}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -328,16 +329,17 @@ object TextQueries {
   private val DsirSeed = 17L
 
   // --- BPE tokenizer training (SURVEY §2 row 33l) ---------------------
-  // Trained once per corpus dir (the offline-training shape, like
-  // PipelineQueries.ivfModels); the three queries share the model and the
-  // oracle re-derives every training round from the parquet post-hoc.
+  // Trained once per corpus into StageCache (the offline-training shape,
+  // like PipelineQueries' ANN models); the three queries share the model
+  // and the oracle re-derives every training round from the parquet
+  // post-hoc.
   private val BpeNumMerges = 32
   private val BpeTopTokens = 50
-  private val bpeModels =
-    scala.collection.concurrent.TrieMap.empty[String, graft.operators.Bpe.BpeModel]
-  private def bpeModel(s: SparkSession, dir: String): graft.operators.Bpe.BpeModel =
-    bpeModels.getOrElseUpdate(dir,
-      graft.operators.Bpe.train(Tables(s, dir, "documents"), "text", BpeNumMerges))
+  private def bpeModel(s: SparkSession, dir: String): graft.operators.Bpe.BpeModel = {
+    val docs = Tables(s, dir, "documents")
+    StageCache.getOrCompute(s, "bpe", BpeNumMerges, docs)(
+      graft.operators.Bpe.train(docs, "text", BpeNumMerges))
+  }
 
   def bpeMerges(s: SparkSession, dir: String): DataFrame =
     graft.operators.Bpe.mergeTable(s, bpeModel(s, dir))
@@ -818,19 +820,17 @@ object TextQueries {
        |FROM documents d LEFT JOIN per p USING (doc_id)""".stripMargin
   }
 
-  /** Static oracles plus — once a BPE model has been trained for exactly
-    * one corpus this session (the Verify shape) — the three BPE replays.
+  /** Static oracles plus — once [[StageCache.only]] finds exactly one
+    * trained BPE model (the Verify shape) — the three BPE replays.
     * Several corpora would make the right model ambiguous, so the keys
     * are withheld (driver falls back to rows-only) rather than risk
     * replaying the wrong merges. */
   def oracles: Map[String, String] =
-    if (bpeModels.size == 1) {
-      val m = bpeModels.values.head
-      staticOracles ++ Map(
+    staticOracles ++ StageCache.only[graft.operators.Bpe.BpeModel]("bpe", BpeNumMerges)
+      .toSeq.flatMap(m => Seq(
         "tx_bpe_merges" -> bpeMergesOracle(m),
         "tx_bpe_tokens" -> bpeTokensOracle(m),
-        "tx_bpe_doclen" -> bpeDocLenOracle(m))
-    } else staticOracles
+        "tx_bpe_doclen" -> bpeDocLenOracle(m)))
 
   private val staticOracles: Map[String, String] = Map(
     "tx_dsir" -> dsirOracle,

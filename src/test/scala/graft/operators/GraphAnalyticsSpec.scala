@@ -265,14 +265,7 @@ class GraphAnalyticsSpec extends SparkTestBase {
     val gx = GraphAnalytics.pageRank(g, numIter = 10)
       .as[(String, Long, Double)].collect().map(t => t._2 -> t._3).toMap
     val (edges, _) = GraphAnalytics.unifiedEdges(g)
-    val df = GraphAnalytics.pageRankDF(edges, numIter = 10)
-      .as[(Long, Double)].collect()
-      .map { case (vid, r) => (vid & ((1L << 44) - 1)) -> r }.toMap
-    assert(gx.keySet == df.keySet)
-    gx.foreach { case (vid, r) =>
-      assert(math.abs(r - df(vid)) < 1e-9, s"vertex $vid: graphx=$r df=${df(vid)}")
-    }
-    // the fixed-point (oracle-able) variant stays within micro-unit
+    // the fixed-point (oracle-able) DataFrame loop stays within micro-unit
     // floor-bias noise (≤ deg·1e-6 per round)
     val qu = GraphAnalytics.pageRankQuantizedDF(edges, numIter = 10)
       .select("vid", "rank").as[(Long, Double)].collect()

@@ -175,8 +175,8 @@ class WalksTfidfSpec extends SparkTestBase {
     val root = java.nio.file.Files.createTempDirectory("graft_stage_root").toString
     spark.conf.set("spark.graft.walkStageDir", root)
     try {
-      // a fresh edge input (distinct semanticHash) so the per-JVM memo
-      // can't hand back a dir staged before the conf was set
+      // a fresh edge input (distinct semanticHash) so StageCache can't
+      // hand back a dir staged before the conf was set
       val edges = Seq((101L, 102L), (102L, 103L), (103L, 101L)).toDF("src", "dst")
       val (dir, schema) = GraphAnalytics.stageWalkAdjacency(edges, "src", "dst",
         undirected = true)

@@ -268,10 +268,18 @@ object PropertyGraphIO {
     require(known(generation),
       s"generation $generation of $label is not on disk (have ${known.toSeq.sorted
         .mkString(", ")}) — vacuumed or never written")
-    // the flat snapshot's part files live beside the gen-N dirs, so the
-    // generation-0 read globs only its own files
-    if (generation == 0L) spark.read.parquet(s"$root/nodes/$label/*.parquet")
+    if (generation == 0L) spark.read.parquet(flatParts(spark, s"$root/nodes/$label"): _*)
     else spark.read.parquet(s"$root/nodes/$label/gen-$generation")
+  }
+
+  /** The flat snapshot's part files, which live beside the gen-N dirs.
+    * The glob is expanded on the driver: handed to the reader as one
+    * path, Spark's sink-metadata probe takes it literally and logs a
+    * FileNotFoundException WARN on every read. */
+  private def flatParts(spark: SparkSession, tableRoot: String): Seq[String] = {
+    val glob = new org.apache.hadoop.fs.Path(tableRoot, "*.parquet")
+    val fs = glob.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    Option(fs.globStatus(glob)).toSeq.flatten.map(_.getPath.toString).sorted
   }
 
   /** Time-travel read of a relationship table AS OF `generation` — the
@@ -282,7 +290,7 @@ object PropertyGraphIO {
     require(known(generation),
       s"generation $generation of $patternKey is not on disk (have ${known.toSeq.sorted
         .mkString(", ")}) — vacuumed or never written")
-    if (generation == 0L) spark.read.parquet(s"$root/rels/$patternKey/*.parquet")
+    if (generation == 0L) spark.read.parquet(flatParts(spark, s"$root/rels/$patternKey"): _*)
     else spark.read.parquet(s"$root/rels/$patternKey/gen-$generation")
   }
 

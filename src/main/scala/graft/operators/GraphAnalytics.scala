@@ -171,28 +171,6 @@ object GraphAnalytics {
   private[graft] val DefaultPinLevel: org.apache.spark.storage.StorageLevel =
     org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
 
-  /** Rolling eager-checkpoint pin for round loops: `next(df)` checkpoints
-    * eagerly and frees the PREVIOUS generation's blocks — the successor's
-    * eager materialization has just consumed them, so from that moment
-    * they are dead weight in the storage pool. Without this, an
-    * every-third-round checkpoint cadence accumulates ⌈rounds/3⌉
-    * generations of deserialized V-rows for the query's LIFETIME —
-    * multiple GB at sf10, precisely the storage-pool margin that decides
-    * whether 32 concurrent sort-merge tasks in the shuffle-fallback path
-    * can still get execution memory (the g_pagerank_weighted sf10 task
-    * OOM, r12). Plan-invariant: unpersisting a consumed generation
-    * changes no semantics, only block-manager residency. */
-  private[graft] final class GenerationPin {
-    private var last: DataFrame = _
-    def next(df: DataFrame): DataFrame = {
-      val cp = df.localCheckpoint(true)
-      if (last != null)
-        org.apache.spark.sql.graft.DatasetBridge.unpersistCheckpoint(last)
-      last = cp
-      cp
-    }
-  }
-
   /** [[coreness]] switches from dense to frontier rounds once the
     * changed set falls below V / this factor: above it the candidate
     * neighborhoods cover ~everything and the frontier joins are pure
@@ -1077,44 +1055,6 @@ object GraphAnalytics {
         (col("two_m") * col("two_m")).cast("double"), 6).as("modularity"))
   }
 
-  /** PageRank in FIXED-POINT integer arithmetic — GraphX semantics
-    * (rank₀ = 1, rankᵢ = resetProb + (1−resetProb)·Σ in-contributions,
-    * dangling mass not redistributed) as a DataFrame join-agg loop, with
-    * ranks in micro-units (rank × 10⁶) as BIGINT, contributions in
-    * integral division, and damping as the exact rational
-    * (10⁶ − resetMicro)/10⁶ applied as multiply-then-integer-divide. Every operation is integer → the result is
-    * bit-reproducible across partitionings, engines, and reruns, which
-    * no floating-point formulation achieves (even per-round round(x, s)
-    * quantization diverges cross-engine: thousands of summed roundings
-    * per hub vertex amplify the ulp gap between DuckDB's multiply-divide
-    * round() and Spark's BigDecimal rounding — measured at 1e-6..1e-5 on
-    * hub ranks). Deviation from true PageRank is ≤1e-6·deg per vertex
-    * per round (floor bias) — irrelevant for ranking, and the fixed
-    * round count replays as chained CTEs in the DuckDB oracle.
-    * Headroom: the in-sum accumulator and the damping product run in
-    * DECIMAL(38,0) (exact, no 64-bit ceiling — a hub can absorb the
-    * whole graph's rank mass at any vertex count); only the final
-    * PER-VERTEX rank must fit BIGINT micro-units, i.e. ≤9.2×10¹² units
-    * of rank mass on a single vertex — more vertices than a 100 TB graph
-    * has. DuckDB sums integers in HUGEINT, so the oracle needs no
-    * change: both engines compute the identical exact integers. */
-  /** @param broadcastRanks physical strategy switch, same trade as
-    * [[labelPropagationDF]]'s `broadcastLabels`: `true` (default) pins
-    * the degree-joined edge list hash-partitioned by `dst` (persist —
-    * a checkpointed LogicalRDD drops outputPartitioning) and broadcasts
-    * the vertex-sized rank table each round, so the per-round
-    * groupBy(dst) aggregation runs with NO exchange. The round-4
-    * version of this experiment regressed because WITHOUT the explicit
-    * broadcast() hint the rank join degraded to a shuffle against the
-    * cached shape; the hint closes that hole. `false`: ranks have
-    * outgrown broadcast — unpinned edges, per-round agg exchange,
-    * map-side combine defends the wire. Identical integers either way
-    * (fixed-point arithmetic is partitioning-independent).
-    * As in [[labelPropagationDF]], `true` is overridden past
-    * [[MaxBroadcastVertices]] vertices: the explicit hint ignores
-    * autoBroadcastJoinThreshold and Spark hard-fails 8 GiB+ broadcasts,
-    * so the operator counts the (already-checkpointed) vertex table and
-    * routes to the shuffle plan itself. */
   /** HITS hubs-and-authorities (Kleinberg 1999, JACM 46(5)) in the same
     * bit-reproducible fixed-point integer arithmetic as
     * [[pageRankQuantizedDF]]: per round, hub(u) = Σ authority(v) over
@@ -1127,133 +1067,22 @@ object GraphAnalytics {
     * hub mass; no in-edges → no authority mass) — the inner join IS the
     * +0 contribution, so the loop stays sparse.
     *
-    * Shuffle shape per half-update: ZERO exchanges under the broadcast
-    * guard. The edge list persists TWICE, hash-partitioned by each
-    * half's aggregation key — eBySrc for the hub sums (groupBy src),
-    * eByDst for the authority sums (groupBy dst) — the score join is a
-    * guarded broadcast, so the join preserves the cached partitioning
-    * and each half's groupBy runs in place (the pageRankQuantizedDF
-    * recipe, applied per direction; the single-cache form still paid a
-    * combined-pair exchange on every authority half). Two edge caches
-    * is the declared price: rounds × per-round exchanges is the term
-    * that grows at scale, the staging exchange amortizes over rounds.
-    * Past [[MaxBroadcastVertices]] the operator falls back to unpinned
-    * shuffle joins whose map-side partial combine defends the wire. The
-    * normalizer is a one-row aggregate broadcast back over the scores
-    * (BroadcastNestedLoopJoin of 1 row — constant cost at any scale).
-    * Mass accounting: the EDGE-level in-sums run in plain BIGINT — a
-    * per-vertex raw sum is bounded by the side's TOTAL L1 mass
-    * Micro·n (each score is ≤ the whole normalized vector), so long
-    * overflow needs n > 9.2·10¹² vertices; switching these 2E-row
-    * sums off DECIMAL(38,0) removed a measured ~10 s of BigDecimal
-    * accumulation at sf1 (13.6M edges × 10 half-updates). DECIMAL
-    * survives only where it is load-bearing: the normalizer total
-    * Σ_u raw(u) ≤ Micro·n·max_deg CAN exceed BIGINT, and the
-    * rescaling product raw·Micro·n always would — both are V-row
-    * (not E-row) computations, so the decimal cost is negligible.
-    * DuckDB sums BIGINT into HUGEINT natively, so the oracle's
-    * integers are unchanged. */
+    * Runs on [[RankLoop]] as two lanes over one vertex set: the hub
+    * half over a `hash(src)` edge cache, the authority half over the
+    * `hash(dst)` one, so under the broadcast guard neither half runs an
+    * exchange. Mass accounting: the E-row in-sums run in BIGINT (a raw
+    * sum is bounded by the side's total L1 mass Micro·n); the normalizer
+    * total (≤ Micro·n·max_deg) and the rescaling product raw·Micro·n can
+    * pass 2⁶³, so both run in DECIMAL(38,0) over V rows. DuckDB sums
+    * BIGINT into HUGEINT natively, so the oracle's integers are
+    * unchanged. */
   def hitsDF(edges: DataFrame, numIter: Int = 5,
-      srcCol: String = "src", dstCol: String = "dst"): DataFrame = {
-    val Micro = 1000000L
-    // two-phase staging pin (demotes past [[pinRowCeiling]] — the r11
-    // CC recipe applied to the whole round-loop family after the sf10
-    // pagerank probe)
-    val (e, eRows) = pinTwoPhase(
-      edges.select(col(srcCol).as("src"), col(dstCol).as("dst")))
-    // vertex set without the (src ∪ dst) distinct-over-2E exchange (the
-    // pageRankQuantizedDF r12 recipe): the src half is one E-partial
-    // distinct whose count gates the cache builds (|src set| ≤ V, so it
-    // is a sound precondition for the broadcast guard); the dst half
-    // then rides eByDst's own hash(dst) partitioning exchange-free, and
-    // the dst-only remainder comes off a guarded broadcast anti-join —
-    // the two legs are disjoint and internally distinct, no final
-    // distinct at all. Past the gate the old union-distinct stands.
-    val srcSet = e.select(col("src").as("vid")).dropDuplicates("vid")
-      .localCheckpoint(true)
-    val srcFits = srcSet.count() <= maxBroadcastVerticesDyn
-    // persist (NOT localCheckpoint): a checkpointed LogicalRDD forgets
-    // outputPartitioning, and hash(agg key) is the whole point of the
-    // two caches (see the shuffle-shape scaladoc above); level
-    // memory-budgeted by the exact edge count — at 10×-past-design
-    // volume BOTH caches going deserialized-resident is exactly the
-    // storage-pool squeeze the sf10 probe measured, so past the
-    // ceiling they hold serialized disk blocks instead
-    val eBySrcStaged = if (!srcFits) e else e.repartition(col("src"))
-      .persist(pinLevel(edges.sparkSession, eRows))
-    val eByDstStaged = if (!srcFits) e else e.repartition(col("dst"))
-      .persist(pinLevel(edges.sparkSession, eRows))
-    val verts = (if (srcFits)
-        srcSet.unionAll(
-          eByDstStaged.select(col("dst").as("vid")).dropDuplicates("vid")
-            .join(broadcast(srcSet.select(col("vid").as("__sv"))),
-              col("vid") === col("__sv"), "left_anti"))
-      else srcSet.unionAll(e.select(col("dst").as("vid"))).distinct())
-      .localCheckpoint(true)
-    val nVerts = verts.count()
-    val scale = Micro * nVerts // target L1 mass per score vector
-    // broadcast the vertex-sized score tables (same plan trade and
-    // MaxBroadcastVertices guard as pageRankQuantizedDF): the edge list
-    // then never shuffles for the joins — each half-update is ONE
-    // map-side-combined agg exchange instead of join+agg exchanges
-    // (measured 29 s -> seconds at sf0.1)
-    val useBroadcast = nVerts <= maxBroadcastVerticesDyn
-    def side(df: DataFrame): DataFrame = if (useBroadcast) broadcast(df) else df
-    // narrow band (src set fits the guard, full vertex set does not —
-    // dst-heavy graph): score joins will not broadcast, a sort-merge
-    // join against the pins would re-exchange edges per half-update;
-    // fall back to the bare staging pin like the !srcFits path
-    val (eBySrc, eByDst) = if (srcFits && !useBroadcast) {
-      eBySrcStaged.unpersist(blocking = false)
-      eByDstStaged.unpersist(blocking = false)
-      (e, e)
-    } else (eBySrcStaged, eByDstStaged)
+      srcCol: String = "src", dstCol: String = "dst"): DataFrame =
+    RankLoop.hits(endpoints(edges, srcCol, dstCol), numIter)
 
-    // normalize a raw BIGINT score column back to total mass `scale`:
-    // each row's quotient truncates identically in Spark's `div` and
-    // DuckDB's `//`, so the normalized integers are engine-exact. The
-    // total and the product are the two places BIGINT can genuinely
-    // overflow (see the mass-accounting scaladoc) — both are V-row
-    // decimal computations here, off the edge-sized hot path. `raw` is
-    // materialized by the caller (the round's one checkpoint per
-    // half-update); the normalization itself stays LAZY — the one-row
-    // broadcast total and the quotient projection pipeline into the
-    // next half-update's broadcast build.
-    def normalized(raw: DataFrame, rawCol: String, outCol: String): DataFrame =
-      raw.crossJoin(broadcast(
-        raw.agg(sum(col(rawCol).cast("decimal(38,0)")).as("__tot"))))
-        .select(col("vid"),
-          expr(s"CAST(CAST($rawCol AS DECIMAL(38,0)) * $scale div __tot AS BIGINT)")
-            .as(outCol))
-
-    var auth = verts.select(col("vid"), lit(Micro).as("a"))
-    var hub: DataFrame = null
-    // rolling generation frees: round i's raw tables are dead the moment
-    // round i+1's are materialized (normalized() is a lazy projection the
-    // successor's eager checkpoint has already consumed); only the final
-    // generation survives for the output join
-    val hGen = new GenerationPin
-    val aGen = new GenerationPin
-    (1 to numIter).foreach { i =>
-      val hRaw = hGen.next(
-        eBySrc.join(side(auth), eBySrc("dst") === auth("vid"))
-          .select(col("src").as("hvid"), col("a"))
-          .groupBy(col("hvid").as("vid")).agg(sum(col("a")).as("h_raw")))
-      hub = normalized(hRaw, "h_raw", "h")
-      val aRaw = aGen.next(
-        eByDst.join(side(hub), eByDst("src") === hub("vid"))
-          .select(col("dst").as("avid"), col("h"))
-          .groupBy(col("avid").as("vid")).agg(sum(col("h")).as("a_raw")))
-      auth = normalized(aRaw, "a_raw", "a")
-    }
-    // every raw score table is eagerly checkpointed, so the caches can
-    // go before the caller's action — nothing downstream rescans them
-    if (useBroadcast) { eBySrc.unpersist(false); eByDst.unpersist(false) }
-    verts.join(hub, Seq("vid"), "left").join(auth, Seq("vid"), "left")
-      .select(col("vid"),
-        (coalesce(col("h"), lit(0L)).cast("double") / 1000000.0).as("hub"),
-        (coalesce(col("a"), lit(0L)).cast("double") / 1000000.0).as("authority"))
-  }
+  /** The (src, dst) columns a [[RankLoop]] operator reads. */
+  private def endpoints(edges: DataFrame, srcCol: String, dstCol: String): DataFrame =
+    edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
 
   /** KATZ centrality (Katz 1953) in the family's bit-reproducible
     * fixed-point integer arithmetic: x_i(v) = β + α·Σ_{u→v} x_{i−1}(u),
@@ -1270,85 +1099,13 @@ object GraphAnalytics {
     * β/(1−αλ_max)·O(1) micro-units and the E-row in-sums run in plain
     * BIGINT ([[hitsDF]]'s mass-accounting argument — overflow needs a
     * hub absorbing > 9.2·10¹² micro-units, i.e. a graph far past the
-    * contract's growth bound).
-    *
-    * Plan shape per round (the [[pageRankQuantizedDF]] recipe, single
-    * direction): ZERO exchanges under the broadcast guard — the edge
-    * list persists once hash-partitioned by `dst` (level
-    * memory-budgeted via [[pinLevel]]), the V-row score table is a
-    * guarded broadcast, so each round is one map-side-combined
-    * aggregation in place. The vertex set is derived exchange-free from
-    * the src-set + a cache-riding dst dedup + a broadcast anti-join
-    * (the r12 verts recipe); scores stay SPARSE — a vertex with no
-    * in-edges has x ≡ β exactly, so a coalesce default replaces any
-    * per-round fill join. Past the guard: unpinned shuffle joins whose
-    * map-side partial combine defends the wire. Rolling
-    * [[GenerationPin]] checkpoints keep loop residency O(1)
-    * generations. */
+    * contract's growth bound). Runs on [[RankLoop]]: a vertex with no
+    * in-edges has x ≡ β exactly, which is the lane's absent-vertex
+    * default. */
   def katzCentralityDF(edges: DataFrame, numIter: Int = 6, atten: Long = 4L,
       srcCol: String = "src", dstCol: String = "dst"): DataFrame = {
     require(atten >= 2, s"attenuation divisor must be >= 2, got $atten")
-    val Micro = 1000000L
-    val (e, eRows) = pinTwoPhase(
-      edges.select(col(srcCol).as("src"), col(dstCol).as("dst")))
-    // src set gates the staged cache (|src set| ≤ V — a sound
-    // precondition for the score-broadcast guard, the hitsDF recipe)
-    val srcSet = e.select(col("src").as("vid")).dropDuplicates("vid")
-      .localCheckpoint(true)
-    val srcFits = srcSet.count() <= maxBroadcastVerticesDyn
-    val edStaged = if (!srcFits) e else e.repartition(col("dst"))
-      .persist(pinLevel(edges.sparkSession, eRows))
-    val verts = (if (srcFits)
-        srcSet.unionAll(
-          edStaged.select(col("dst").as("vid")).dropDuplicates("vid")
-            .join(broadcast(srcSet.select(col("vid").as("__sv"))),
-              col("vid") === col("__sv"), "left_anti"))
-      else srcSet.unionAll(e.select(col("dst").as("vid"))).distinct())
-      .localCheckpoint(true)
-    // guard width-scaled to 3 (the weighted-pagerank lesson, re-learned
-    // by the sf10 probe: at 18.6M vertices on a 17 GB heap the score
-    // broadcast BUILD died — quantized pagerank's identical margin
-    // survives, but the loop-exit overlap of the final output broadcast
-    // with the last round's not-yet-cleaned one leaves katz between the
-    // one-family and two-family budgets, so it takes the conservative
-    // ceiling and degrades to the always-correct shuffle fallback)
-    val useBroadcast =
-      verts.count() <= maxBroadcastRows(maxBroadcastVerticesDyn, 3)
-    // narrow band (src set fits, full vertex set does not): score joins
-    // will not broadcast and a sort-merge join against the hash(dst) pin
-    // would re-exchange E rows per round — drop the staged cache
-    val ed = if (srcFits && !useBroadcast) {
-      edStaged.unpersist(blocking = false)
-      e
-    } else edStaged
-
-    def scoresOf(inSums: DataFrame): DataFrame =
-      inSums.select(col("vid"),
-        (lit(Micro) + expr(s"in_sum div $atten")).as("katz_micro"))
-    // round 1 from the all-β start needs no join: in_sum = β·indeg
-    var inSums = ed.groupBy(col("dst").as("vid"))
-      .agg((count(lit(1)) * Micro).as("in_sum"))
-    val gen = new GenerationPin
-    (2 to numIter).foreach { i =>
-      val xBase = scoresOf(if (i % 3 == 0) gen.next(inSums) else inSums)
-      val x = if (useBroadcast) broadcast(xBase) else xBase
-      inSums = ed.join(x, ed("src") === x("vid"), "left")
-        .select(col("dst").as("vid"),
-          coalesce(col("katz_micro"), lit(Micro)).as("c"))
-        .groupBy("vid").agg(sum(col("c")).as("in_sum"))
-    }
-    // materialize before releasing the pinned edge cache — the final
-    // projection must not silently recompute the whole loop
-    if (srcFits && useBroadcast) {
-      inSums = gen.next(inSums)
-      ed.unpersist(blocking = false)
-    }
-    val finalScores = scoresOf(inSums)
-    verts.join(if (useBroadcast) broadcast(finalScores) else finalScores,
-        Seq("vid"), "left")
-      .select(col("vid"),
-        (coalesce(col("katz_micro"), lit(Micro)).cast("double") / 1000000.0)
-          .as("katz"))
+    RankLoop.katz(endpoints(edges, srcCol, dstCol), numIter, atten)
   }
 
   /** WEIGHTED PageRank in the same bit-reproducible fixed-point integer
@@ -1359,102 +1116,25 @@ object GraphAnalytics {
     * strength steers the walk instead of uniform out-degree. Parallel
     * edges pre-collapse by SUMMING weights (a doubled edge is twice the
     * affinity — contrast [[ssspDistances]], where parallel edges collapse
-    * to MIN cost). Same sparse in-sum loop, DECIMAL(38,0) accumulators,
-    * coalesce-default for vertices nothing points at. The per-edge
-    * product `rank · w` must fit BIGINT: rank mass concentrates to at
-    * most n·10⁶ micro-units, so integral weights up to ~10⁴ leave
-    * headroom past 10⁸ vertices; the weight table is the caller's
-    * contract (weights are per-relationship-TYPE here, schema-sized). */
+    * to MIN cost). Weights must be ≥ 1: a source whose weights summed to
+    * 0 would divide by zero, so an edge with w < 1 fails the query with
+    * an error naming it. The per-edge product `rank · w` must fit
+    * BIGINT: rank mass concentrates to at most n·10⁶ micro-units, so
+    * integral weights up to ~10⁴ leave headroom past 10⁸ vertices; the
+    * weight table is the caller's contract (weights are
+    * per-relationship-TYPE here, schema-sized). Runs on [[RankLoop]],
+    * whose guard is width-scaled to 4 here: the weight sums and the
+    * ranks are two V-row broadcast families live at once. */
   def pageRankWeightedDF(edges: DataFrame, numIter: Int = 10, resetProb: Double = 0.15,
       srcCol: String = "src", dstCol: String = "dst", weightCol: String = "w"): DataFrame = {
-    val Micro = 1000000L
-    val resetMicro = math.round(resetProb * Micro)
-    val dampMicro = Micro - resetMicro
-    // ONE staging exchange: repartition by dst FIRST — the multi-edge
-    // combine rides hash(dst) (dst ⊆ {src, dst} satisfies its
-    // clustering) and so does EVERY per-round in-sum aggregation below,
-    // which previously re-exchanged its partials each round because the
-    // staging checkpoint dropped the partitioning (persist keeps it —
-    // the pageRankQuantizedDF recipe).
-    // TWO-PHASE pinned staging ([[persistPinnedTwoPhase]] — this site is
-    // where the recipe was born, r12): the multi-edge-collapsed row
-    // count is unknowable pre-materialization, so pin default, count
-    // from memory, demote past the heap ceiling (the sf10 g_pagerank
-    // finding). A localCheckpoint cannot replace the persist — the
-    // cache must keep advertising hash(dst) for the per-round in-sums.
-    val (e, eRows) = persistPinnedTwoPhase(
-      edges.select(col(srcCol).as("src"), col(dstCol).as("dst"),
-        col(weightCol).cast("long").as("w"))
-        .repartition(col("dst"))
-        .groupBy("src", "dst").agg(sum(col("w")).as("w")))
-    // checkpointed: ed below is a LAZY join over the edge cache, so an
-    // unpinned wsum would re-run its aggregation exchange inside every
-    // checkpoint execution of the round loop (exchange reuse does not
-    // span executions — measured +180 MB at sf1)
-    val wsum = e.groupBy("src").agg(sum(col("w")).as("wsum")).localCheckpoint(true)
-    // vertex set via wsum's keys (the distinct sources, already
-    // checkpointed) plus a dst-distinct anti-joined against them — the
-    // pageRankQuantizedDF r12 recipe's half-win: e here is hash(src,dst)
-    // partitioned so the dst dedup still pays one E-partial exchange,
-    // but the src half and the final 2E-partial union-distinct are gone.
-    // Gated on wsum fitting its broadcast guard; past it the old
-    // union-distinct stands.
-    val wsumFits = wsum.count() <= maxBroadcastRows(maxBroadcastVerticesDyn, 4)
-    val verts = (if (wsumFits)
-        wsum.select(col("src").as("vid")).unionAll(
-          e.select(col("dst").as("vid")).dropDuplicates("vid")
-            .join(broadcast(wsum.select(col("src").as("__sv"))),
-              col("vid") === col("__sv"), "left_anti"))
-      else e.select(col("src").as("vid"))
-        .unionAll(e.select(col("dst").as("vid"))).distinct())
-      .localCheckpoint(true)
-    // guarded broadcasts for every V-proportional side (weight sums,
-    // per-round ranks, the final fill): the sf1 bench measured these
-    // joins silently flipping from planner auto-broadcast to two-sided
-    // shuffle joins as the tables outgrew the 10 MB threshold (15.9x
-    // shuffle on 10x data). WIDTH-SCALED guard (4 of the 2-col
-    // calibration): unlike the single-family loops, TWO V-row broadcast
-    // families are live at once here (the round-invariant wsum AND each
-    // round's ranks) — at the plain ceiling this exact shape died in
-    // the broadcast build at sf10 on a 17 GB heap (probe, r12)
-    val useBroadcast = verts.count() <= maxBroadcastRows(maxBroadcastVerticesDyn, 4)
-    def maybeBroadcast(df: DataFrame): DataFrame =
-      if (useBroadcast) broadcast(df) else df
-    // lazy map-join over the pinned edge cache: the wsum broadcast
-    // exchange is reused across rounds, each round is one cached scan +
-    // broadcast probes + an in-place aggregation — no per-round shuffle
-    val ed = e.join(maybeBroadcast(wsum), "src")
-      .select(col("src"), col("dst"), col("w"), col("wsum"))
-    val edPinned = if (useBroadcast) ed
-      else ed.localCheckpoint(true, pinLevel(edges.sparkSession, eRows))
-
-    // E-row sums in BIGINT, V-row damping multiply in DECIMAL — the
-    // pageRankQuantizedDF/hitsDF mass-accounting recipe; the per-edge
-    // product rank·w stays in the BIGINT headroom the weight contract
-    // above guarantees
-    def ranksOf(inSums: DataFrame): DataFrame =
-      inSums.select(col("vid"),
-        (lit(resetMicro) + expr(
-          s"CAST(CAST(in_sum AS DECIMAL(38,0)) * ${dampMicro} div ${Micro} AS BIGINT)"))
-          .as("rank_micro"))
-    var inSums = edPinned
-      .select(col("dst").as("vid"), expr(s"${Micro}L * w div wsum").as("c"))
-      .groupBy("vid").agg(sum(col("c")).as("in_sum"))
-    val gen = new GenerationPin
-    (2 to numIter).foreach { i =>
-      val r = ranksOf(if (i % 3 == 0) gen.next(inSums) else inSums)
-      inSums = edPinned.join(maybeBroadcast(r), edPinned("src") === r("vid"), "left")
-        .select(col("dst").as("vid"),
-          expr(s"coalesce(rank_micro, ${resetMicro}L) * w div wsum").as("c"))
-        .groupBy("vid").agg(sum(col("c")).as("in_sum"))
-    }
-    // materialize before releasing the pinned edge cache — the final
-    // projection below must not silently recompute the whole loop
-    inSums = gen.next(inSums)
-    e.unpersist(blocking = false)
-    verts.join(maybeBroadcast(ranksOf(inSums)), Seq("vid"), "left")
-      .select(col("vid"),
-        (coalesce(col("rank_micro"), lit(resetMicro)).cast("double") / 1000000.0).as("rank"))
+    val w = col(weightCol).cast("long")
+    // raise_error stays inside codegen: no extra job
+    val checked = when(w < 1, raise_error(concat(
+      lit("pageRankWeightedDF needs edge weights >= 1; edge "), col(srcCol).cast("string"),
+      lit(" -> "), col(dstCol).cast("string"), lit(" has w = "), w.cast("string"))))
+      .otherwise(w)
+    RankLoop.weighted(edges.select(col(srcCol).as("src"), col(dstCol).as("dst"),
+      checked.as("w")), numIter, resetProb)
   }
 
   /** Link-prediction feature table (Liben-Nowell & Kleinberg 2003) over
@@ -1582,128 +1262,33 @@ object GraphAnalytics {
     out
   }
 
+  /** PageRank in FIXED-POINT integer arithmetic — GraphX semantics
+    * (rank₀ = 1, rankᵢ = resetProb + (1−resetProb)·Σ in-contributions,
+    * dangling mass not redistributed) as a DataFrame join-agg loop, with
+    * ranks in micro-units (rank × 10⁶) as BIGINT, contributions in
+    * integral division by the out-degree, and damping as the exact
+    * rational (10⁶ − resetMicro)/10⁶ applied as multiply-then-integer-
+    * divide. Every operation is integer → the result is
+    * bit-reproducible across partitionings, engines, and reruns, which
+    * no floating-point formulation achieves (even per-round round(x, s)
+    * quantization diverges cross-engine: thousands of summed roundings
+    * per hub vertex amplify the ulp gap between DuckDB's multiply-divide
+    * round() and Spark's BigDecimal rounding — measured at 1e-6..1e-5 on
+    * hub ranks). Deviation from true PageRank is ≤1e-6·deg per vertex
+    * per round (floor bias) — irrelevant for ranking, and the fixed
+    * round count replays as chained CTEs in the DuckDB oracle.
+    * Headroom: the E-row in-sums run in BIGINT — a vertex's in-sum is
+    * bounded by the total rank mass, n·10⁶ micro-units, so overflow
+    * needs n > 9.2·10¹² vertices. Only the V-row damping product, which
+    * adds six digits and passes 2⁶³ past ~10⁷ vertices, runs in
+    * DECIMAL(38,0); the final per-vertex rank is back in BIGINT
+    * micro-units. DuckDB sums integers in HUGEINT, so both engines
+    * compute the identical exact integers. Runs on [[RankLoop]]: the
+    * out-degree is the per-source payload, and a vertex nothing points
+    * at has rank exactly resetMicro, the absent-vertex default. */
   def pageRankQuantizedDF(edges: DataFrame, numIter: Int = 10, resetProb: Double = 0.15,
-      srcCol: String = "src", dstCol: String = "dst",
-      broadcastRanks: Boolean = true): DataFrame = {
-    val Micro = 1000000L
-    val resetMicro = math.round(resetProb * Micro)
-    val dampMicro = Micro - resetMicro
-    // TWO-PHASE memory-aware pins (the r11 CC recipe, extended here
-    // after the sf10 probe caught g_pagerank's edge cache evicted under
-    // storage pressure — every round then re-executed the staging
-    // exchange, a 14.3× byte ratio on 10× data): the staging checkpoint
-    // demotes to DISK_ONLY past [[pinRowCeiling]], and the hash(dst)
-    // edge cache picks its persist level from the SAME exact row count
-    // (known a priori here — the degree join is row-preserving), so at
-    // 10×-past-design volume the loop-invariant degrades to disk-backed
-    // sequential re-reads instead of per-round recompute, with zero
-    // change below the ceiling.
-    val (e, eRows) = pinTwoPhase(edges.select(col(srcCol).as("src"), col(dstCol).as("dst")))
-    // the degree table is loop-invariant and now TRIPLE-consumed (the
-    // edge-cache build join, the vertex-set union below, and the guard
-    // count) — checkpointed so the E-row aggregation runs once
-    val deg = e.groupBy("src").agg(count(lit(1)).as("deg")).localCheckpoint(true)
-    // the staging decision keys off the DEGREE table fitting the
-    // broadcast guard (its row count = |src vertices| ≤ V, known before
-    // the full vertex set exists) — this breaks the circularity that
-    // kept the r12 verts-exchange residual deferred: the hash(dst) edge
-    // cache can now be built FIRST and the vertex set derived from it.
-    val degFits = broadcastRanks && deg.count() <= maxBroadcastVerticesDyn
-    // the degree join is loop-invariant — pay it once, not once per round.
-    // EXPLICIT guarded broadcast: deg is V-proportional and slips past
-    // the planner's auto-broadcast threshold as data grows (the sf1 bench
-    // measured the silent flip to a two-sided shuffle join — 15.7x
-    // shuffle on 10x data), while the semantic guard holds to 50M
-    // vertices.
-    // repartition BEFORE the broadcast degree join: the exchange then
-    // carries bare (src, dst) pairs — the deg column attaches on top of
-    // the already-partitioned stream (a broadcast join preserves it),
-    // ~1/3 fewer staging bytes for the identical pinned cache.
-    // persist (NOT localCheckpoint — hash(dst) must survive for the
-    // per-round in-sum aggregations), level memory-budgeted by eRows.
-    val edStaged =
-      if (degFits)
-        e.repartition(col("dst"))
-          .join(broadcast(deg), "src")
-          .select(col("src"), col("dst"), col("deg"))
-          .persist(pinLevel(edges.sparkSession, eRows))
-      else e.join(deg, "src")
-        .select(col("src"), col("dst"), col("deg"))
-        .localCheckpoint(true, pinLevel(edges.sparkSession, eRows))
-    // vertex set WITHOUT the (src ∪ dst) distinct exchange (the sf10
-    // probe's one super-linear stage: a distinct over 2E rows writes
-    // Σ per-map-task distinct keys — measured 4.2×V partials / 625 MB on
-    // 10× data as replica layouts decay map-side combine). In the
-    // broadcast path all three pieces are exchange-free: deg's keys ARE
-    // the distinct sources; the dst-side dedup rides the edge cache's
-    // own hash(dst) partitioning (alias-preserved); the dst-only
-    // remainder comes off a guarded broadcast anti-join against deg.
-    // The two legs are disjoint and internally distinct — no final
-    // distinct at all. Shuffle fallback keeps the old union-distinct
-    // (without a broadcastable deg there is no cheaper formulation).
-    val verts = (if (degFits)
-        deg.select(col("src").as("vid")).unionAll(
-          edStaged.select(col("dst").as("vid")).dropDuplicates("vid")
-            .join(broadcast(deg), col("vid") === deg("src"), "left_anti"))
-      else e.select(col("src").as("vid"))
-        .unionAll(e.select(col("dst").as("vid"))).distinct())
-      .localCheckpoint(true)
-    val useBroadcast = broadcastRanks && verts.count() <= maxBroadcastVerticesDyn
-    val ed = if (degFits && !useBroadcast) {
-      // narrow band (dst-heavy graph: out-degree table fits the guard,
-      // full vertex set does not): per-round rank joins will NOT
-      // broadcast, and a sort-merge join against the hash(dst) pin
-      // would re-exchange the edge list every round — rebuild the
-      // shuffle-path cache instead and drop the staged one.
-      edStaged.unpersist(blocking = false)
-      e.join(deg, "src").select(col("src"), col("dst"), col("deg"))
-        .localCheckpoint(true, pinLevel(edges.sparkSession, eRows))
-    } else edStaged
-
-    // SPARSE loop: ranks are kept only for vertices that RECEIVE edges —
-    // any vertex absent from the in-sums has rank exactly resetMicro
-    // (in_sum = 0), so a coalesce default replaces the per-round
-    // verts-fill join (one join + one exchange saved per round). Round 1
-    // needs no join at all: every rank is the initial Micro.
-    // Mass accounting (the hitsDF recipe): the E-row in-sums run in
-    // plain BIGINT — a hub's in-sum is bounded by TOTAL rank mass
-    // (n·10⁶ micro-units), so long overflow needs n > 9.2·10¹²
-    // vertices; what genuinely overflows earlier (past ~10⁷ vertices)
-    // is the DAMPING MULTIPLY, which adds 6 more digits — so only that
-    // V-row product runs in DECIMAL(38,0), off the edge-sized hot path
-    // (BigDecimal accumulation over 2E rows × rounds measured ~10 s of
-    // pure CPU at sf1 in the HITS twin). Same integers either way.
-    def ranksOf(inSums: DataFrame): DataFrame =
-      inSums.select(col("vid"),
-        (lit(resetMicro) + expr(
-          s"CAST(CAST(in_sum AS DECIMAL(38,0)) * ${dampMicro} div ${Micro} AS BIGINT)"))
-          .as("rank_micro"))
-    var inSums = ed
-      .select(col("dst").as("vid"), expr(s"${Micro}L div deg").as("c"))
-      .groupBy("vid").agg(sum(col("c")).as("in_sum"))
-    val gen = new GenerationPin
-    (2 to numIter).foreach { i =>
-      val rBase = ranksOf(if (i % 3 == 0) gen.next(inSums) else inSums)
-      val r = if (useBroadcast) broadcast(rBase) else rBase
-      inSums = ed.join(r, ed("src") === r("vid"), "left")
-        .select(col("dst").as("vid"),
-          expr(s"coalesce(rank_micro, ${resetMicro}L) div deg").as("c"))
-        .groupBy("vid").agg(sum(col("c")).as("in_sum"))
-    }
-    // materialize before releasing the pinned edge cache — the final
-    // projection below must not silently recompute the whole loop
-    if (useBroadcast) {
-      inSums = gen.next(inSums)
-      ed.unpersist(blocking = false)
-    }
-    // micro-units ≤ ~1e11 are exact in double; /1e6 is one correctly-
-    // rounded IEEE op — identical in every engine
-    val finalRanks = ranksOf(inSums)
-    verts.join(if (useBroadcast) broadcast(finalRanks) else finalRanks,
-        Seq("vid"), "left")
-      .select(col("vid"),
-        (coalesce(col("rank_micro"), lit(resetMicro)).cast("double") / 1000000.0).as("rank"))
-  }
+      srcCol: String = "src", dstCol: String = "dst"): DataFrame =
+    RankLoop.pageRank(endpoints(edges, srcCol, dstCol), numIter, resetProb)
 
   /** PERSONALIZED PageRank (topic-sensitive, Haveliwala 2002): teleport
     * mass returns only to the `sources` set instead of every vertex —
@@ -1721,86 +1306,11 @@ object GraphAnalytics {
     * with value 0 (damped-to-zero trickle) are retained — dropping them
     * would change nothing downstream but cost a filter; the OUTPUT keeps
     * only reached vertices (absent = 0), mirroring [[bfsDistances]].
-    * Broadcast machinery and ceiling as in [[pageRankQuantizedDF]]. */
+    * Runs on [[RankLoop]] with the sources as its seed. */
   def personalizedPageRankDF(edges: DataFrame, sources: DataFrame,
       numIter: Int = 10, resetProb: Double = 0.15,
-      srcCol: String = "src", dstCol: String = "dst",
-      broadcastRanks: Boolean = true): DataFrame = {
-    val Micro = 1000000L
-    val resetMicro = math.round(resetProb * Micro)
-    val dampMicro = Micro - resetMicro
-    // two-phase staging pin + memory-budgeted cache level, exactly the
-    // pageRankQuantizedDF shape (see the scaladoc there): past
-    // [[pinRowCeiling]] the loop-invariant goes DISK_ONLY instead of
-    // being evicted into per-round recompute
-    val (e, eRows) = pinTwoPhase(edges.select(col(srcCol).as("src"), col(dstCol).as("dst")))
-    val deg = e.groupBy("src").agg(count(lit(1)).as("deg")).localCheckpoint(true)
-    // the broadcast guard here only needs the vertex COUNT (PPR's rank
-    // table is reach-bounded, not verts-anchored) — derived without the
-    // (src ∪ dst) distinct-over-2E exchange via the pageRankQuantizedDF
-    // r12 recipe: deg's row count is the src half; the dst-only half
-    // rides the hash(dst) edge cache plus a guarded broadcast anti-join.
-    // degFits (|deg| ≤ V ≤ guard required) soundly gates the staging.
-    val nSrc = deg.count()
-    val degFits = broadcastRanks && nSrc <= maxBroadcastVerticesDyn
-    // guarded broadcast for the loop-invariant degree join (the
-    // pageRankQuantizedDF rule: an edge ⋈ vertex join never rides
-    // auto-broadcast), applied AFTER the hash(dst) repartition so the
-    // staging exchange carries bare (src, dst) pairs and the deg column
-    // attaches on the already-partitioned stream
-    val edStaged =
-      if (degFits)
-        e.repartition(col("dst"))
-          .join(broadcast(deg), "src")
-          .select(col("src"), col("dst"), col("deg"))
-          .persist(pinLevel(edges.sparkSession, eRows))
-      else e.join(deg, "src")
-        .select(col("src"), col("dst"), col("deg"))
-        .localCheckpoint(true, pinLevel(edges.sparkSession, eRows))
-    val nVerts = if (degFits)
-        nSrc + edStaged.select(col("dst").as("vid")).dropDuplicates("vid")
-          .join(broadcast(deg), col("vid") === deg("src"), "left_anti").count()
-      else e.select(col("src").as("vid"))
-        .unionAll(e.select(col("dst").as("vid"))).distinct().count()
-    val useBroadcast = broadcastRanks && nVerts <= maxBroadcastVerticesDyn
-    val ed = if (degFits && !useBroadcast) {
-      // dst-heavy narrow band: rank joins will not broadcast; a
-      // sort-merge join against the hash(dst) pin would re-exchange
-      // the edge list every round — rebuild the shuffle-path cache
-      edStaged.unpersist(blocking = false)
-      e.join(deg, "src").select(col("src"), col("dst"), col("deg"))
-        .localCheckpoint(true, pinLevel(edges.sparkSession, eRows))
-    } else edStaged
-    val s = sources.select(col(sources.columns.head).as("vid")).distinct()
-      .localCheckpoint(true)
-
-    // r_i = resetMicro·1[v ∈ S] + damp · in_sum(v), kept sparse via a
-    // source ∪ in-sum full-outer merge (rows exist only where either side
-    // contributes)
-    // E-row sums in BIGINT, V-row damping multiply in DECIMAL (the
-    // pageRankQuantizedDF mass-accounting recipe; PPR mass only decays
-    // from |S|·10⁶, so the long bound is even looser here)
-    def ranksOf(inSums: DataFrame): DataFrame =
-      s.withColumn("__s", lit(true))
-        .join(inSums, Seq("vid"), "full_outer")
-        .select(col("vid"),
-          (when(col("__s"), lit(resetMicro)).otherwise(lit(0L)) +
-            expr(s"CAST(coalesce(CAST(in_sum AS DECIMAL(38,0)), 0) * ${dampMicro}" +
-              s" div ${Micro} AS BIGINT)"))
-            .as("rank_micro"))
-    val gen = new GenerationPin
-    var ranks = gen.next(s.withColumn("rank_micro", lit(Micro)))
-    (1 until numIter).foreach { i =>
-      val r = if (useBroadcast) broadcast(ranks) else ranks
-      val inSums = ed.join(r, ed("src") === r("vid"))
-        .select(col("dst").as("vid"), expr("rank_micro div deg").as("c"))
-        .groupBy("vid").agg(sum(col("c")).as("in_sum"))
-      ranks = ranksOf(inSums)
-      if (i % 3 == 0 || i == numIter - 1) ranks = gen.next(ranks)
-    }
-    if (useBroadcast) ed.unpersist(blocking = false)
-    ranks.select(col("vid"), (col("rank_micro").cast("double") / 1000000.0).as("ppr"))
-  }
+      srcCol: String = "src", dstCol: String = "dst"): DataFrame =
+    RankLoop.personalized(endpoints(edges, srcCol, dstCol), sources, numIter, resetProb)
 
   /** Multi-source BFS hop distances: the minimum number of hops from any
     * source vertex — round i sets d(v) = min(d(v), min over edges u→v of
@@ -3417,12 +2927,13 @@ object GraphAnalytics {
   }
 }
 
-/** Pregel-style iterative propagation on DataFrames (SURVEY §2.4 #19).
+/** Pregel-style iterative propagation on DataFrames (SURVEY §2.4 #19):
+  * connected components by star rounds.
   *
   * GraphX keeps the graph as RDDs with full lineage; at very large scale
   * (or many iterations) lineage growth and RDD serialization become the
-  * bottleneck. This loop keeps everything in DataFrames — joins get AQE
-  * skew handling, Tungsten encoding, and codegen — and truncates the plan
+  * bottleneck. These rounds keep everything in DataFrames — joins get AQE
+  * skew handling, Tungsten encoding, and codegen — and truncate the plan
   * with localCheckpoint every few rounds, which is the standard recipe for
   * iterative DataFrame algorithms.
   */
@@ -3442,24 +2953,6 @@ object DataFramePregel {
     * task failures. Bounded regardless of how many edges a 100 TB scan
     * packs into one split. */
   private[operators] val ContractionFlushEntries = 2 * 1000 * 1000
-
-  /** Iterate `step` until convergence or maxIter. `step` maps the current
-    * vertex DataFrame to the next one; convergence = no row changed
-    * (exceptAll probe). Each round is eagerly localCheckpoint'ed: the
-    * convergence probe forces computation anyway, and truncating lineage
-    * keeps round N's plan O(1) instead of O(N). */
-  def iterate(vertices: DataFrame, maxIter: Int)(step: DataFrame => DataFrame): DataFrame = {
-    var current = vertices.localCheckpoint(true)
-    var i = 0
-    var converged = false
-    while (i < maxIter && !converged) {
-      val next = step(current).localCheckpoint(true)
-      if (next.exceptAll(current).limit(1).count() == 0) converged = true
-      else current = next
-      i += 1
-    }
-    current
-  }
 
   /** Connected components by alternating large-star/small-star rounds
     * (Kiveris et al., "Connected Components in MapReduce and Beyond",

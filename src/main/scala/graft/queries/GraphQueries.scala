@@ -267,11 +267,14 @@ object GraphQueries {
   def modelMappings(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val out = java.nio.file.Files.createTempDirectory("graft_model_mappings").toString
+    // exportAll writes the zip beside `out`, not inside it
+    var zip: Option[String] = None
     try {
       val g = TpchGraph.load(s, dir)
       // distributed (multi-part) CSV write — the only mode that holds at
       // scale; the single-file rename path keeps its own spec coverage
-      graft.export.GraphExporter.exportAll(g, out, singleFileCsv = false, createZip = true)
+      zip = graft.export.GraphExporter.exportAll(g, out, singleFileCsv = false,
+        createZip = true).zipPath
       val re = graft.export.GraphImporter.fromPackage(s, out)
       val nodeRows = re.schema.labels.map { ls =>
         ("node", ls.label, s"${ls.label}.csv", ls.identifier,
@@ -284,7 +287,10 @@ object GraphQueries {
       }
       // the result is a driver-local literal — the package dir is done
       (nodeRows ++ relRows).toDF("kind", "name", "csv_file", "key_property", "n_columns")
-    } finally graft.tools.Fs.deleteRecursively(out)
+    } finally {
+      graft.tools.Fs.deleteRecursively(out)
+      zip.foreach(z => java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(z)))
+    }
   }
 
   /** Path-pattern matching compiled to joins: every Customer→Order→Part

@@ -160,4 +160,20 @@ class ExporterSpec extends SparkTestBase {
     val model2 = Files.readString(Paths.get(dir2, "neo4j_importer_model.json"))
     assert(model == model2)
   }
+
+  test("g_model_mappings deletes the export zip it writes beside its temp dir") {
+    val tmp = Paths.get(System.getProperty("java.io.tmpdir"))
+    def zips(): Long = {
+      val ls = Files.list(tmp)
+      try ls.filter { p =>
+        val n = p.getFileName.toString
+        n.startsWith("graft_model_mappings") && n.endsWith("-export.zip")
+      }.count()
+      finally ls.close()
+    }
+    val before = zips()
+    val rows = graft.queries.GraphQueries.modelMappings(spark, "/root/testdata/sf0.001").collect()
+    assert(rows.nonEmpty)
+    assert(zips() == before)
+  }
 }

@@ -189,10 +189,11 @@ class GraphAnalyticsSpec extends SparkTestBase {
     assert(bc == sh)
   }
 
-  test("sssp and (P)PR: broadcast and shuffle physical paths agree") {
+  test("sssp: broadcast and shuffle physical paths agree") {
     // the MaxBroadcastVertices guard swaps plan shape, never semantics —
     // integer math is partitioning-independent, so the paths must agree
-    // bit for bit on random graphs
+    // bit for bit on random graphs (the rank family's branches are
+    // compared in RankLoopSpec)
     val rnd = new scala.util.Random(31)
     val wEdges = Seq.tabulate(300)(_ =>
       (rnd.nextInt(80).toLong, rnd.nextInt(80).toLong, (1 + rnd.nextInt(5)).toLong))
@@ -204,15 +205,6 @@ class GraphAnalyticsSpec extends SparkTestBase {
         broadcastDist = true)) ==
       setOf(GraphAnalytics.ssspDistances(wEdges, srcs, rounds = 8,
         broadcastDist = false)))
-    val edges = wEdges.select("src", "dst")
-    assert(setOf(GraphAnalytics.pageRankQuantizedDF(edges, numIter = 5,
-        broadcastRanks = true)) ==
-      setOf(GraphAnalytics.pageRankQuantizedDF(edges, numIter = 5,
-        broadcastRanks = false)))
-    assert(setOf(GraphAnalytics.personalizedPageRankDF(edges, srcs, numIter = 5,
-        broadcastRanks = true)) ==
-      setOf(GraphAnalytics.personalizedPageRankDF(edges, srcs, numIter = 5,
-        broadcastRanks = false)))
   }
 
   test("triangle counts: one triangle, hand-computed") {
@@ -301,10 +293,11 @@ class GraphAnalyticsSpec extends SparkTestBase {
 
   test("quantized pagerank: hub in-sum past the old BIGINT ceiling stays exact") {
     // 11M leaves all pointing at one hub: the hub's round-1 in-sum is
-    // 1.1e13 micro-units, and the damping product 1.1e13·850000 ≈ 9.35e18
-    // exceeds 2⁶³−1 ≈ 9.22e18 — the BIGINT formulation silently wrapped
-    // negative here; the DECIMAL(38,0) accumulator is exact. numIter=1:
-    // the overflow fired in the final ranksOf already.
+    // 1.1e13 micro-units, far inside its BIGINT accumulator, but the
+    // damping product 1.1e13·850000 ≈ 9.35e18 exceeds 2⁶³−1 ≈ 9.22e18 —
+    // an all-BIGINT update silently wrapped negative here; the V-row
+    // DECIMAL(38,0) damping product is exact. numIter=1: the overflow
+    // fired in the first round's update already.
     val n = 11000000L
     val edges = spark.range(1, n + 1).select($"id".as("src"), lit(0L).as("dst"))
     val hub = GraphAnalytics.pageRankQuantizedDF(edges, numIter = 1)
@@ -339,6 +332,17 @@ class GraphAnalyticsSpec extends SparkTestBase {
       Seq((1L, 2L, 2L), (1L, 3L, 2L)).toDF("src", "dst", "w"), numIter = 1)
       .as[(Long, Double)].collect().toMap
     assert(par == merged)
+  }
+
+  test("weighted PageRank: a weight below 1 fails the query naming the edge") {
+    // a source whose weights sum to 0 would otherwise fail with an
+    // anonymous [DIVIDE_BY_ZERO] in the contribution `div`
+    val edges = Seq((1L, 2L, 1L), (3L, 4L, 0L), (3L, 5L, 0L)).toDF("src", "dst", "w")
+    val err = intercept[Exception](GraphAnalytics.pageRankWeightedDF(edges).collect())
+    val msgs = Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+      .map(e => String.valueOf(e.getMessage)).toSeq
+    assert(msgs.exists(_.contains("needs edge weights >= 1; edge 3 -> ")), msgs.mkString("\n"))
+    assert(!msgs.exists(_.contains("DIVIDE_BY_ZERO")), msgs.mkString("\n"))
   }
 
   test("HITS one iteration, hand-computed fixed-point values") {

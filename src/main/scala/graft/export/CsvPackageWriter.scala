@@ -1,6 +1,7 @@
 package graft.export
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -23,8 +24,12 @@ object CsvPackageWriter {
     * is what Python's csv module — the reference's writer AND the Data
     * Importer's parser — produces and expects. Spark's default escape of
     * backslash would serialize `say "hi"` as `"say \"hi\""`, which those
-    * consumers misparse. */
-  val CsvOptions: Map[String, String] = Map("header" -> "true", "escape" -> "\"")
+    * consumers misparse. Values are written verbatim like the reference's
+    * `csv.DictWriter`: Spark's CSV *writer* trims leading and trailing
+    * whitespace unless told not to (its readers already default to not
+    * trimming). */
+  val CsvOptions: Map[String, String] = Map("header" -> "true", "escape" -> "\"",
+    "ignoreLeadingWhiteSpace" -> "false", "ignoreTrailingWhiteSpace" -> "false")
 
   /** Render every column as string with NULL sentinel — the reference's
     * `restval='NULL'`. Public so the model generators sniff samples from
@@ -61,6 +66,53 @@ object CsvPackageWriter {
       out.write.mode("overwrite").options(CsvOptions).csv(target.toString)
       target
     }
+  }
+
+  /** First data row of a table [[write]] wrote to `target`, as column ->
+    * CSV value ("NULL" for null); empty when the table has no rows. A
+    * distributed write is read part by part in partition order up to the
+    * first part with a data row, which is the row `take(1)` returns. Runs
+    * on the driver and reads only the head of one or a few files, so the
+    * sample costs no Spark job and matches the file by construction. */
+  def firstRow(target: Path, columns: Seq[String]): Map[String, String] = {
+    val files =
+      if (!Files.isDirectory(target)) Seq(target)
+      else {
+        val ls = Files.list(target)
+        val parts = try ls.iterator().asScala.filter { p =>
+          val n = p.getFileName.toString
+          n.startsWith("part-") && n.endsWith(".csv")
+        }.toList finally ls.close()
+        parts.sortBy(p => (partIndex(p.getFileName.toString), p.getFileName.toString))
+      }
+    files.iterator.flatMap(firstDataRow).nextOption()
+      .fold(Map.empty[String, String])(values => columns.zip(values).toMap)
+  }
+
+  /** The partition index in Spark's `part-<index>-<job uuid>...` names;
+    * numeric, since the zero padding stops at five digits. */
+  private def partIndex(name: String): Long =
+    name.stripPrefix("part-").takeWhile(_.isDigit).toLong
+
+  /** The record after the header, parsed in the dialect Spark writes
+    * under [[CsvOptions]]. Univocity's defaults already match it in
+    * delimiter, quote, doubled-quote escape and comment handling (the
+    * writer quotes a leading `#`); the rest is set here. */
+  private def firstDataRow(file: Path): Option[Array[String]] = {
+    val settings = new com.univocity.parsers.csv.CsvParserSettings()
+    settings.getFormat.setLineSeparator("\n") // Spark's, whatever the OS
+    settings.setIgnoreLeadingWhitespaces(false)
+    settings.setIgnoreTrailingWhitespaces(false)
+    settings.setEmptyValue("") // a quoted `""`
+    settings.setMaxCharsPerColumn(-1)
+    settings.setMaxColumns(20480) // Spark's CSV reader limit
+    settings.setReadInputOnSeparateThread(false)
+    val parser = new com.univocity.parsers.csv.CsvParser(settings)
+    parser.beginParsing(Files.newBufferedReader(file, java.nio.charset.StandardCharsets.UTF_8))
+    try {
+      parser.parseNext() // header
+      Option(parser.parseNext())
+    } finally parser.stopParsing()
   }
 }
 

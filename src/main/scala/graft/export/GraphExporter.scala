@@ -20,10 +20,13 @@ object GraphExporter {
       modelPath: String,
       zipPath: Option[String])
 
-  /** CSV-rendered first row of a table: prop -> string ("NULL" for null).
-    * Uses CsvPackageWriter's own stringification so the sniffed sample is
-    * byte-identical with what the written CSV contains (Row.get.toString
-    * would render e.g. timestamps differently). */
+  /** CSV-rendered first row of a table: prop -> string ("NULL" for null),
+    * for the model-only [[buildExports]], which writes no CSV to read the
+    * sample back from. One `take(1)` job per table; it uses
+    * CsvPackageWriter's own stringification, so the sniffed sample matches
+    * what a written CSV would contain (Row.get.toString would render e.g.
+    * timestamps differently). [[exportAll]] instead reads each sample
+    * from the file it wrote ([[CsvPackageWriter.firstRow]]). */
   private def sampleRow(df: DataFrame): Map[String, String] =
     CsvPackageWriter.stringified(df).take(1).headOption.map { row: Row =>
       df.columns.zipWithIndex.map { case (c, i) =>
@@ -65,11 +68,12 @@ object GraphExporter {
     import scala.concurrent.duration.Duration
     Files.createDirectories(Paths.get(outputDir))
 
-    // Per-table exports run CONCURRENTLY: each is two Spark actions (the
-    // CSV write + the one-row sample sniff) whose fixed job-launch latency
-    // would otherwise serialize across 2×(labels+patterns) jobs. Spark
-    // schedules concurrent actions from separate threads; output paths are
-    // distinct per table so the writes never contend.
+    // Per-table exports run CONCURRENTLY: each is one Spark action (the
+    // CSV write) whose fixed job-launch latency would otherwise serialize
+    // across labels+patterns jobs; the sample is then read back from the
+    // head of the written file on the driver, with no job. Spark schedules
+    // concurrent actions from separate threads; output paths are distinct
+    // per table so the writes never contend.
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
       math.min(8, graph.schema.labels.size + graph.schema.rels.size max 1))
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
@@ -77,16 +81,17 @@ object GraphExporter {
       // --- node CSVs (identifier-first ordering is already the table shape)
       val nodeF = Future.traverse(graph.schema.labels) { ls => Future {
         val df = graph.nodes(ls.label)
-        CsvPackageWriter.write(df, outputDir, ls.label, singleFileCsv)
-        NodeExport(ls.label, ls.identifier, df.columns.toSeq, sampleRow(df))
+        val csv = CsvPackageWriter.write(df, outputDir, ls.label, singleFileCsv)
+        NodeExport(ls.label, ls.identifier, df.columns.toSeq,
+          CsvPackageWriter.firstRow(csv, df.columns.toSeq))
       }}
 
       // --- relationship CSVs
       val relF = Future.traverse(graph.schema.rels) { rs => Future {
         val df = graph.rels(rs.pattern)
-        CsvPackageWriter.write(df, outputDir, rs.pattern.key, singleFileCsv)
+        val csv = CsvPackageWriter.write(df, outputDir, rs.pattern.key, singleFileCsv)
         RelExport(rs.pattern, rs.srcIdProp, rs.dstIdProp, rs.srcColName, rs.dstColName,
-          rs.properties.map(_.name).sorted, sampleRow(df))
+          rs.properties.map(_.name).sorted, CsvPackageWriter.firstRow(csv, df.columns.toSeq))
       }}
 
       val nodeExports = Await.result(nodeF, Duration.Inf)

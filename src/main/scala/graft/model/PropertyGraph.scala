@@ -23,12 +23,7 @@ final case class PropertyMeta(name: String, typeToken: String, nullable: Boolean
 final case class LabelSchema(
     label: String,
     identifier: String,
-    properties: Seq[PropertyMeta]) {
-  /** Identifier-first, rest sorted by name — the reference's CSV column
-    * order (neo4j_export.py:315-317). */
-  def orderedPropertyNames: Seq[String] =
-    identifier +: properties.map(_.name).filterNot(_ == identifier).sorted
-}
+    properties: Seq[PropertyMeta])
 
 /** Schema of one relationship pattern: endpoint id columns (label-prefixed,
   * `_source`/`_target`-suffixed for self-relationships,

@@ -56,48 +56,59 @@ final class TableGraphMapper(
   def load(spark: SparkSession, dir: String, checkEndpoints: Boolean = false): PropertyGraph = {
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration.Duration
-    // Table opens (parquet footer reads, and rule-4 identifier scans for
-    // labels without a declared constraint) are independent Spark actions —
-    // run them concurrently instead of paying the job-launch latency
-    // once per label
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.max(1, math.min(8, math.max(nodeMappings.size, edgeMappings.size))))
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
-    try {
     // one (label, mapping) unit per label a table declares — multi-label
     // tables fan out to one node table per label, reference semantics
     val labelMappings: Seq[(String, NodeMapping)] =
       nodeMappings.flatMap(nm => nm.labels.map(l => (l, nm)))
-    val nodeTables: Map[String, (DataFrame, LabelSchema)] =
-      Await.result(Future.traverse(labelMappings) { case (label, nm) => Future {
-        val raw = readTable(spark, dir, nm.table)
+    val tables = (nodeMappings.map(_.table) ++ edgeMappings.map(_.table)).distinct
+    // Table opens (parquet footer reads, and rule-4 identifier scans for
+    // labels without a declared constraint) are independent Spark actions —
+    // run them concurrently instead of paying the job-launch latency once
+    // per table and label. Each distinct table is read ONCE; its labels
+    // and edge mappings share the frame, and each label's detection starts
+    // as soon as its own table is open.
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(
+      math.max(1, math.min(8, math.max(tables.size, labelMappings.size))))
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
+    try {
+    val reads: Map[String, Future[DataFrame]] =
+      tables.map(t => t -> Future(readTable(spark, dir, t))).toMap
+
+    val nodeF: Map[String, Future[(DataFrame, LabelSchema)]] =
+      labelMappings.map { case (label, nm) => label -> reads(nm.table).map { raw =>
         val id = nm.idProp.getOrElse(IdentifierDetector.detect(raw, label, catalog))
         val built = NodeTableBuilder.build(raw, id)
         val props = built.schema.fields.toSeq.map(f =>
           PropertyMeta(f.name, graft.schema.TypeInference.fromCatalyst(f.dataType), f.nullable))
-        label -> (built, LabelSchema(label, id, props))
-      }}, Duration.Inf).toMap
+        (built, LabelSchema(label, id, props))
+      }}.toMap
 
-    val rels: Seq[(RelPattern, DataFrame, RelSchema)] =
-      Await.result(Future.traverse(edgeMappings) { em => Future {
-        val table = readTable(spark, dir, em.table)
+    val relF: Seq[Future[(RelPattern, DataFrame, RelSchema)]] = edgeMappings.map { em =>
+      for {
+        table <- reads(em.table)
+        (srcDf, srcSchema) <- nodeF(em.srcLabel)
+        (dstDf, dstSchema) <- nodeF(em.dstLabel)
+      } yield {
         val raw = em.rowFilter.fold(table)(f =>
           table.where(org.apache.spark.sql.functions.expr(f)))
-        val (srcDf, srcSchema) = nodeTables(em.srcLabel)
-        val (dstDf, dstSchema) = nodeTables(em.dstLabel)
         val (df, rs) = RelTableBuilder.build(
           em.pattern, raw, em.srcFk, em.dstFk,
           srcSchema.identifier, dstSchema.identifier, em.props,
           if (checkEndpoints) Some(srcDf.select(col(srcSchema.identifier))) else None,
           if (checkEndpoints) Some(dstDf.select(col(dstSchema.identifier))) else None)
         (em.pattern, df, rs)
-      }}, Duration.Inf)
+      }
+    }
+
+    val nodeTables: Map[String, (DataFrame, LabelSchema)] =
+      nodeF.map { case (l, f) => l -> Await.result(f, Duration.Inf) }
+    val rels = Await.result(Future.sequence(relF), Duration.Inf)
 
     PropertyGraph(
       nodes = nodeTables.map { case (l, (df, _)) => l -> df },
       rels = rels.map { case (p, df, _) => p -> df }.toMap,
       schema = GraphSchema(
-        labels = nodeMappings.flatMap(nm => nm.labels.map(l => nodeTables(l)._2)),
+        labels = labelMappings.map { case (l, _) => nodeTables(l)._2 },
         rels = rels.map(_._3),
         constraints = catalog.constraints,
         indexes = catalog.indexes))

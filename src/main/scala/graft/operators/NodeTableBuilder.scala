@@ -1,7 +1,5 @@
 package graft.operators
 
-import graft.model.LabelSchema
-import graft.schema.{GraphCatalog, IdentifierDetector, SchemaInference}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StringType
@@ -49,14 +47,5 @@ object NodeTableBuilder {
     val keys = df.select(explode(map_keys(col(mapCol))).as("k"))
       .distinct().collect().map(_.getString(0)).sorted
     df.select(col(idCol) +: keys.toSeq.map(k => element_at(col(mapCol), lit(k)).as(k)): _*)
-  }
-
-  /** Detect the identifier, infer property metadata, and build the table. */
-  def buildWithSchema(df: DataFrame, label: String,
-      catalog: GraphCatalog = GraphCatalog.empty): (DataFrame, LabelSchema) = {
-    val id = IdentifierDetector.detect(df, label, catalog)
-    val out = build(df, id)
-    val props = SchemaInference.inferProperties(out)
-    (out, LabelSchema(label, id, props))
   }
 }

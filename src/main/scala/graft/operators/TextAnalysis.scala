@@ -136,7 +136,6 @@ object TextAnalysis {
 
   def punctCount(text: Column): Column = classCount(text, "[.,!?;:]")
   def digitCount(text: Column): Column = classCount(text, "[0-9]")
-  def upperCount(text: Column): Column = classCount(text, "[A-Z]")
   def whitespaceCount(text: Column): Column = classCount(text, "\\s")
 
   /** Ratio helpers return NULL-safe doubles rounded to 6 digits so both
@@ -146,7 +145,6 @@ object TextAnalysis {
 
   def punctRatio(text: Column): Column = ratio(punctCount(text), charCount(text))
   def digitRatio(text: Column): Column = ratio(digitCount(text), charCount(text))
-  def upperRatio(text: Column): Column = ratio(upperCount(text), charCount(text))
   def whitespaceRatio(text: Column): Column = ratio(whitespaceCount(text), charCount(text))
 
   /** Fraction of tokens that are in the given stopword list. */
@@ -628,46 +626,6 @@ object TextAnalysis {
     perDoc.select(col("doc_id"), col("n_windows"), col("n_dup_windows"),
       round(col("n_dup_windows").cast("double") / col("n_windows").cast("double"), 6)
         .as("dup_fraction"))
-  }
-
-  /** Cross-document LINE-level deduplication (the CCNet recipe): a line
-    * occurring in ≥ `minDocs` DISTINCT documents is boilerplate —
-    * headers, footers, licenses, navigation chrome — and is removed
-    * from every document carrying it, which document- and span-level
-    * dedup both leave in place. Lines are keyed by md5 of their
-    * trimmed text; blank lines never count as boilerplate.
-    *
-    * Scale shape: the duplicate-line census is one (line-hash, doc)
-    * aggregation — shuffles carry hashes and line text, never whole
-    * documents — and the boilerplate set it produces is
-    * corpus-boilerplate-sized (AQE broadcasts it into the mark join
-    * when small). Output per document: (id, n_lines, n_dup_lines,
-    * cleaned_md5) where cleaned_md5 digests the surviving lines
-    * rejoined in original order — the scalar form the driver
-    * comparator needs; a production pipeline would emit the cleaned
-    * text column itself from the same plan. */
-  def lineDedup(df: DataFrame, idCol: String, textCol: String,
-      minDocs: Int = 2): DataFrame = {
-    val lines = df.select(col(idCol).as("__id"),
-        posexplode(split(col(textCol), "\n")).as(Seq("__pos", "__line")))
-      .withColumn("__lkey", md5(trim(col("__line"))))
-    val dup = lines.where(length(trim(col("__line"))) > 0)
-      .groupBy("__lkey").agg(countDistinct(col("__id")).as("__nd"))
-      .where(col("__nd") >= minDocs)
-      .select(col("__lkey"), lit(true).as("__dup"))
-    lines.join(dup, Seq("__lkey"), "left")
-      .groupBy(col("__id"))
-      .agg(
-        count(lit(1)).as("n_lines"),
-        sum(when(col("__dup"), lit(1L)).otherwise(lit(0L))).as("n_dup_lines"),
-        // collect_list skips the nulls `when` leaves for dup lines;
-        // array_sort on (pos, line) structs restores original order
-        md5(concat_ws("\n",
-          transform(
-            array_sort(collect_list(when(col("__dup").isNull,
-              struct(col("__pos"), col("__line"))))),
-            s => s.getField("__line")))).as("cleaned_md5"))
-      .select(col("__id").as(idCol), col("n_lines"), col("n_dup_lines"), col("cleaned_md5"))
   }
 
   /** NEAR-DUP train-set contamination — the fuzzy variant of

@@ -1,6 +1,6 @@
 package graft.schema
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StringType
 
@@ -20,13 +20,15 @@ import org.apache.spark.sql.types.StringType
   * Rules 1–3 are pure metadata (zero data reads). Rule 4 — which the
   * reference implements as a Python set() over fully-collected rows
   * (neo4j_export.py:162-167) — runs distributed in two steps. A screen:
-  * ONE aggregate over all candidate columns at once, carrying each
-  * column's sanitized non-null `count` and a DataSketches HLL estimate of
-  * its distinct count (`hll_sketch_agg` at lgK 12, one binary buffer per
-  * column, map-side mergeable). Then an exact `count_distinct`
-  * confirmation, in original property order, only for columns whose
-  * estimate could plausibly equal their count; the first confirmed one
-  * wins. Never N full scans, never a collect.
+  * ONE pass over all candidate columns at once, carrying each column's
+  * sanitized non-null `count` and a DataSketches HLL estimate of its
+  * distinct count (`hll_sketch_agg` at lgK 12, one binary buffer per
+  * column, map-side mergeable). Then an exact duplicate check, in
+  * original property order, only for columns whose estimate could
+  * plausibly equal their count; the first confirmed one wins. The screen
+  * is observed on the scan that exact-checks the first property, so a
+  * label whose first property is its key costs two jobs and one scan.
+  * Never N full scans, never a collect.
   *
   * The screen is not Spark's built-in HLL++ distinct-count aggregate: at
   * the precision rule 4 needs, that aggregate lays each column's 4,096
@@ -81,36 +83,79 @@ object IdentifierDetector {
   }
 
   /** First property (in original order) whose sanitized non-null values
-    * are all distinct: the sketch screen, then exact confirmations of the
-    * survivors until one holds. */
-  private[schema] def allUniqueColumn(df: DataFrame, properties: Seq[String]): Option[String] =
-    // exact confirmation, first in property order wins (matches ref iteration)
-    screen(df, properties).find { c =>
-      val s = sanitized(df, c)
-      val r = df.agg(count(s).as("n"), count_distinct(s).as("d")).head()
-      r.getLong(0) == r.getLong(1)
+    * are all distinct: the sketch screen, then exact checks of the
+    * survivors until one holds.
+    *
+    * Two jobs for the common case, one scan of the table: the screen
+    * rides the exact check of the first property as an `Observation` on
+    * the same scan, so the shuffle map stage computes both. Each later
+    * survivor costs one more two-job check. Two properties of that plan
+    * are load-bearing:
+    *   - no predicate on the grouping key (say `s.isNotNull`): it pushes
+    *     below the aggregate, and when it empties the map stage (an
+    *     all-missing first property) AQE's empty-relation propagation
+    *     drops the stage that carries the observation;
+    *   - an empty table reports no observed values at all, so a missing
+    *     value reads as 0, which no screen passes. */
+  private[schema] def allUniqueColumn(df: DataFrame, properties: Seq[String]): Option[String] = {
+    if (properties.isEmpty) return None
+    val observed = Observation()
+    val aggs = screenAggs(df, properties)
+    val firstUnique = duplicateGroups(df.observe(observed, aggs.head, aggs.tail: _*),
+      sanitized(df, properties.head)) == 0
+    passing(properties, i => observedLong(observed, screenName(i))).find { c =>
+      if (c == properties.head) firstUnique else duplicateGroups(df, sanitized(df, c)) == 0
     }
+  }
+
+  /** Number of non-null values of `s` that occur more than once, counted
+    * by an observation on a `noop` write: one shuffle, two jobs, nothing
+    * collected. A null key's group counts 0, so no key predicate is
+    * needed (see [[allUniqueColumn]]). */
+  private def duplicateGroups(df: DataFrame, s: Column): Long = {
+    val dups = Observation()
+    df.groupBy(s.as("__k")).agg(count(s).as("__c")).where(col("__c") > 1)
+      .observe(dups, count(lit(1)).as("n"))
+      .write.format("noop").mode("overwrite").save()
+    observedLong(dups, "n")
+  }
+
+  /** An observed count, 0 when the query reported none (an empty input). */
+  private def observedLong(o: Observation, name: String): Long = o.get.get(name) match {
+    case Some(n: Long) => n
+    case _             => 0L
+  }
 
   /** The properties, in original order, that have a sanitized non-null
     * value and whose estimated distinct count is within the acceptance
-    * margin of their non-null count. One aggregate over all of them. */
+    * margin of their non-null count. One aggregate over all of them; the
+    * standalone form of the screen [[allUniqueColumn]] observes. */
   private[schema] def screen(df: DataFrame, properties: Seq[String]): Seq[String] = {
     if (properties.isEmpty) return Nil
-    val aggs = properties.flatMap { c =>
+    val aggs = screenAggs(df, properties)
+    val row = df.agg(aggs.head, aggs.tail: _*).head()
+    passing(properties, row.getLong)
+  }
+
+  /** Alias of the screen's `i`-th value: property `i / 2`'s count at even
+    * `i`, its distinct estimate at odd `i`. */
+  private def screenName(i: Int): String = s"__screen_$i"
+
+  private def screenAggs(df: DataFrame, properties: Seq[String]): Seq[Column] =
+    properties.flatMap { c =>
       val s = sanitized(df, c)
       // hll_sketch_agg takes only int/long/string/binary and skips empty
       // strings, so every type goes through one hashed long; xxhash64(null)
       // is the seed, not null, hence the guard. lgK 12 (~1.6% error) with
       // a 0.8 acceptance margin is ~12 sigma: a genuinely unique column
       // essentially never fails the screen, while clearly non-unique
-      // columns still skip the exact confirmation scan
+      // columns still skip the exact check
       val h = when(s.isNull, lit(null)).otherwise(xxhash64(s))
-      Seq(count(s).as(s"__n_$c"), hll_sketch_estimate(hll_sketch_agg(h, 12)).as(s"__hll_$c"))
-    }
-    val row = df.agg(aggs.head, aggs.tail: _*).head()
+      Seq(count(s), hll_sketch_estimate(hll_sketch_agg(h, 12)))
+    }.zipWithIndex.map { case (a, i) => a.as(screenName(i)) }
+
+  private def passing(properties: Seq[String], value: Int => Long): Seq[String] =
     properties.zipWithIndex.collect {
-      case (c, i) if row.getLong(2 * i) > 0 &&
-        row.getLong(2 * i + 1) >= (row.getLong(2 * i) * 0.8).toLong => c
+      case (c, i) if value(2 * i) > 0 && value(2 * i + 1) >= (value(2 * i) * 0.8).toLong => c
     }
-  }
 }

@@ -25,9 +25,4 @@ object BucketedTables {
   def coLocatedJoin(spark: SparkSession, left: String, right: String,
       key: String): DataFrame =
     spark.table(left).join(spark.table(right), key)
-
-  /** True when the physical plan contains no shuffle exchange — the
-    * property bucketing is meant to buy. */
-  def isShuffleFree(df: DataFrame): Boolean =
-    !df.queryExecution.executedPlan.toString.contains("Exchange hashpartitioning")
 }

@@ -32,11 +32,16 @@ object DatasetBridge {
     * will read `df` again: a localCheckpoint truncates lineage, so the
     * data is unrecoverable after this. Used to demote an oversized
     * staging pin — re-checkpoint to DISK_ONLY first, then free the
-    * memory copy through this. No-op for non-checkpoint plans. */
+    * memory copy through this. No-op for non-checkpoint plans.
+    *
+    * Frees through `SparkContext.unpersistRDD` (`private[spark]`), the
+    * call `RDD.unpersist` makes after it logs a "locally checkpointed,
+    * lineage truncated" WARN for every such RDD: the same blocks and the
+    * same `getPersistentRDDs` entry go, without a WARN per freed pin. */
   def unpersistCheckpoint(df: DataFrame): Unit =
     df.queryExecution.analyzed.foreach {
       case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(blocking = false)
+        lr.rdd.sparkContext.unpersistRDD(lr.rdd.id, blocking = false)
       case _ => ()
     }
 }

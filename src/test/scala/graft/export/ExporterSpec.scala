@@ -2,9 +2,17 @@ package graft.export
 
 import java.nio.file.{Files, Paths}
 import graft.SparkTestBase
-import graft.model.TpchGraph
+import graft.model.{GraphSchema, LabelSchema, PropertyGraph, PropertyMeta, TableGraphMapper, TpchGraph}
+import graft.schema.GraphCatalog
+import org.apache.spark.graft.JobCount
+import org.apache.spark.sql.Row
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import org.scalacheck.{Gen, Prop, Test}
+import org.scalacheck.rng.Seed
+import org.scalacheck.util.Pretty
 
 class ExporterSpec extends SparkTestBase {
+  import ExporterSpec._
 
   private lazy val outDir = {
     val dir = Files.createTempDirectory("graft-export").toString
@@ -176,4 +184,92 @@ class ExporterSpec extends SparkTestBase {
     assert(rows.nonEmpty)
     assert(zips() == before)
   }
+
+  test("string values keep their leading and trailing whitespace in the CSV and on import") {
+    import spark.implicits._
+    val values = Seq("  lead", "trail  ", " both ", "\tTab")
+    val df = values.zipWithIndex.map { case (v, i) => (i.toLong, v) }.toDF("id", "note")
+    val g = PropertyGraph(Map("Padded" -> df), Map.empty, GraphSchema(
+      Seq(LabelSchema("Padded", "id",
+        Seq(PropertyMeta("id", "integer", false), PropertyMeta("note", "string", true)))), Nil))
+    val dir = Files.createTempDirectory("graft-padded").toString
+    GraphExporter.exportAll(g, dir, createZip = false)
+    assert(Files.readString(Paths.get(dir, "Padded.csv")) ==
+      "id,note\n0,  lead\n1,trail  \n2, both \n3,\tTab\n")
+    val back = GraphImporter.fromPackage(spark, dir).nodes("Padded")
+      .orderBy("id").collect().map(_.getString(1)).toSeq
+    assert(back == values)
+  }
+
+  test("an empty-catalog TPC-H load plus exportAll runs one read per table, two jobs per " +
+    "rule-4 label and one write per table, in both CSV modes") {
+    // 7 distinct tables, 6 labels whose first property is their key, and
+    // 6 node + 6 relationship CSVs; the samples are read from the files
+    val (g, jobs) = JobCount(spark.sparkContext) {
+      val g = new TableGraphMapper(TpchGraph.nodes, TpchGraph.edges, GraphCatalog.empty)
+        .load(spark, "/root/testdata/sf0.001")
+      GraphExporter.exportAll(g, Files.createTempDirectory("graft-jobs").toString)
+      g
+    }
+    assert(jobs == 7 + 2 * 6 + 12)
+    // and a distributed export of the same graph: one job per table
+    val (_, distJobs) = JobCount(spark.sparkContext)(GraphExporter.exportAll(g,
+      Files.createTempDirectory("graft-jobs-dist").toString, singleFileCsv = false))
+    assert(distJobs == 12)
+  }
+
+  test("the sample read from the written CSV is buildExports' sniff, in both CSV modes") {
+    val prop = Prop.forAllNoShrink(genTable) { t =>
+      val df = t.toDF(spark)
+      val g = PropertyGraph(Map("T" -> df), Map.empty, GraphSchema(
+        Seq(LabelSchema("T", df.columns.head, Nil)), Nil))
+      val sniffed = GraphExporter.buildExports(g)._1.head.sample
+      val read = Seq(true, false).map { single =>
+        val dir = Files.createTempDirectory("graft-sample").toString
+        CsvPackageWriter.firstRow(CsvPackageWriter.write(df, dir, "T", single), df.columns.toSeq)
+      }
+      Prop(read.forall(_ == sniffed)) :| s"sniffed=$sniffed read=$read table=$t"
+    }
+    val res = Test.check(Test.Parameters.default
+      .withMinSuccessfulTests(40).withWorkers(1).withInitialSeed(Seed(20261019L)), prop)
+    assert(res.passed, Pretty.pretty(res))
+  }
+}
+
+object ExporterSpec {
+
+  /** String values a CSV dialect can get wrong: quotes, separators, line
+    * breaks, the empty string and the literal "NULL" (both sentinels in
+    * the reference), null, padding, a value past univocity's default
+    * 4,096-character column limit, univocity's default comment character
+    * and non-ASCII text. */
+  val genValue: Gen[String] = Gen.frequency(
+    3 -> Gen.alphaNumStr.map(_.take(8)),
+    6 -> Gen.oneOf(null, "", "NULL", "\"", "say \"hi\"", "a,b", ",", "line\nbreak", "cr\rlf\r\n",
+      "\r\n", "  lead", "trail  ", " both ", "\tTab", "'single'", "\"\"",
+      "naïve café", "日本語", "emoji \ud83d\ude00"),
+    1 -> Gen.oneOf("#hash", "# a, b"),
+    1 -> Gen.choose(4000, 6000).map(n => "x" * n))
+
+  /** Rows laid out over explicit partitions, any of which may be empty. */
+  final case class Table(width: Int, parts: Seq[Seq[Seq[String]]]) {
+    def toDF(spark: org.apache.spark.sql.SparkSession): org.apache.spark.sql.DataFrame = {
+      val schema = StructType((0 until width).map(i => StructField(s"c$i", StringType)))
+      val layout = parts.map(_.map(Row.fromSeq))
+      val rdd = spark.sparkContext.parallelize(layout.indices, layout.size)
+        .flatMap(i => layout(i))
+      spark.createDataFrame(rdd, schema)
+    }
+    override def toString: String = parts.map(_.map(_.map(v =>
+      if (v == null) "null" else v.take(12).replace("\n", "\\n").replace("\r", "\\r"))
+      .mkString("[", "|", "]")).mkString("{", " ", "}")).mkString(" ")
+  }
+
+  val genTable: Gen[Table] = for {
+    width <- Gen.choose(1, 3)
+    nParts <- Gen.choose(1, 4)
+    parts <- Gen.listOfN(nParts, Gen.frequency(
+      1 -> Gen.const(Nil),
+      2 -> Gen.choose(1, 4).flatMap(n => Gen.listOfN(n, Gen.listOfN(width, genValue)))))
+  } yield Table(width, parts)
 }

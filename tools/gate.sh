@@ -34,7 +34,14 @@ if grep -rn "\.persist(.*MEMORY_" src/main/scala \
 fi
 
 echo "[gate] 1/4 verify dump @ $SF"
-SPARK_GRAFT_CPUS=${SPARK_GRAFT_CPUS:-32} sbt -batch "runMain graft.Verify $SF $OUT"
+SPARK_GRAFT_CPUS=${SPARK_GRAFT_CPUS:-32} sbt -batch "runMain graft.Verify $SF $OUT" 2>&1 | tee /tmp/graft_gate_verify.log
+# Freed local checkpoints go through DatasetBridge.unpersistCheckpoint,
+# which frees without RDD.unpersist's per-RDD WARN; one of these lines
+# means a release path is back on RDD.unpersist and burying real WARNs.
+if grep -q "was locally checkpointed, its lineage has been truncated" /tmp/graft_gate_verify.log; then
+  echo "[gate] FAIL: a freed local checkpoint logged Spark's lineage-truncated WARN"
+  exit 1
+fi
 
 echo "[gate] 2/4 oracle compare"
 python3 tools/check_oracle.py "$SF" "$OUT"

@@ -113,8 +113,7 @@ object Bench {
         // StageCache serves a cached localCheckpointed frame only while
         // its blocks are persisted, so the sweep costs a re-encode on
         // next use, never a 'Checkpoint block not found'.
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = false))
+        org.apache.spark.sql.graft.DatasetBridge.unpersistAll(spark.sparkContext)
         // untimed GC hint: interpreted-HOF-heavy queries allocate hard,
         // and in a single-JVM 170+-query suite the collector otherwise
         // runs INSIDE later queries' timed reps (measured: dd_setsim_join

@@ -116,7 +116,9 @@ object GraphAnalytics {
     * level first, count FROM MEMORY (fast), and past [[pinRowCeiling]]
     * DEMOTE — re-checkpoint the blocks to DISK_ONLY and free the memory
     * copy via [[org.apache.spark.sql.graft.DatasetBridge
-    * .unpersistCheckpoint]]. The demote pass costs one extra scan
+    * .unpersistCheckpoint]]. The count is one job over the pinned blocks
+    * ([[org.apache.spark.sql.graft.DatasetBridge.checkpointRows]]), so
+    * pin and count take two jobs. The demote pass costs one extra scan
     * exactly when the table is 10× past design volume; below the
     * ceiling (every driver-gate SF and sf1) nothing changes. Returns
     * the pinned frame and its exact row count. NOTE: a localCheckpoint
@@ -124,7 +126,7 @@ object GraphAnalytics {
     * partitioning-advertising cache use persist([[pinLevel]]) instead. */
   private[graft] def pinTwoPhase(df: DataFrame): (DataFrame, Long) = {
     val p0 = df.localCheckpoint(true)
-    val rows = p0.count()
+    val rows = org.apache.spark.sql.graft.DatasetBridge.checkpointRows(p0)
     if (rows <= pinRowCeiling(df.sparkSession)) (p0, rows)
     else {
       val demoted =
@@ -1099,7 +1101,8 @@ object GraphAnalytics {
     * β/(1−αλ_max)·O(1) micro-units and the E-row in-sums run in plain
     * BIGINT ([[hitsDF]]'s mass-accounting argument — overflow needs a
     * hub absorbing > 9.2·10¹² micro-units, i.e. a graph far past the
-    * contract's growth bound). Runs on [[RankLoop]]: a vertex with no
+    * contract's growth bound). Runs on [[RankLoop]], on its driver
+    * backend under [[LocalGraph.EdgeCap]] edge rows: a vertex with no
     * in-edges has x ≡ β exactly, which is the lane's absent-vertex
     * default. */
   def katzCentralityDF(edges: DataFrame, numIter: Int = 6, atten: Long = 4L,
@@ -1122,9 +1125,11 @@ object GraphAnalytics {
     * BIGINT: rank mass concentrates to at most n·10⁶ micro-units, so
     * integral weights up to ~10⁴ leave headroom past 10⁸ vertices; the
     * weight table is the caller's contract (weights are
-    * per-relationship-TYPE here, schema-sized). Runs on [[RankLoop]],
-    * whose guard is width-scaled to 4 here: the weight sums and the
-    * ranks are two V-row broadcast families live at once. */
+    * per-relationship-TYPE here, schema-sized). Runs on [[RankLoop]]:
+    * on its driver backend under [[LocalGraph.EdgeCap]] collapsed edge
+    * pairs, past that distributed with the guard width-scaled to 4: the
+    * weight sums and the ranks are two V-row broadcast families live at
+    * once. */
   def pageRankWeightedDF(edges: DataFrame, numIter: Int = 10, resetProb: Double = 0.15,
       srcCol: String = "src", dstCol: String = "dst", weightCol: String = "w"): DataFrame = {
     val w = col(weightCol).cast("long")
@@ -1285,7 +1290,9 @@ object GraphAnalytics {
     * micro-units. DuckDB sums integers in HUGEINT, so both engines
     * compute the identical exact integers. Runs on [[RankLoop]]: the
     * out-degree is the per-source payload, and a vertex nothing points
-    * at has rank exactly resetMicro, the absent-vertex default. */
+    * at has rank exactly resetMicro, the absent-vertex default. Under
+    * [[LocalGraph.EdgeCap]] edge rows the rounds run on its driver
+    * backend: one collect of the edge pin, no shuffle. */
   def pageRankQuantizedDF(edges: DataFrame, numIter: Int = 10, resetProb: Double = 0.15,
       srcCol: String = "src", dstCol: String = "dst"): DataFrame =
     RankLoop.pageRank(endpoints(edges, srcCol, dstCol), numIter, resetProb)

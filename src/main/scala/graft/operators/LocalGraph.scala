@@ -5,10 +5,10 @@ import org.apache.spark.sql.types._
 
 /** Driver-local CSR graph — the one adjacency every collect-and-replay
   * operator builds: Brandes betweenness, Luby MIS, SSSP/BFS relaxation,
-  * the HyperANF registers and the ANF exact closures. Each replays
-  * exact integer arithmetic over the collected edge list, so the driver
-  * run is bit-identical to its distributed loop, which stays as the
-  * only path past the cap.
+  * the HyperANF registers, the ANF exact closures and the rank family's
+  * driver backend ([[RankLoop]]). Each replays exact integer arithmetic
+  * over the collected edge list, so the driver run is bit-identical to
+  * its distributed loop, which stays as the only path past the cap.
   *
   * Vertices are indexed `0 until numVertices` in ascending vid order
   * (`vids`). The out-neighbors of vertex `i` are
@@ -20,9 +20,15 @@ import org.apache.spark.sql.types._
   *   - ONE `collect()` of the edge frame, and nothing else for edges;
   *   - edges are deduplicated, and parallel weighted edges keep their
   *     minimum weight (the distributed loops' min-collapse);
+  *   - or, with `sumParallel`, every row counts (the rank family's
+  *     `count(1)` and `sum(w)`): a pair's weight is the sum of its rows'
+  *     weights, or its multiplicity (row count) when unweighted, so the
+  *     graph is always weighted;
   *   - `undirected` stores both directions of every edge;
-  *   - rows with a null endpoint or weight are dropped, as the
-  *     distributed equi-joins and `min` drop them;
+  *   - under min-collapse, rows with a null endpoint or weight are
+  *     dropped, as the distributed equi-joins and `min` drop them; under
+  *     sum-collapse such a row makes the graph `None`, since dropping it
+  *     would change every count it belongs to;
   *   - self-loops are kept: callers that exclude them filter first.
   */
 final class LocalGraph private (
@@ -84,25 +90,32 @@ object LocalGraph {
 
   /** The edge frame's first two columns as a [[LocalGraph]], or `None`
     * when `directedRows > cap`, `cap <= 0` (the hook specs use to force
-    * the distributed loop), or an endpoint or extra-vid column is not
-    * Byte/Short/Int/Long.
+    * the distributed loop), or an endpoint or extra-vid column (under
+    * `sumParallel`, also the weight column) is not Byte/Short/Int/Long.
     *
     * @param directedRows the caller's bound on the edge frame's rows;
     *   the gate never executes the lineage
     * @param weightCol integral weight column of `edges`, if weighted
     * @param extraVids frame whose first column names vertices to keep
     *   even when isolated (SSSP sources); their indices are [[LocalGraph.extra]]
+    * @param sumParallel sum-collapse instead of min-collapse (see the
+    *   class contract); also `None` when a row has a null
     */
   def collect(edges: DataFrame, directedRows: Long, cap: Long,
       undirected: Boolean, weightCol: Option[String] = None,
-      extraVids: Option[DataFrame] = None): Option[LocalGraph] = {
+      extraVids: Option[DataFrame] = None, sumParallel: Boolean = false): Option[LocalGraph] = {
+    val wIdx = weightCol.map(edges.schema.fieldIndex)
     val types = edges.schema.take(2).map(_.dataType) ++
       extraVids.map(_.schema.head.dataType)
-    if (cap <= 0 || directedRows > cap || !types.forall(rank(_) >= 0))
+    val wIntegral = !sumParallel || wIdx.forall(i => rank(edges.schema(i).dataType) >= 0)
+    if (cap <= 0 || directedRows > cap || !types.forall(rank(_) >= 0) || !wIntegral)
       return None
-    val wIdx = weightCol.map(edges.schema.fieldIndex)
-    val rows = edges.collect()
-      .filter(r => !r.isNullAt(0) && !r.isNullAt(1) && wIdx.forall(!r.isNullAt(_)))
+    def complete(r: Row): Boolean =
+      !r.isNullAt(0) && !r.isNullAt(1) && wIdx.forall(!r.isNullAt(_))
+    val all = edges.collect()
+    val rows = if (!sumParallel) all.filter(complete)
+      else if (all.forall(complete)) all
+      else return None
     def long(r: Row, i: Int): Long = r.getAs[Number](i).longValue()
     val extraRaw = extraVids.fold(Array.emptyLongArray)(x =>
       x.select(x.columns.head).collect().filter(!_.isNullAt(0)).map(long(_, 0)))
@@ -115,12 +128,12 @@ object LocalGraph {
     val vids = java.util.Arrays.copyOf(ends, n)
     def idx(v: Long): Int = java.util.Arrays.binarySearch(vids, v)
     val (a, b) = (us.map(idx), vs.map(idx))
-    val w = wIdx.map { i =>
-      val ws = rows.map(long(_, i))
-      if (undirected) ws ++ ws else ws
-    }
+    val w = wIdx.map(i => rows.map(long(_, i)))
+      .orElse(if (sumParallel) Some(Array.fill(rows.length)(1L)) else None)
+      .map(ws => if (undirected) ws ++ ws else ws)
     Some(build(vids, if (undirected) a ++ b else a, if (undirected) b ++ a else b,
-      w, extraRaw.map(idx).sorted.distinct, types.maxBy(rank)))
+      w, extraRaw.map(idx).sorted.distinct, types.maxBy(rank),
+      if (sumParallel) Math.addExact(_: Long, _: Long) else math.min(_: Long, _: Long)))
   }
 
   private def rank(t: DataType): Int = t match {
@@ -140,10 +153,11 @@ object LocalGraph {
 
   /** CSR from index-space edge arrays: an LSD radix sort (stable
     * counting sorts by dst, then by src) orders the edges by (src, dst)
-    * in O(V + E), then one scan drops duplicates, keeping the minimum
-    * weight of each run. */
+    * in O(V + E), then one scan drops duplicates, folding each run's
+    * weights with `merge` (min, or an exact sum). */
   private def build(vids: Array[Long], src: Array[Int], dst: Array[Int],
-      w: Option[Array[Long]], extra: Array[Int], vidType: DataType): LocalGraph = {
+      w: Option[Array[Long]], extra: Array[Int], vidType: DataType,
+      merge: (Long, Long) => Long = math.min(_: Long, _: Long)): LocalGraph = {
     val n = vids.length
     def stableSortBy(key: Array[Int], in: Array[Int]): Array[Int] = {
       val start = new Array[Int](n + 1)
@@ -161,7 +175,7 @@ object LocalGraph {
     var lastSrc = -1
     order.foreach { e =>
       if (lastSrc == src(e) && nbrs(len - 1) == dst(e)) {
-        for (ws <- weights; wIn <- w) ws(len - 1) = math.min(ws(len - 1), wIn(e))
+        for (ws <- weights; wIn <- w) ws(len - 1) = merge(ws(len - 1), wIn(e))
       } else {
         lastSrc = src(e)
         nbrs(len) = dst(e)

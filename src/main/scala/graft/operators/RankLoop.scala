@@ -1,27 +1,47 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, functions}
+import java.math.BigInteger
+
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession, functions}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.DatasetBridge
+import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 
 import GraphAnalytics.{maxBroadcastRows, maxBroadcastVerticesDyn, persistPinnedTwoPhase,
   pinLevel, pinTwoPhase}
 
-/** The distributed kernel of the fixed-point rank family: quantized,
-  * personalized and weighted PageRank, Katz and HITS. A round is the
-  * Pregelix superstep — a join of the previous scores against the edge
-  * list plus a group-by sum — with the physical plan picked once from the
-  * vertex count. Each operator supplies only its per-source payload, its
-  * contribution and update expressions, its absent-vertex default and
-  * its broadcast guard width; everything else lives here once.
+/** The kernel of the fixed-point rank family: quantized, personalized
+  * and weighted PageRank, Katz and HITS. A round is the Pregelix
+  * superstep — a join of the previous scores against the edge list plus
+  * a group-by sum — with the physical plan picked once per call. Each
+  * operator supplies only its per-source payload, its contribution and
+  * update expressions, its absent-vertex default and its broadcast guard
+  * width; everything else lives here once.
   *
   * Scores are micro-units (value × 10⁶) in BIGINT and every step is
   * integer arithmetic, so the result is bit-identical across plans,
-  * partitionings and engines, and the fixed rounds replay as chained CTEs
-  * in the DuckDB oracle.
+  * partitionings, backends and engines, and the fixed rounds replay as
+  * chained CTEs in the DuckDB oracle.
   *
-  * Staging ([[stage]]):
+  * Backends. The dense single-lane operators (PageRank, weighted
+  * PageRank, Katz) run on the DRIVER when the pinned edge rows fit
+  * `localCap` ([[LocalGraph.EdgeCap]] by default; `<= 0` forces the
+  * distributed loop, the spec hook): the count the edge pin takes
+  * anyway gates it, the pin is collected once into a sum-collapsed
+  * [[LocalGraph]] and freed, and the rounds are a plain-array loop over
+  * the lane's [[DriverLane]] — the same integer steps as its SQL, with
+  * `Math.multiplyExact`/`addExact` where the SQL runs in BIGINT (ANSI
+  * overflow throws there) and an exact product where it runs in
+  * DECIMAL(38,0). Sum-collapse, not the replays' min-collapse: every
+  * edge row counts, so a pair carries its multiplicity (one `deg` unit
+  * and one contribution per row) or, for weighted PageRank, its weight
+  * sum. The output is a LocalRelation of the same rows, types and value
+  * classes as the distributed fill, holding neither the collected rows
+  * nor the graph. Input with a null endpoint or weight, non-integral
+  * vids, or past the cap runs distributed, as PPR and HITS always do.
+  *
+  * Distributed staging:
   *   - the edge pin, two-phase (DISK_ONLY past the heap ceiling): a
   *     localCheckpoint of the input ([[GraphAnalytics.pinTwoPhase]]), or
   *     for weighted PageRank the parallel-edge collapse riding a
@@ -108,9 +128,20 @@ private[operators] object RankLoop {
       update: DataFrame => DataFrame, rescale: Option[DataFrame => DataFrame] = None,
       backward: Boolean = false)
 
+  /** A lane's contribution: `apply(score, w, out)` is what an edge pair
+    * of weight `w` (its row multiplicity, or its weight sum) carries from
+    * a sender whose out-pairs weigh `out` in total (its `count(1)` out-
+    * degree, or its `sum(w)`). */
+  trait Contrib { def apply(score: Long, w: Long, out: Long): Long }
+
+  /** The driver twin of a dense [[Lane]]'s SQL: `contrib` and `update`
+    * (in-sum to score) over Longs, step for step. The lane's default
+    * stays the score of a vertex nothing points at. */
+  final case class DriverLane(contrib: Contrib, update: Long => Long)
+
   /** A staged graph: the `hash(dst)` cache, the vertex set and the
     * broadcast decision. */
-  final class Staged private[RankLoop] (pin: DataFrame, pinIsCheckpoint: Boolean,
+  final class Staged private[RankLoop] (pin: DataFrame, sumWeights: Boolean,
       sources: DataFrame, cache: DataFrame, level: StorageLevel,
       vertices: DataFrame, val vertexCount: Long, broadcast: Boolean) {
 
@@ -173,7 +204,7 @@ private[operators] object RankLoop {
       // (or the pin itself); a pin-derived cache is freed with the pin
       for (c <- bySrc.toSeq :+ cache if c ne pin)
         if (broadcast) c.unpersist(blocking = false) else DatasetBridge.unpersistCheckpoint(c)
-      if (pinIsCheckpoint) DatasetBridge.unpersistCheckpoint(pin) else pin.unpersist(blocking = false)
+      freePin(pin, sumWeights)
       DatasetBridge.unpersistCheckpoint(sources)
     }
   }
@@ -186,13 +217,23 @@ private[operators] object RankLoop {
     * count. `ceiling` is the broadcast ceiling before width scaling. */
   def stage(edges: DataFrame, width: Int, payload: Option[Column] = None,
       sumWeights: Boolean = false, pinVertices: Boolean = true,
-      ceiling: Long = maxBroadcastVerticesDyn): Staged = {
+      ceiling: Long = maxBroadcastVerticesDyn): Staged =
+    stagePinned(pinEdges(edges, sumWeights), width, payload, sumWeights, pinVertices, ceiling)
+
+  /** The edge pin and its exact row count. */
+  private def pinEdges(edges: DataFrame, sumWeights: Boolean): (DataFrame, Long) =
+    if (sumWeights) persistPinnedTwoPhase(edges.repartition(col("dst"))
+      .groupBy("src", "dst").agg(sum(col("w")).as("w")))
+    else pinTwoPhase(edges)
+
+  private def freePin(pin: DataFrame, sumWeights: Boolean): Unit =
+    if (sumWeights) pin.unpersist(blocking = false) else DatasetBridge.unpersistCheckpoint(pin)
+
+  private def stagePinned(pinned: (DataFrame, Long), width: Int, payload: Option[Column],
+      sumWeights: Boolean, pinVertices: Boolean, ceiling: Long): Staged = {
     val cap = maxBroadcastRows(ceiling, width)
-    val (pin, eRows) =
-      if (sumWeights) persistPinnedTwoPhase(edges.repartition(col("dst"))
-        .groupBy("src", "dst").agg(sum(col("w")).as("w")))
-      else pinTwoPhase(edges)
-    val level = pinLevel(edges.sparkSession, eRows)
+    val (pin, eRows) = pinned
+    val level = pinLevel(pin.sparkSession, eRows)
     val sources = payload.fold(pin.select(col("src")).dropDuplicates("src"))(
       pin.groupBy("src").agg(_)).localCheckpoint(true)
     val nSources = sources.count()
@@ -218,8 +259,69 @@ private[operators] object RankLoop {
     val useBroadcast = n <= cap
     val narrowBand = srcFits && !useBroadcast
     if (narrowBand) staged.unpersist(blocking = false)
-    new Staged(pin, !sumWeights, sources, if (narrowBand) fallback() else staged,
+    new Staged(pin, sumWeights, sources, if (narrowBand) fallback() else staged,
       level, vertices, n, useBroadcast)
+  }
+
+  /** One dense lane from the uniform start, `rounds` rounds, filled to
+    * every vertex as (vid, `name`): on the driver when the pinned edge
+    * rows fit `localCap` and the graph has a driver form, else on the
+    * distributed kernel with the same pin. */
+  private def dense(edges: DataFrame, width: Int, payload: Option[Column], sumWeights: Boolean,
+      ceiling: Long, localCap: Long, rounds: Int, name: String)(lane: Lane,
+      driver: DriverLane): DataFrame = {
+    require(rounds >= 1, s"a rank loop needs a round, got $rounds")
+    val pinned @ (pin, eRows) = pinEdges(edges, sumWeights)
+    LocalGraph.collect(pin, eRows, localCap, undirected = false,
+        weightCol = if (sumWeights) Some("w") else None, sumParallel = true) match {
+      case Some(g) =>
+        freePin(pin, sumWeights)
+        onDriver(edges.sparkSession, g, rounds, driver, lane.default.get, name)
+      case None =>
+        val g = stagePinned(pinned, width, payload, sumWeights, pinVertices = true, ceiling)
+        val Seq(scores) = g.iterate(rounds)(lane)
+        g.fill((scores, lane.default.get, name))
+    }
+  }
+
+  /** The driver backend: [[Staged.iterate]] and [[Staged.fill]] for one
+    * dense lane over a sum-collapsed graph. A vertex nothing points at
+    * takes `default`, as a vertex absent from the in-sums does. */
+  private def onDriver(spark: SparkSession, g: LocalGraph, rounds: Int, driver: DriverLane,
+      default: Long, name: String): DataFrame = {
+    val DriverLane(contrib, update) = driver
+    val (n, offsets, nbrs, w) = (g.numVertices, g.offsets, g.nbrs, g.weights.get)
+    val out = Array.tabulate(n)(i =>
+      (offsets(i) until offsets(i + 1)).foldLeft(0L)((s, j) => Math.addExact(s, w(j))))
+    val reached = new Array[Boolean](n)
+    nbrs.foreach(reached(_) = true)
+    var score = Array.fill(n)(Micro)
+    for (_ <- 1 to rounds) {
+      val in = new Array[Long](n)
+      var i = 0
+      while (i < n) {
+        var j = offsets(i)
+        while (j < offsets(i + 1)) {
+          in(nbrs(j)) = Math.addExact(in(nbrs(j)), contrib(score(i), w(j), out(i)))
+          j += 1
+        }
+        i += 1
+      }
+      score = Array.tabulate(n)(v => if (reached(v)) update(in(v)) else default)
+    }
+    DatasetBridge.localRelation(spark,
+      StructType(Seq(StructField("vid", g.vidType), StructField(name, DoubleType))),
+      (0 until n).map(i => Row(g.vid(i), score(i).toDouble / Micro.toDouble)))
+  }
+
+  /** a·b div d as the DECIMAL(38,0) product and `div` compute it: the
+    * product exact, the quotient truncated toward zero, an error past
+    * BIGINT. */
+  private def mulDiv(a: Long, b: Long, d: Long): Long = {
+    val lo = a * b
+    if (Math.multiplyHigh(a, b) == (lo >> 63)) lo / d
+    else BigInteger.valueOf(a).multiply(BigInteger.valueOf(b))
+      .divide(BigInteger.valueOf(d)).longValueExact()
   }
 
   /** The damped V-row update r = reset·1[v ∈ S] + (1 − reset)·in_sum, the
@@ -230,16 +332,19 @@ private[operators] object RankLoop {
       s"CAST(coalesce(CAST(in_sum AS DECIMAL(38,0)), 0) * ${Micro - resetMicro} div $Micro AS BIGINT)"))
       .as("score"))
 
+  /** [[damped]] over Longs, with the uniform teleport `reset`. */
+  private def dampedDriver(inSum: Long, resetMicro: Long): Long =
+    Math.addExact(resetMicro, mulDiv(inSum, Micro - resetMicro, Micro))
+
   private def resetMicro(resetProb: Double): Long = math.round(resetProb * Micro)
 
   /** [[GraphAnalytics.pageRankQuantizedDF]] over (src, dst). */
   def pageRank(edges: DataFrame, numIter: Int, resetProb: Double,
-      ceiling: Long = maxBroadcastVerticesDyn): DataFrame = {
+      ceiling: Long = maxBroadcastVerticesDyn, localCap: Long = LocalGraph.EdgeCap): DataFrame = {
     val reset = resetMicro(resetProb)
-    val g = stage(edges, 2, Some(count(lit(1)).as("deg")), ceiling = ceiling)
-    val Seq(ranks) = g.iterate(numIter)(
-      Lane(s => s"$s div deg", Some(reset), damped(_, reset, lit(reset))))
-    g.fill((ranks, reset, "rank"))
+    dense(edges, 2, Some(count(lit(1)).as("deg")), sumWeights = false, ceiling, localCap,
+      numIter, "rank")(Lane(s => s"$s div deg", Some(reset), damped(_, reset, lit(reset))),
+      DriverLane((s, m, deg) => Math.multiplyExact(m, s / deg), dampedDriver(_, reset)))
   }
 
   /** [[GraphAnalytics.personalizedPageRankDF]] over (src, dst): the
@@ -264,23 +369,20 @@ private[operators] object RankLoop {
 
   /** [[GraphAnalytics.pageRankWeightedDF]] over (src, dst, w), w ≥ 1. */
   def weighted(edges: DataFrame, numIter: Int, resetProb: Double,
-      ceiling: Long = maxBroadcastVerticesDyn): DataFrame = {
+      ceiling: Long = maxBroadcastVerticesDyn, localCap: Long = LocalGraph.EdgeCap): DataFrame = {
     val reset = resetMicro(resetProb)
-    val g = stage(edges, 4, Some(sum(col("w")).as("wsum")), sumWeights = true,
-      ceiling = ceiling)
-    val Seq(ranks) = g.iterate(numIter)(
-      Lane(s => s"$s * w div wsum", Some(reset), damped(_, reset, lit(reset))))
-    g.fill((ranks, reset, "rank"))
+    dense(edges, 4, Some(sum(col("w")).as("wsum")), sumWeights = true, ceiling, localCap,
+      numIter, "rank")(Lane(s => s"$s * w div wsum", Some(reset), damped(_, reset, lit(reset))),
+      DriverLane((s, w, wsum) => Math.multiplyExact(s, w) / wsum, dampedDriver(_, reset)))
   }
 
   /** [[GraphAnalytics.katzCentralityDF]] over (src, dst). */
   def katz(edges: DataFrame, numIter: Int, atten: Long,
-      ceiling: Long = maxBroadcastVerticesDyn): DataFrame = {
-    val g = stage(edges, 3, ceiling = ceiling)
-    val Seq(x) = g.iterate(numIter)(Lane(identity, Some(Micro),
-      _.select(col("vid"), (lit(Micro) + expr(s"in_sum div $atten")).as("score"))))
-    g.fill((x, Micro, "katz"))
-  }
+      ceiling: Long = maxBroadcastVerticesDyn, localCap: Long = LocalGraph.EdgeCap): DataFrame =
+    dense(edges, 3, None, sumWeights = false, ceiling, localCap, numIter, "katz")(
+      Lane(identity, Some(Micro),
+        _.select(col("vid"), (lit(Micro) + expr(s"in_sum div $atten")).as("score"))),
+      DriverLane((s, m, _) => Math.multiplyExact(m, s), in => Math.addExact(Micro, in / atten)))
 
   /** [[GraphAnalytics.hitsDF]] over (src, dst): a hub lane over out-edges
     * and an authority lane over in-edges, each L1-normalized to mass

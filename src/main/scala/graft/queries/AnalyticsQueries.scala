@@ -14,12 +14,15 @@ import org.apache.spark.sql.functions._
   */
 object AnalyticsQueries {
 
-  /** Quantized DataFrame PageRank (10 rounds): per-round 6-decimal
-    * quantization + decimal-exact in-sums make the result reproducible
-    * across engines, so the fixed rounds replay as chained CTEs in the
-    * oracle — the same technique as g_label_propagation. Agreement with
-    * GraphX staticPageRank is spec-checked; the GraphX and
-    * unquantized-DF operators remain available. */
+  /** Quantized PageRank (10 rounds,
+    * [[GraphAnalytics.pageRankQuantizedDF]]): ranks are BIGINT
+    * micro-units and every step is integer arithmetic, so the result is
+    * reproducible across engines and backends, and the fixed rounds
+    * replay as chained CTEs in the oracle — the same technique as
+    * g_label_propagation. Under [[LocalGraph.EdgeCap]] edge rows the
+    * rounds run on the driver, past it as a distributed loop. Agreement
+    * with GraphX staticPageRank ([[GraphAnalytics.pageRank]], the only
+    * other PageRank operator) is spec-checked. */
   def pagerank(s: SparkSession, dir: String): DataFrame = {
     val (edges, labels) = GraphAnalytics.unifiedEdges(TpchGraph.load(s, dir))
     GraphAnalytics.decode(

@@ -44,4 +44,23 @@ object DatasetBridge {
         lr.rdd.sparkContext.unpersistRDD(lr.rdd.id, blocking = false)
       case _ => ()
     }
+
+  /** Row count of a locally checkpointed DataFrame, read from its
+    * blocks in one job; `Dataset.count` plans an aggregate whose
+    * exchange adaptive execution runs as a second job. Other plans
+    * count through `Dataset.count`. */
+  def checkpointRows(df: DataFrame): Long = df.queryExecution.analyzed match {
+    case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.count()
+    case _ => df.count()
+  }
+
+  /** Frees every persistent RDD of `sc` — the sweep between independent
+    * queries — through `SparkContext.unpersistRDD`, as
+    * [[unpersistCheckpoint]] does, so a locally checkpointed RDD logs no
+    * "lineage truncated" WARN. Each RDD keeps its storage level, which
+    * only matters to a caller that reads a swept frame again: a cached
+    * Dataset then re-caches its blocks, and a swept checkpoint fails
+    * either way. */
+  def unpersistAll(sc: org.apache.spark.SparkContext): Unit =
+    sc.getPersistentRDDs.keys.foreach(sc.unpersistRDD(_, blocking = false))
 }

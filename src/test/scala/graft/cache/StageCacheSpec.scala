@@ -4,14 +4,20 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
 
 import graft.{SparkEntry, SparkTestBase, Tables}
 import graft.operators.{Bpe, GraphAnalytics, Similarity}
+import org.apache.logging.log4j.{Level, LogManager}
+import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+import org.apache.logging.log4j.core.appender.AbstractAppender
+import org.apache.logging.log4j.core.config.Property
+import org.apache.logging.log4j.core.layout.PatternLayout
 import org.apache.spark.graft.JobCount
+import org.apache.spark.sql.graft.DatasetBridge
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** StageCache on a scratch copy of sf0.001: a corpus rewritten under the
-  * same path is never served stale, sessions do not share entries, an
-  * unpersist sweep cannot break a cached checkpointed frame, and an
-  * unchanged input hits. */
+  * same path is never served stale, sessions do not share entries, the
+  * Bench unpersist sweep cannot break a cached checkpointed frame and
+  * logs no WARN for it, and an unchanged input hits. */
 class StageCacheSpec extends SparkTestBase {
 
   private val Source = Paths.get("/root/testdata/sf0.001")
@@ -123,9 +129,41 @@ class StageCacheSpec extends SparkTestBase {
   corpusTest("cached checkpointed code tables survive a Bench-style unpersist sweep") { dir =>
     val keys = Seq("ss_pq_topk", "ss_ivfpq_topk")
     val before = keys.map(k => sorted(run(k, dir)))
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+    DatasetBridge.unpersistAll(spark.sparkContext)
     val after = keys.map(k => sorted(run(k, dir)))
     assert(after == before)
+  }
+
+  /** The WARN lines Spark logs while `body` runs. */
+  private def warnsDuring(body: => Unit): Seq[String] = {
+    val lines = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val catcher = new AbstractAppender("graft-warn-catcher", null,
+        PatternLayout.createDefaultLayout(), false, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLevel.isMoreSpecificThan(Level.WARN)) lines.add(e.getMessage.getFormattedMessage)
+    }
+    catcher.start()
+    val root = LogManager.getContext(false).asInstanceOf[LoggerContext].getConfiguration.getRootLogger
+    root.addAppender(catcher, Level.WARN, null)
+    try body finally root.removeAppender(catcher.getName)
+    lines.toArray(Array.empty[String]).toSeq
+  }
+
+  private val Truncated = "was locally checkpointed, its lineage has been truncated"
+
+  test("the Bench sweep frees local checkpoints without a lineage-truncated WARN") {
+    val pins = Seq(spark.range(100).selectExpr("id * 2 AS x").localCheckpoint(true),
+      spark.range(100).selectExpr("id * 3 AS x").persist())
+    pins.foreach(_.count())
+    // the catcher sees the WARN when a checkpoint is freed by RDD.unpersist
+    val control = spark.range(10).toDF().localCheckpoint(true)
+    val controlRdd = DatasetBridge.analyzedPlan(control)
+      .collectFirst { case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd }.get
+    assert(warnsDuring(controlRdd.unpersist(blocking = true)).exists(_.contains(Truncated)))
+    assert(spark.sparkContext.getPersistentRDDs.size >= 2)
+    val warns = warnsDuring(DatasetBridge.unpersistAll(spark.sparkContext))
+    assert(!warns.exists(_.contains(Truncated)), warns.mkString("\n"))
+    assert(spark.sparkContext.getPersistentRDDs.isEmpty)
   }
 
   corpusTest("an unchanged input hits: the warm call runs fewer jobs") { dir =>

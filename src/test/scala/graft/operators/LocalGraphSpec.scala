@@ -46,6 +46,25 @@ class LocalGraphSpec extends SparkTestBase {
     assert(u.weights.get.toSeq == Seq(3L, 3L, 5L, 5L))
   }
 
+  test("sum-collapse: parallel rows sum their weights or count; a null row gives None") {
+    val df = Seq[(java.lang.Long, java.lang.Long, java.lang.Long)](
+      (1L, 2L, 7L), (1L, 2L, 3L), (2L, 3L, 5L), (1L, 2L, 4L), (2L, 2L, 1L))
+      .toDF("src", "dst", "w")
+    def sums(df: org.apache.spark.sql.DataFrame, w: Option[String]) =
+      LocalGraph.collect(df, df.count(), LocalGraph.EdgeCap, undirected = false,
+        weightCol = w, sumParallel = true)
+    val g = sums(df, Some("w")).get
+    assert(edgesOf(g) == Seq((1L, 2L), (2L, 2L), (2L, 3L)))
+    assert(g.weights.get.toSeq == Seq(14L, 1L, 5L))
+    assert(sums(df.select("src", "dst"), None).get.weights.get.toSeq == Seq(3L, 1L, 1L))
+    val nulls = Seq[(java.lang.Long, java.lang.Long, java.lang.Long)](
+      (1L, 2L, 1L), (2L, 3L, null)).toDF("src", "dst", "w")
+    assert(sums(nulls, Some("w")).isEmpty)
+    assert(sums(nulls.select("src", "dst"), None).isDefined)
+    assert(sums(nulls.select(col("src"), col("w").as("dst")), None).isEmpty)
+    assert(sums(df.select(col("src"), col("dst"), col("w").cast("double")), Some("w")).isEmpty)
+  }
+
   test("extra vids join as isolated vertices and widen the vid type") {
     val g = collect(Seq((5, 6)).toDF("src", "dst"), undirected = true,
       extraVids = Some(Seq(9L, 5L, 9L, 1L).toDF("vid")))

@@ -5,7 +5,9 @@ import org.apache.spark.sql.functions._
 /** Every [[LocalGraph]] replay against its distributed loop on random
   * graphs: the same schema (names and types) and the same rows. The
   * distributed side is forced through each operator's spec hook —
-  * `localStateCap = 0`, or `collectStats = true` for MIS. */
+  * `localStateCap = 0`, or `collectStats = true` for MIS. The rank
+  * family's sum-collapse is checked against a Spark `groupBy` here; its
+  * driver backend is checked in [[RankLoopSpec]]. */
 class LocalReplaySpec extends RandomGraphs {
 
   test("betweenness: local Brandes ≡ distributed loop") {
@@ -44,6 +46,25 @@ class LocalReplaySpec extends RandomGraphs {
         rows(GraphAnalytics.ssspDistancesWithStats(e.withColumn("__unit_w", lit(1L)),
           g.sourceDf, 3, weightCol = "__unit_w", collectStats = false,
           unitWeight = true, localStateCap = 0L)._1), g)
+    }
+  }
+
+  test("sum-collapse: per-pair multiplicities and weight sums ≡ a Spark groupBy") {
+    check("sum-collapse") { g =>
+      val undirected = g.edges.size % 2 == 0
+      val e = if (undirected) g.df.unionAll(g.df.select(col("dst"), col("src"), col("w")))
+        else g.df
+      val want = e.groupBy("src", "dst").agg(count(lit(1)), sum(col("w"))).collect()
+        .map(r => ((r.get(0).toString.toLong, r.get(1).toString.toLong),
+          (r.getLong(2), r.getLong(3)))).toMap
+      def pairs(w: Option[String]): Map[(Long, Long), Long] = {
+        val lg = LocalGraph.collect(g.df, g.edges.size, LocalGraph.EdgeCap, undirected,
+          weightCol = w, sumParallel = true).get
+        lg.vids.indices.flatMap(i => (lg.offsets(i) until lg.offsets(i + 1))
+          .map(j => (lg.vids(i), lg.vids(lg.nbrs(j))) -> lg.weights.get(j))).toMap
+      }
+      same(pairs(None), want.map { case (k, v) => k -> v._1 }, g) &&
+        same(pairs(Some("w")), want.map { case (k, v) => k -> v._2 }, g)
     }
   }
 

@@ -39,10 +39,10 @@ trait RandomGraphs extends SparkTestBase {
   } yield RandomGraph(edges, vidType, sources, sourceType)
 
   /** Schema (names and types) and sorted rows, each value tagged with
-    * its class. */
+    * its class (a null with none). */
   protected def rows(df: DataFrame): (Seq[(String, String)], Seq[String]) =
     (df.schema.map(f => (f.name, f.dataType.simpleString)),
-      df.collect().map(_.toSeq.map(v => s"$v:${v.getClass.getSimpleName}")
+      df.collect().map(_.toSeq.map(v => s"$v:${Option(v).fold("")(_.getClass.getSimpleName)}")
         .mkString(",")).toSeq.sorted)
 
   /** Checks `prop` over 20 random graphs with a fixed seed. */

@@ -1,13 +1,19 @@
 package graft.operators
 
+import graft.model.TpchGraph
+import org.apache.spark.graft.JobCount
 import org.apache.spark.sql.DataFrame
 import org.scalacheck.Prop
 
 /** The five [[RankLoop]] operators on random graphs: the three kernel
   * branches (broadcast, narrow band, shuffle) return identical rows, and
-  * those rows equal a plain-Scala fixed-point reference. */
+  * those rows equal a plain-Scala fixed-point reference. For the dense
+  * operators (PageRank, weighted PageRank, Katz) the branches run with
+  * `localCap = 0`, and the driver backend, under its default cap, is a
+  * fourth branch that must return the same rows. */
 class RankLoopSpec extends RandomGraphs {
   import RankLoopSpec._
+  import spark.implicits._
 
   private def values(df: DataFrame): Seq[(Long, Seq[Double])] =
     df.collect().map(r => (r.get(0).toString.toLong,
@@ -17,16 +23,18 @@ class RankLoopSpec extends RandomGraphs {
     * one whose width-scaled cap is exactly the distinct-source count (the
     * narrow band, whenever some vertex has no out-edge) and 0 (shuffle,
     * unless the graph is empty) — and compares their rows with each
-    * other and with `reference`'s micro-units. */
-  private def agree(g: RandomGraph, width: Int, reference: Map[Long, Seq[Long]])(
-      run: Long => DataFrame): Prop = {
+    * other, with `driver`'s when given, and with `reference`'s
+    * micro-units. */
+  private def agree(g: RandomGraph, width: Int, reference: Map[Long, Seq[Long]],
+      driver: Option[() => DataFrame] = None)(run: Long => DataFrame): Prop = {
     val nSrc = g.edges.map(_._1).distinct.size.toLong
     if (nSrc < g.edges.flatMap(e => Seq(e._1, e._2)).distinct.size) narrowGraphs += 1
     val dfs = Seq(GraphAnalytics.maxBroadcastVerticesDyn, (nSrc * width + 1) / 2, 0L).map(run)
     val Seq(bc, narrow, shuffle) = dfs.map(rows)
     val want = reference.toSeq.sortBy(_._1)
       .map { case (v, xs) => (v + g.base, xs.map(_.toDouble / 1e6)) }
-    same(bc, narrow, g) && same(bc, shuffle, g) && same(values(dfs.head), want, g)
+    driver.fold(Prop.passed)(d => same(rows(d()), bc, g)) &&
+      same(bc, narrow, g) && same(bc, shuffle, g) && same(values(dfs.head), want, g)
   }
 
   private var narrowGraphs = 0
@@ -46,8 +54,9 @@ class RankLoopSpec extends RandomGraphs {
   test("pageRankQuantizedDF: broadcast ≡ narrow band ≡ shuffle ≡ reference") {
     checkBranches("pagerank") { g =>
       val e = g.df.select("src", "dst")
-      agree(g, 2, pageRank(edgesOf(g), rounds(g), 150000L))(
-        c => RankLoop.pageRank(e, rounds(g), 0.15, c))
+      agree(g, 2, pageRank(edgesOf(g), rounds(g), 150000L),
+        Some(() => RankLoop.pageRank(e, rounds(g), 0.15)))(
+        c => RankLoop.pageRank(e, rounds(g), 0.15, c, localCap = 0L))
     }
   }
 
@@ -63,8 +72,9 @@ class RankLoopSpec extends RandomGraphs {
     checkBranches("weighted pagerank") { g =>
       val e = g.df.selectExpr("src", "dst", "w + 1 AS w")
       val weighted = g.edges.map { case (a, b, w) => (a, b, w + 1) }
-      agree(g, 4, weightedPageRank(weighted, rounds(g), 150000L))(
-        c => RankLoop.weighted(e, rounds(g), 0.15, c))
+      agree(g, 4, weightedPageRank(weighted, rounds(g), 150000L),
+        Some(() => RankLoop.weighted(e, rounds(g), 0.15)))(
+        c => RankLoop.weighted(e, rounds(g), 0.15, c, localCap = 0L))
     }
   }
 
@@ -72,8 +82,9 @@ class RankLoopSpec extends RandomGraphs {
     checkBranches("katz") { g =>
       val e = g.df.select("src", "dst")
       val atten = 2L + g.edges.size % 3
-      agree(g, 3, katz(edgesOf(g), rounds(g), atten))(
-        c => RankLoop.katz(e, rounds(g), atten, c))
+      agree(g, 3, katz(edgesOf(g), rounds(g), atten),
+        Some(() => RankLoop.katz(e, rounds(g), atten)))(
+        c => RankLoop.katz(e, rounds(g), atten, c, localCap = 0L))
     }
   }
 
@@ -83,6 +94,36 @@ class RankLoopSpec extends RandomGraphs {
       agree(g, 2, hits(edgesOf(g), rounds(g)))(c => RankLoop.hits(e, rounds(g), c))
     }
   }
+
+  test("null endpoints or weights take the distributed loop under the cap") {
+    // a null row has no driver form: sum-collapse would have to drop it
+    // from every count it belongs to
+    val e = Seq[(Option[Int], Option[Int], Option[Long])]((Some(1), Some(2), Some(1L)),
+      (Some(1), None, Some(2L)), (None, Some(2), Some(1L)), (Some(2), Some(3), None),
+      (Some(3), Some(1), Some(3L)), (Some(1), Some(2), Some(1L))).toDF("src", "dst", "w")
+    val pe = e.select("src", "dst")
+    Seq[(String, Long => DataFrame)](
+      "pagerank" -> (cap => RankLoop.pageRank(pe, 3, 0.15, localCap = cap)),
+      "weighted" -> (cap => RankLoop.weighted(e, 3, 0.15, localCap = cap)),
+      "katz" -> (cap => RankLoop.katz(pe, 3, 2L, localCap = cap))).foreach { case (op, run) =>
+      val (under, underJobs) = JobCount(spark.sparkContext)(rows(run(LocalGraph.EdgeCap)))
+      val (dist, distJobs) = JobCount(spark.sparkContext)(rows(run(0L)))
+      assert(under == dist, op)
+      // the driver gate's collect is the only extra job
+      assert(underJobs == distJobs + 1, s"$op: $underJobs jobs under the cap, $distJobs at 0")
+    }
+  }
+
+  test("pageRankQuantizedDF on the sf0.001 unified graph: 3 jobs on the driver") {
+    val (e, _) = GraphAnalytics.unifiedEdges(TpchGraph.load(spark, "/root/testdata/sf0.001"))
+    val (driver, driverJobs) =
+      JobCount(spark.sparkContext)(GraphAnalytics.pageRankQuantizedDF(e, numIter = 10))
+    val (dist, distJobs) =
+      JobCount(spark.sparkContext)(RankLoop.pageRank(e, 10, 0.15, localCap = 0L))
+    assert(driverJobs <= 3, s"$driverJobs jobs under the cap")
+    assert(distJobs == DistributedJobs, s"$distJobs jobs with localCap = 0")
+    assert(rows(driver) == rows(dist))
+  }
 }
 
 /** Plain-Scala fixed-point references: dense maps over every vertex,
@@ -90,6 +131,11 @@ class RankLoopSpec extends RandomGraphs {
   * output's micro-unit integers per vid. */
 object RankLoopSpec {
   private val Micro = 1000000L
+
+  /** The distributed loop's jobs for 10 PageRank rounds on the sf0.001
+    * unified graph: staging plus the every-third-round and last-round
+    * score pins (27 while the edge pin's count was a `Dataset.count`). */
+  private val DistributedJobs = 26
 
   private def vertices(edges: Seq[(Long, Long)]): Set[Long] =
     edges.flatMap(e => Seq(e._1, e._2)).toSet

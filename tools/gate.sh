@@ -12,7 +12,7 @@ SF=${1:-/root/testdata/sf0.01}
 OUT=${2:-/tmp/graft_gate_out}
 cd "$(dirname "$0")/.."
 
-echo "[gate] 0/4 pin-discipline grep (no raw deserialized persist call sites)"
+echo "[gate] 0/4 pin-discipline greps (no raw deserialized persist call sites, no RDD.unpersist sweep)"
 # Raw persist(MEMORY_AND_DISK) pins are the residency class that OOM'd
 # betweenness/pagerank at sf10 (r11/r12): every cache in src/main must
 # route through GraphAnalytics.persistPinned / persistPinnedTwoPhase /
@@ -30,6 +30,15 @@ if grep -rn "\.persist(.*MEMORY_" src/main/scala \
     | grep -v "_SER" \
     | grep -v "GraphAnalytics.scala.*DefaultPinLevel"; then
   echo "[gate] FAIL: raw deserialized persist call site (use persistPinned)"
+  exit 1
+fi
+
+# A sweep over getPersistentRDDs that frees with RDD.unpersist logs
+# Spark's lineage-truncated WARN for every local checkpoint it meets;
+# sweeps go through DatasetBridge.unpersistAll. Step 1 runs Verify, not
+# Bench, so its WARN check cannot see the Bench sweep: this grep does.
+if grep -rn -A2 "getPersistentRDDs" src/main/scala | grep "\.unpersist("; then
+  echo "[gate] FAIL: a getPersistentRDDs sweep frees with .unpersist( (use DatasetBridge.unpersistAll)"
   exit 1
 fi
 

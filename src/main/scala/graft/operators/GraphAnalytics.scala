@@ -154,10 +154,10 @@ object GraphAnalytics {
     * whose row count is unknowable pre-materialization: persist at the
     * default level, count FROM MEMORY, and past [[pinRowCeiling]] demote
     * the same cache entry to serialized DISK_ONLY (one extra scan, paid
-    * exactly when the deserialized copy would squeeze the storage pool —
-    * the weighted-PageRank staging recipe, extracted). Unlike
-    * [[pinTwoPhase]] the lineage survives, so the cache keeps advertising
-    * its partitioning. Returns the pinned frame and its exact count. */
+    * exactly when the deserialized copy would squeeze the storage pool).
+    * Unlike [[pinTwoPhase]] the lineage survives, so the cache keeps
+    * advertising its partitioning. Returns the pinned frame and its
+    * exact count. */
   private[graft] def persistPinnedTwoPhase(df: DataFrame): (DataFrame, Long) = {
     val p = df.persist(DefaultPinLevel)
     val rows = p.count()
@@ -1585,7 +1585,7 @@ object GraphAnalytics {
     * become an exact probe list pushed into the adjacency scan. Walk
     * frontiers are walk-count-sized (two/three longs per walk), so the
     * cap is a few MB of driver memory — the same metadata-sized,
-    * size-gated localization class as the coreness broadcast maps. */
+    * size-gated localization class as the [[LocalGraph]] replays. */
   private[graft] val WalkFrontierCollectCap = 100000L
 
   /** Probe lists wider than this are not pushed into the parquet scan
@@ -2070,7 +2070,14 @@ object GraphAnalytics {
     * extra cheap frontier rounds rather than a wrong answer; the
     * rounds actually used beyond `rounds` surface as an extra row
     * (vid = −2, extra_rounds) so the overrun is observable. Registered
-    * oracle queries keep the replayable fixed count. */
+    * oracle queries keep the replayable fixed count.
+    *
+    * Backends: when the input's edge rows fit [[LocalGraph.EdgeCap]] and
+    * the vids are integral, the rounds run on the DRIVER over one
+    * collected [[LocalGraph]] — a full recompute per round on primitive
+    * arrays, with the same rows, per-round frontier sizes and sentinel
+    * rows — and the output is a LocalRelation. Otherwise the
+    * dense/frontier join loop above runs. */
   def coreness(edges: DataFrame, rounds: Int = 12,
       srcCol: String = "src", dstCol: String = "dst",
       toFixpoint: Boolean = false, maxRounds: Int = 96): DataFrame =
@@ -2082,15 +2089,37 @@ object GraphAnalytics {
     * changed set, not V. The per-round `changed.count()` always runs —
     * it is the round's single materializing action (see the loop
     * comment); `collectStats` only controls whether the counts are
-    * RECORDED into the returned frontier-size list. */
+    * RECORDED into the returned frontier-size list. `localStateCap = 0`
+    * forces the join loop. */
   private[graft] def corenessWithStats(edges: DataFrame, rounds: Int = 12,
       srcCol: String = "src", dstCol: String = "dst",
       toFixpoint: Boolean = false, maxRounds: Int = 96,
-      collectStats: Boolean = true): (DataFrame, Seq[Long]) = {
+      collectStats: Boolean = true,
+      localStateCap: Long = LocalGraph.EdgeCap): (DataFrame, Seq[Long]) = {
     require(rounds >= 2, "rounds must be >= 2 (the sentinel needs two)")
     require(maxRounds >= rounds, "maxRounds must be >= rounds")
     val e0 = edges.select(col(srcCol).as("u"), col(dstCol).as("v"))
       .where(col("u") =!= col("v"))
+    val budget = if (toFixpoint) maxRounds else rounds
+    // eager pin BEFORE anything reads the edges: the caller hands over a
+    // raw join lineage (unified edges), and reading it lazily would run
+    // that lineage once for the count and AGAIN for the collect or the
+    // doubled repartition below — the pin makes every later read a cache
+    // scan, and its exact row count gates the driver replay
+    val (e0cp, eRows) = pinTwoPhase(e0)
+    // DRIVER-LOCAL rounds under the cap: values are exact integers and a
+    // frontier round only skips recomputes that would reproduce the old
+    // value, so a full-recompute replay over the [[LocalGraph]] (deduped,
+    // both directions) is bit-identical to the join loop — values, moved
+    // counts, sentinels. Pin, count, collect: three jobs in all. Past
+    // the cap (or non-integral vids) the join loop runs on the same pin.
+    LocalGraph.collect(e0cp, eRows, localStateCap, undirected = true) match {
+      case Some(g) =>
+        org.apache.spark.sql.graft.DatasetBridge.unpersistCheckpoint(e0cp)
+        return corenessLocalState(edges.sparkSession, g, rounds, budget, toFixpoint,
+          collectStats)
+      case None =>
+    }
     // vertex values broadcast under the guard (the SSSP bake-off
     // shape): the per-round join never shuffles edges; the one window
     // exchange per round now carries only the candidates' adjacency.
@@ -2120,13 +2149,6 @@ object GraphAnalytics {
     // overestimate, and the count is a heuristic cap anyway), and nVerts
     // falls out of the degree table's row count instead of a dedicated
     // distinct pass.
-    // eager checkpoint BEFORE the sizing count: the caller hands over a
-    // raw join lineage (unified edges), and counting it lazily would run
-    // that lineage once for the count and then AGAIN for the doubled
-    // repartition below — the checkpoint makes the second pass a cache
-    // scan
-    val e0cp = e0.localCheckpoint(true)
-    val eRows = e0cp.count()
     val undParts = volumeParts(edges.sparkSession, 2 * eRows)
     // sortWithinPartitions(u) on top of the hash(u) layout: the cached
     // relation then ADVERTISES per-partition ordering, so the frontier
@@ -2148,7 +2170,6 @@ object GraphAnalytics {
     var changed: DataFrame = null
     val frontierSizes = scala.collection.mutable.ListBuffer.empty[Long]
     var lastMoved = nVerts
-    val budget = if (toFixpoint) maxRounds else rounds
     var r = 0
     var done = false
     // h-index over (vertex, neighbor-value) pairs COMPRESSED to distinct
@@ -2163,116 +2184,6 @@ object GraphAnalytics {
       nv.groupBy("u", "cv").agg(count(lit(1)).as("cnt"))
         .withColumn("cum", sum(col("cnt")).over(wCum))
         .groupBy("u").agg(max(least(col("cum"), col("cv"))).cast("long").as("cv"))
-    // MAP MODE (the r11-verdict "driver-side build floor" fix): with
-    // integral vids under the broadcast guard, the per-round V-row value
-    // broadcasts are replaced by a manual base+overlay LongLongMap pair
-    // probed from a codegen lookup expression — the base generation
-    // broadcasts once, each round ships only the rows that MOVED (which
-    // the round's one collect already brought to the driver), and the
-    // two value joins vanish from the plan. The legacy join loop below
-    // stays as the type-generic / past-guard fallback. Trace effect:
-    // the ~0.5 s/round zero-job gap (driver HashedRelation build +
-    // torrent serialize per round, r11 coreness trace) collapses to a
-    // primitive-array map build from already-collected rows.
-    val integralVids = e0.schema("u").dataType match {
-      case org.apache.spark.sql.types.ByteType | org.apache.spark.sql.types.ShortType |
-           org.apache.spark.sql.types.IntegerType | org.apache.spark.sql.types.LongType => true
-      case _ => false
-    }
-    val spark0 = edges.sparkSession
-    // memory gate for map mode: the value map costs ≤64 B/vertex (two
-    // long arrays at ≤0.5 load factor) REPLICATED PER EXECUTOR, and a
-    // dense round holds the outgoing new-generation broadcast alongside
-    // the old one — budget 5% of one executor's heap, i.e. heap/64/20
-    // vertices (16g → ~12.5M: sf1's 1.9M rides the map loop, sf10's
-    // 18.6M falls back to the join loop, whose sf10 probe is green)
-    val mapModeMaxVerts = perExecutorHeapBytes(spark0) / 64 * 5 / 100
-    if (useBroadcast && integralVids && nVerts <= mapModeMaxVerts) {
-      import graft.functions.{BroadcastLongMapLookup, LongLongMap}
-      import spark0.implicits._
-      val sc = spark0.sparkContext
-      val vidType = e0.schema("u").dataType
-      // base generation: the initial degree table, collected from the
-      // checkpointed frame c already materialized for the nVerts count
-      val basePairs = c.select(col("u").cast("long"), col("cv")).as[(Long, Long)].collect()
-      var bcBase = sc.broadcast(LongLongMap.build(basePairs.iterator, basePairs.length))
-      var bcOverlay = sc.broadcast(LongLongMap.Empty)
-      // entries changed since the last fold — always mirrored in bcOverlay
-      val overlayAcc = scala.collection.mutable.LongMap.empty[Long]
-      var changedKeys: Array[Long] = null
-      def lookup(k: Column): Column =
-        BroadcastLongMapLookup(k.cast("long"), bcOverlay, bcBase, -1L)
-      while (r < budget && !done) {
-        r += 1
-        val frontierMode = r > 1 && lastMoved * FrontierSwitchFactor < nVerts
-        val src =
-          if (!frontierMode) und
-          else {
-            // last round's movers as a LocalRelation (≤ V/128 rows by the
-            // frontier gate — built driver-side, no collect job), then the
-            // staging-sorted cached adjacency marks candidates' full
-            // adjacency in one sort-free window scan (the r11 fused shape)
-            val chv = changedKeys.toSeq.toDF("__chk")
-              .select(col("__chk").cast(vidType).as("__ch"))
-            und.join(broadcast(chv), col("v") === col("__ch"), "left")
-              .select(col("u"), col("v"), col("__ch").isNotNull.as("__hit"))
-              .withColumn("__any", max(col("__hit")).over(
-                org.apache.spark.sql.expressions.Window.partitionBy("u")))
-              .where(col("__any")).select(col("u"), col("v"))
-          }
-        // the round is ONE job: neighbor values and the old value are
-        // codegen map probes (no joins, rides hash(u) end to end), and
-        // the movers' collect is both the action and the next round's
-        // driver state — no per-round checkpoint frames to maintain
-        val upd = hIndexOf(src.select(col("u"), lookup(col("v")).as("cv")))
-          .withColumn("pv", lookup(col("u")))
-        val moved = upd.where(col("cv") =!= col("pv"))
-          .select(col("u").cast("long"), col("cv")).as[(Long, Long)].collect()
-        lastMoved = moved.length
-        done = lastMoved == 0L
-        if (collectStats) frontierSizes += lastMoved
-        if (lastMoved > 0) {
-          changedKeys = moved.map(_._1)
-          moved.foreach { case (k, v) => overlayAcc.update(k, v) }
-          if (overlayAcc.size.toLong * 8 > nVerts) {
-            // fold the outgrown overlay into a new base generation (the
-            // dense-era shape: most rounds fold; V primitive inserts)
-            val oldB = bcBase
-            bcBase = sc.broadcast(LongLongMap.build(
-              bcBase.value.pairs ++ overlayAcc.iterator, nVerts.toInt))
-            oldB.destroy()
-            overlayAcc.clear()
-          }
-          val oldO = bcOverlay
-          bcOverlay = sc.broadcast(LongLongMap.build(overlayAcc.iterator, overlayAcc.size))
-          oldO.destroy()
-        }
-      }
-      // final values: one exchange-free distinct over the cached
-      // adjacency (every vertex appears as u in the doubled list) probed
-      // with the final map state — never a V-row driver parallelize
-      c = und.select(col("u")).dropDuplicates("u")
-        .select(col("u"), lookup(col("u")).as("cv"))
-        .localCheckpoint(true)
-      und.unpersist(false)
-      bcBase.destroy(); bcOverlay.destroy()
-      val spark = spark0
-      import org.apache.spark.sql.types.{LongType, StructField, StructType}
-      val extraSchema = StructType(Seq(
-        StructField("vid", LongType, nullable = false),
-        StructField("coreness", LongType, nullable = false)))
-      val extras = scala.collection.mutable.ListBuffer.empty[org.apache.spark.sql.Row]
-      if (lastMoved > 0L) // ran out of budget while still moving
-        extras += org.apache.spark.sql.Row(-1L, lastMoved)
-      if (toFixpoint && r > rounds)
-        extras += org.apache.spark.sql.Row(-2L, (r - rounds).toLong)
-      val base = c.select(col("u").as("vid"), col("cv").as("coreness"))
-      val out =
-        if (extras.isEmpty) base
-        else base.unionAll(spark.createDataFrame(
-          spark.sparkContext.parallelize(extras.toSeq, 1), extraSchema))
-      return (out, frontierSizes.toSeq)
-    }
     // the round's ONE V-row broadcast, REUSED by both value joins: the
     // neighbor-value join keys the build side on its first column and so
     // does the old-value join, and both build children canonicalize to
@@ -2379,22 +2290,66 @@ object GraphAnalytics {
     c = c.localCheckpoint(true)
     und.unpersist(false)
     if (prevRoundCache != null) prevRoundCache.unpersist(false)
-    val spark = edges.sparkSession
-    import org.apache.spark.sql.types.{LongType, StructField, StructType}
-    val extraSchema = StructType(Seq(
-      StructField("vid", LongType, nullable = false),
-      StructField("coreness", LongType, nullable = false)))
-    val extras = scala.collection.mutable.ListBuffer.empty[org.apache.spark.sql.Row]
-    if (lastMoved > 0L) // ran out of budget while still moving
-      extras += org.apache.spark.sql.Row(-1L, lastMoved)
-    if (toFixpoint && r > rounds)
-      extras += org.apache.spark.sql.Row(-2L, (r - rounds).toLong)
-    val base = c.select(col("u").as("vid"), col("cv").as("coreness"))
-    val out =
-      if (extras.isEmpty) base
-      else base.unionAll(spark.createDataFrame(
-        spark.sparkContext.parallelize(extras.toSeq, 1), extraSchema))
-    (out, frontierSizes.toSeq)
+    (withCorenessSentinels(c.select(col("u").as("vid"), col("cv").as("coreness")),
+      lastMoved, r, rounds, toFixpoint), frontierSizes.toSeq)
+  }
+
+  /** [[corenessWithStats]]'s rounds on the driver: c₀ = degree in the
+    * deduped undirected [[LocalGraph]], then every round a full h-index
+    * recompute of every vertex (the dense textbook form the oracle
+    * replays), with the join loop's per-round moved count, stop rule and
+    * sentinel rows. Vids keep [[LocalGraph.vidType]]. */
+  private def corenessLocalState(spark: SparkSession, g: LocalGraph, rounds: Int,
+      budget: Int, toFixpoint: Boolean, collectStats: Boolean): (DataFrame, Seq[Long]) = {
+    import org.apache.spark.sql.types._
+    import org.apache.spark.sql.Row
+    val (n, offsets, nbrs) = (g.numVertices, g.offsets, g.nbrs)
+    def deg(u: Int): Int = offsets(u + 1) - offsets(u)
+    var cv = Array.tabulate(n)(deg(_).toLong)
+    // h-index by counting: a neighbor value above deg(u) counts as deg(u)
+    val bucket = new Array[Int]((0 until n).foldLeft(0)((m, u) => math.max(m, deg(u))) + 1)
+    def hIndex(u: Int): Long = {
+      val d = deg(u)
+      java.util.Arrays.fill(bucket, 0, d + 1, 0)
+      var j = offsets(u)
+      while (j < offsets(u + 1)) { bucket(math.min(cv(nbrs(j)), d.toLong).toInt) += 1; j += 1 }
+      var h = d
+      var atLeast = bucket(d)
+      while (atLeast < h) { h -= 1; atLeast += bucket(h) }
+      h
+    }
+    val frontierSizes = scala.collection.mutable.ListBuffer.empty[Long]
+    var lastMoved = n.toLong
+    var r = 0
+    var done = false
+    while (r < budget && !done) {
+      r += 1
+      val next = Array.tabulate(n)(hIndex)
+      lastMoved = (0 until n).count(u => next(u) != cv(u)).toLong
+      cv = next
+      done = lastMoved == 0L
+      if (collectStats) frontierSizes += lastMoved
+    }
+    val schema = StructType(Seq(StructField("vid", g.vidType), StructField("coreness", LongType)))
+    (withCorenessSentinels(org.apache.spark.sql.graft.DatasetBridge.localRelation(spark, schema,
+      (0 until n).map(u => Row(g.vid(u), cv(u)))), lastMoved, r, rounds, toFixpoint),
+      frontierSizes.toSeq)
+  }
+
+  /** Coreness's (vid, coreness) rows plus its sentinel rows: (−1, the
+    * still-moving count) when the round budget ran out first, and
+    * (−2, the rounds run past `rounds`) when `toFixpoint` ran on. The
+    * union widens the vid column to BIGINT when a sentinel is present. */
+  private def withCorenessSentinels(base: DataFrame, lastMoved: Long, r: Int, rounds: Int,
+      toFixpoint: Boolean): DataFrame = {
+    import org.apache.spark.sql.types._
+    import org.apache.spark.sql.Row
+    val extras = (if (lastMoved > 0L) Seq(Row(-1L, lastMoved)) else Nil) ++
+      (if (toFixpoint && r > rounds) Seq(Row(-2L, (r - rounds).toLong)) else Nil)
+    if (extras.isEmpty) base
+    else base.unionAll(org.apache.spark.sql.graft.DatasetBridge.localRelation(base.sparkSession,
+      StructType(Seq(StructField("vid", LongType, nullable = false),
+        StructField("coreness", LongType, nullable = false))), extras))
   }
 
   /** Strongly connected components — deterministic multi-pivot

@@ -5,10 +5,11 @@ import org.apache.spark.sql.types._
 
 /** Driver-local CSR graph — the one adjacency every collect-and-replay
   * operator builds: Brandes betweenness, Luby MIS, SSSP/BFS relaxation,
-  * the HyperANF registers, the ANF exact closures and the rank family's
-  * driver backend ([[RankLoop]]). Each replays exact integer arithmetic
-  * over the collected edge list, so the driver run is bit-identical to
-  * its distributed loop, which stays as the only path past the cap.
+  * the coreness h-index rounds, the HyperANF registers, the ANF exact
+  * closures and the rank family's driver backend ([[RankLoop]]). Each
+  * replays exact integer arithmetic over the collected edge list, so the
+  * driver run is bit-identical to its distributed loop, which stays as
+  * the only path past the cap.
   *
   * Vertices are indexed `0 until numVertices` in ascending vid order
   * (`vids`). The out-neighbors of vertex `i` are
@@ -79,8 +80,8 @@ final class LocalGraph private (
 object LocalGraph {
 
   /** Cap in directed edge rows for replays whose driver state is a few
-    * longs per vertex and edge (Bc, MIS, SSSP/BFS): tens of MB at the
-    * cap. */
+    * longs per vertex and edge (Bc, MIS, SSSP/BFS, coreness, the rank
+    * family): tens of MB at the cap. */
   val EdgeCap = 2000000L
 
   /** Cap in directed edge rows for replays whose per-vertex state is

@@ -8,8 +8,7 @@ import org.apache.spark.sql.graft.DatasetBridge
 import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 
-import GraphAnalytics.{maxBroadcastRows, maxBroadcastVerticesDyn, persistPinnedTwoPhase,
-  pinLevel, pinTwoPhase}
+import GraphAnalytics.{maxBroadcastRows, maxBroadcastVerticesDyn, pinLevel, pinTwoPhase}
 
 /** The kernel of the fixed-point rank family: quantized, personalized
   * and weighted PageRank, Katz and HITS. A round is the Pregelix
@@ -43,10 +42,8 @@ import GraphAnalytics.{maxBroadcastRows, maxBroadcastVerticesDyn, persistPinnedT
   *
   * Distributed staging:
   *   - the edge pin, two-phase (DISK_ONLY past the heap ceiling): a
-  *     localCheckpoint of the input ([[GraphAnalytics.pinTwoPhase]]), or
-  *     for weighted PageRank the parallel-edge collapse riding a
-  *     `hash(dst)` exchange, persisted
-  *     ([[GraphAnalytics.persistPinnedTwoPhase]]);
+  *     localCheckpoint of the input rows ([[GraphAnalytics.pinTwoPhase]]),
+  *     the one pin both backends read;
   *   - the per-source table: the payload aggregate (out-degree, weight
   *     sum) or the bare distinct sources, checkpointed. Its row count is
   *     at most V, so it gates the staging before V is known;
@@ -54,11 +51,14 @@ import GraphAnalytics.{maxBroadcastRows, maxBroadcastVerticesDyn, persistPinnedT
   *     pairs on the wire) and joined with a broadcast of the per-source
   *     table, persisted. Persist, not localCheckpoint: a checkpoint
   *     forgets its partitioning, and every in-sum aggregation rides it
-  *     without an exchange;
+  *     without an exchange. Weighted PageRank collapses parallel edges
+  *     to their weight sum on that same exchange (on the payload join's
+  *     `hash(src)` exchange for the shuffle-path cache);
   *   - the vertex set, exchange-free: the source keys plus the dst keys
-  *     deduped on the cache's own partitioning and anti-joined against a
-  *     broadcast of the source table. The two legs are disjoint, so no
-  *     final distinct runs. Past the gate, a union-distinct;
+  *     deduped on the cache's own partitioning and anti-joined,
+  *     null-safe, against a broadcast of the source table. The two legs
+  *     are disjoint, so no final distinct runs. Past the gate, a
+  *     union-distinct;
   *   - the broadcast decision: V within `maxBroadcastRows(ceiling,
   *     width)`. Width scales the 2-column (vid, value) calibration by
   *     what the loop holds in broadcasts at once: 2 for one score table,
@@ -141,9 +141,8 @@ private[operators] object RankLoop {
 
   /** A staged graph: the `hash(dst)` cache, the vertex set and the
     * broadcast decision. */
-  final class Staged private[RankLoop] (pin: DataFrame, sumWeights: Boolean,
-      sources: DataFrame, cache: DataFrame, level: StorageLevel,
-      vertices: DataFrame, val vertexCount: Long, broadcast: Boolean) {
+  final class Staged private[RankLoop] (pin: DataFrame, sources: DataFrame, cache: DataFrame,
+      level: StorageLevel, vertices: DataFrame, val vertexCount: Long, broadcast: Boolean) {
 
     private def side(df: DataFrame): DataFrame =
       if (broadcast) functions.broadcast(df) else df
@@ -204,31 +203,23 @@ private[operators] object RankLoop {
       // (or the pin itself); a pin-derived cache is freed with the pin
       for (c <- bySrc.toSeq :+ cache if c ne pin)
         if (broadcast) c.unpersist(blocking = false) else DatasetBridge.unpersistCheckpoint(c)
-      freePin(pin, sumWeights)
+      DatasetBridge.unpersistCheckpoint(pin)
       DatasetBridge.unpersistCheckpoint(sources)
     }
   }
 
-  /** Stages `edges` (src, dst, and `w` when `sumWeights`). `payload` is
-    * the per-source aggregate joined onto every edge (None: the bare
-    * distinct sources). `sumWeights` collapses parallel edges by summing
-    * `w`, riding the staging exchange. `pinVertices` checkpoints the
-    * vertex set for a dense fill; a sparse operator needs only its
-    * count. `ceiling` is the broadcast ceiling before width scaling. */
+  /** Stages `edges` (src, dst). `payload` is the per-source aggregate
+    * joined onto every edge (None: the bare distinct sources).
+    * `pinVertices` checkpoints the vertex set for a dense fill; a sparse
+    * operator needs only its count. `ceiling` is the broadcast ceiling
+    * before width scaling. */
   def stage(edges: DataFrame, width: Int, payload: Option[Column] = None,
-      sumWeights: Boolean = false, pinVertices: Boolean = true,
-      ceiling: Long = maxBroadcastVerticesDyn): Staged =
-    stagePinned(pinEdges(edges, sumWeights), width, payload, sumWeights, pinVertices, ceiling)
+      pinVertices: Boolean = true, ceiling: Long = maxBroadcastVerticesDyn): Staged =
+    stagePinned(pinTwoPhase(edges), width, payload, sumWeights = false, pinVertices, ceiling)
 
-  /** The edge pin and its exact row count. */
-  private def pinEdges(edges: DataFrame, sumWeights: Boolean): (DataFrame, Long) =
-    if (sumWeights) persistPinnedTwoPhase(edges.repartition(col("dst"))
-      .groupBy("src", "dst").agg(sum(col("w")).as("w")))
-    else pinTwoPhase(edges)
-
-  private def freePin(pin: DataFrame, sumWeights: Boolean): Unit =
-    if (sumWeights) pin.unpersist(blocking = false) else DatasetBridge.unpersistCheckpoint(pin)
-
+  /** [[stage]] from an edge pin (src, dst, and `w` when `sumWeights`)
+    * and its exact row count. `sumWeights` collapses parallel edges by
+    * summing `w` on the exchange of the cache they feed. */
   private def stagePinned(pinned: (DataFrame, Long), width: Int, payload: Option[Column],
       sumWeights: Boolean, pinVertices: Boolean, ceiling: Long): Staged = {
     val cap = maxBroadcastRows(ceiling, width)
@@ -238,17 +229,27 @@ private[operators] object RankLoop {
       pin.groupBy("src").agg(_)).localCheckpoint(true)
     val nSources = sources.count()
     val srcFits = nSources <= cap
-    // the shuffle-path cache: a checkpoint, its partitioning is moot
+    // the pin repartitioned by `key`, parallel weighted edges summed on
+    // that exchange (hash(key) satisfies the (src, dst) clustering)
+    def byKey(key: String): DataFrame = {
+      val p = pin.repartition(col(key))
+      if (sumWeights) p.groupBy("src", "dst").agg(sum(col("w")).as("w")) else p
+    }
+    // the shuffle-path cache: a checkpoint, its partitioning is moot;
+    // the weighted collapse rides the payload join's hash(src) exchange
     def fallback(): DataFrame =
-      if (payload.isEmpty) pin else pin.join(sources, "src").localCheckpoint(true, level)
+      if (payload.isEmpty) pin
+      else (if (sumWeights) byKey("src") else pin).join(sources, "src")
+        .localCheckpoint(true, level)
     val staged = if (!srcFits) fallback() else {
       // repartition before the payload join: the exchange carries bare
       // (src, dst) pairs
-      val byDst = if (sumWeights) pin else pin.repartition(col("dst"))
+      val byDst = byKey("dst")
       (if (payload.isEmpty) byDst else byDst.join(broadcast(sources), "src")).persist(level)
     }
+    // null-safe: a null dst is the null source key's vertex, not a new one
     val dstOnly = staged.select(col("dst").as("vid")).dropDuplicates("vid")
-      .join(broadcast(sources), col("vid") === sources("src"), "left_anti")
+      .join(broadcast(sources), col("vid") <=> sources("src"), "left_anti")
     val vset =
       if (srcFits) sources.select(col("src").as("vid")).unionAll(dstOnly)
       else pin.select(col("src").as("vid"))
@@ -259,7 +260,7 @@ private[operators] object RankLoop {
     val useBroadcast = n <= cap
     val narrowBand = srcFits && !useBroadcast
     if (narrowBand) staged.unpersist(blocking = false)
-    new Staged(pin, sumWeights, sources, if (narrowBand) fallback() else staged,
+    new Staged(pin, sources, if (narrowBand) fallback() else staged,
       level, vertices, n, useBroadcast)
   }
 
@@ -271,11 +272,11 @@ private[operators] object RankLoop {
       ceiling: Long, localCap: Long, rounds: Int, name: String)(lane: Lane,
       driver: DriverLane): DataFrame = {
     require(rounds >= 1, s"a rank loop needs a round, got $rounds")
-    val pinned @ (pin, eRows) = pinEdges(edges, sumWeights)
+    val pinned @ (pin, eRows) = pinTwoPhase(edges)
     LocalGraph.collect(pin, eRows, localCap, undirected = false,
         weightCol = if (sumWeights) Some("w") else None, sumParallel = true) match {
       case Some(g) =>
-        freePin(pin, sumWeights)
+        DatasetBridge.unpersistCheckpoint(pin)
         onDriver(edges.sparkSession, g, rounds, driver, lane.default.get, name)
       case None =>
         val g = stagePinned(pinned, width, payload, sumWeights, pinVertices = true, ceiling)

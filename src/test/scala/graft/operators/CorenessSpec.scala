@@ -1,10 +1,16 @@
 package graft.operators
 
-import graft.SparkTestBase
-import org.apache.spark.sql.functions._
+import graft.model.TpchGraph
+import org.apache.spark.graft.JobCount
+import org.apache.spark.sql.DataFrame
 
-class CorenessSpec extends SparkTestBase {
+/** Coreness on hand fixtures. The default cap runs the driver replay;
+  * `localStateCap = 0` forces the join loop, and the frontier-size cases
+  * run both. */
+class CorenessSpec extends RandomGraphs {
   import spark.implicits._
+
+  private val caps = Seq(LocalGraph.EdgeCap, 0L)
 
   private def run(edges: Seq[(Long, Long)], rounds: Int = 8): Map[Long, Long] =
     GraphAnalytics.coreness(edges.toDF("src", "dst"), rounds)
@@ -33,22 +39,28 @@ class CorenessSpec extends SparkTestBase {
     // hub's neighbors, none change, frontier empties and the remaining
     // rounds short-circuit — per-round work tracks |changed|, not V
     val star = (2L to 9L).map(l => (1L, l))
-    val (df, sizes) = GraphAnalytics.corenessWithStats(star.toDF("src", "dst"), rounds = 8)
-    val c = df.as[(Long, Long)].collect().toMap
-    assert(c == ((2L to 9L).map(_ -> 1L) :+ (1L -> 1L)).toMap)
-    assert(sizes == Seq(1L, 0L),
-      s"expected frontier [1, 0] (hub only, then converged + short-circuit), got $sizes")
+    caps.foreach { cap =>
+      val (df, sizes) = GraphAnalytics.corenessWithStats(star.toDF("src", "dst"), rounds = 8,
+        localStateCap = cap)
+      val c = df.as[(Long, Long)].collect().toMap
+      assert(c == ((2L to 9L).map(_ -> 1L) :+ (1L -> 1L)).toMap, s"cap $cap")
+      assert(sizes == Seq(1L, 0L),
+        s"cap $cap: expected frontier [1, 0] (hub only, then converged), got $sizes")
+    }
   }
 
   test("frontier sizes are monotone-shrinking work on a path") {
     val path = (1L until 14L).map(i => (i, i + 1))
-    val (df, sizes) = GraphAnalytics.corenessWithStats(path.toDF("src", "dst"), rounds = 12)
-    assert(!df.as[(Long, Long)].collect().toMap.contains(-1L))
-    // the path drains from both ends: each round's changed set is the
-    // two next-innermost vertices, never the whole graph after round 1
-    assert(sizes.head < 14L && sizes.last == 0L)
-    assert(sizes.zip(sizes.tail).forall { case (a, b) => b <= a },
-      s"frontier must never grow on a path: $sizes")
+    caps.foreach { cap =>
+      val (df, sizes) = GraphAnalytics.corenessWithStats(path.toDF("src", "dst"), rounds = 12,
+        localStateCap = cap)
+      assert(!df.as[(Long, Long)].collect().toMap.contains(-1L), s"cap $cap")
+      // the path drains from both ends: each round's changed set is the
+      // two next-innermost vertices, never the whole graph after round 1
+      assert(sizes.head < 14L && sizes.last == 0L, s"cap $cap: $sizes")
+      assert(sizes.zip(sizes.tail).forall { case (a, b) => b <= a },
+        s"cap $cap: frontier must never grow on a path: $sizes")
+    }
   }
 
   test("toFixpoint continues past an under-provisioned round count") {
@@ -86,25 +98,34 @@ class CorenessSpec extends SparkTestBase {
     assert(got == c, "frontier result diverged from dense recompute")
   }
 
-  test("map-mode and legacy join-mode agree (string vids route to the legacy loop)") {
-    // integral vids under the broadcast guard take the broadcast-map
-    // round loop (no per-round V-row broadcast build); any other vid
-    // type falls back to the type-generic join loop. Same graph run
-    // both ways must agree value-for-value, including frontier sizes —
-    // string-mapping the vids is exactly the legacy-path switch.
+  test("replay ≡ join loop, string vids on the loop") {
+    // integral vids under the cap take the driver replay; localStateCap
+    // = 0 and string vids (no driver form) take the join loop. All three
+    // must agree value for value, frontier sizes included.
     var s = 777L
     def next(): Long = { s = (s * 6364136223846793005L + 1442695040888963407L) >>> 1; s }
     val edges = (1 to 200).map(_ => (next() % 80, next() % 80)).filter(e => e._1 != e._2)
-    val (mapDf, mapSizes) =
-      GraphAnalytics.corenessWithStats(edges.toDF("src", "dst"), rounds = 12)
+    def decompose(df: DataFrame, cap: Long) = {
+      val (out, sizes) = GraphAnalytics.corenessWithStats(df, rounds = 12, localStateCap = cap)
+      (out.collect().map(r => (r.get(0).toString.stripPrefix("v").toLong, r.getLong(1))).toMap,
+        sizes)
+    }
+    val replay = decompose(edges.toDF("src", "dst"), LocalGraph.EdgeCap)
+    assert(replay == decompose(edges.toDF("src", "dst"), 0L), "replay diverged from the join loop")
     val strEdges = edges.map { case (a, b) => (s"v$a", s"v$b") }
-    val (legDf, legSizes) =
-      GraphAnalytics.corenessWithStats(strEdges.toDF("src", "dst"), rounds = 12)
-    val got = mapDf.as[(Long, Long)].collect().toMap
-    val leg = legDf.as[(String, Long)].collect()
-      .map { case (v, c) => (v.stripPrefix("v").toLong, c) }.toMap
-    assert(got == leg, "map-mode diverged from the legacy join loop")
-    assert(mapSizes == legSizes, s"frontier traces diverged: $mapSizes vs $legSizes")
+    assert(replay == decompose(strEdges.toDF("src", "dst"), LocalGraph.EdgeCap),
+      "string vids diverged from the replay")
+  }
+
+  test("sf0.001 unified graph: 3 jobs on the driver") {
+    val (e, _) = GraphAnalytics.unifiedEdges(TpchGraph.load(spark, "/root/testdata/sf0.001"))
+    val ((driver, driverSizes), jobs) =
+      JobCount(spark.sparkContext)(GraphAnalytics.corenessWithStats(e, rounds = 16))
+    val (dist, distSizes) = GraphAnalytics.corenessWithStats(e, rounds = 16, localStateCap = 0L)
+    // pin, count, collect
+    assert(jobs <= 3, s"$jobs jobs under the cap")
+    assert(rows(driver) == rows(dist))
+    assert(driverSizes == distSizes)
   }
 
   test("sentinel row appears when rounds are too few on a slow chain") {

@@ -49,6 +49,27 @@ class LocalReplaySpec extends RandomGraphs {
     }
   }
 
+  test("coreness: local h-index rounds ≡ join loop, frontier sizes and sentinels included") {
+    // 2-4 rounds leave some graphs still moving (the -1 row); with
+    // toFixpoint the budget stops two rounds later (-2 row, sometimes -1)
+    val sentinels = scala.collection.mutable.Set.empty[String]
+    check("coreness") { g =>
+      val rounds = 2 + g.edges.size % 3
+      Seq(false, true).map { toFixpoint =>
+        def run(cap: Long) = {
+          val (c, sizes) = GraphAnalytics.corenessWithStats(g.df, rounds, toFixpoint = toFixpoint,
+            maxRounds = rounds + 2, localStateCap = cap)
+          (rows(c), sizes)
+        }
+        val local = run(LocalGraph.EdgeCap)
+        local._1._2.foreach(r => if (r.startsWith("-")) sentinels += r.take(2))
+        same(local, run(0L), g)
+      }.reduce(_ && _)
+    }
+    info(s"coreness: sentinel rows seen: ${sentinels.toSeq.sorted.mkString(", ")}")
+    assert(sentinels == Set("-1", "-2"))
+  }
+
   test("sum-collapse: per-pair multiplicities and weight sums ≡ a Spark groupBy") {
     check("sum-collapse") { g =>
       val undirected = g.edges.size % 2 == 0

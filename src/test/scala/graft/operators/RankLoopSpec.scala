@@ -97,20 +97,28 @@ class RankLoopSpec extends RandomGraphs {
 
   test("null endpoints or weights take the distributed loop under the cap") {
     // a null row has no driver form: sum-collapse would have to drop it
-    // from every count it belongs to
+    // from every count it belongs to. The null key is one vertex on
+    // every branch: broadcast, narrow band (the four sources fit, the
+    // five vertices do not: 4 is dst-only) and shuffle
     val e = Seq[(Option[Int], Option[Int], Option[Long])]((Some(1), Some(2), Some(1L)),
       (Some(1), None, Some(2L)), (None, Some(2), Some(1L)), (Some(2), Some(3), None),
-      (Some(3), Some(1), Some(3L)), (Some(1), Some(2), Some(1L))).toDF("src", "dst", "w")
+      (Some(3), Some(1), Some(3L)), (Some(1), Some(2), Some(1L)), (Some(3), Some(4), Some(1L)))
+      .toDF("src", "dst", "w")
     val pe = e.select("src", "dst")
-    Seq[(String, Long => DataFrame)](
-      "pagerank" -> (cap => RankLoop.pageRank(pe, 3, 0.15, localCap = cap)),
-      "weighted" -> (cap => RankLoop.weighted(e, 3, 0.15, localCap = cap)),
-      "katz" -> (cap => RankLoop.katz(pe, 3, 2L, localCap = cap))).foreach { case (op, run) =>
-      val (under, underJobs) = JobCount(spark.sparkContext)(rows(run(LocalGraph.EdgeCap)))
-      val (dist, distJobs) = JobCount(spark.sparkContext)(rows(run(0L)))
-      assert(under == dist, op)
-      // the driver gate's collect is the only extra job
-      assert(underJobs == distJobs + 1, s"$op: $underJobs jobs under the cap, $distJobs at 0")
+    val default = GraphAnalytics.maxBroadcastVerticesDyn
+    Seq[(String, Int, (Long, Long) => DataFrame)](
+      ("pagerank", 2, (cap, c) => RankLoop.pageRank(pe, 3, 0.15, c, localCap = cap)),
+      ("weighted", 4, (cap, c) => RankLoop.weighted(e, 3, 0.15, c, localCap = cap)),
+      ("katz", 3, (cap, c) => RankLoop.katz(pe, 3, 2L, c, localCap = cap))).foreach {
+      case (op, width, run) =>
+        val (under, underJobs) =
+          JobCount(spark.sparkContext)(rows(run(LocalGraph.EdgeCap, default)))
+        val (dist, distJobs) = JobCount(spark.sparkContext)(rows(run(0L, default)))
+        assert(under == dist, op)
+        // the driver gate's collect is the only extra job
+        assert(underJobs == distJobs + 1, s"$op: $underJobs jobs under the cap, $distJobs at 0")
+        Seq((4L * width + 1) / 2, 0L).foreach(c =>
+          assert(rows(run(0L, c)) == dist, s"$op: ceiling $c differs from the default"))
     }
   }
 

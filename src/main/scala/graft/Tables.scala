@@ -8,7 +8,17 @@ import org.apache.spark.sql.types._
   * scale-factor directory. */
 object Tables {
   def apply(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    parquet(spark, s"$dir/$name.parquet")
+
+  /** `spark.read.parquet(path)` without its schema job: the one footer
+    * schema inference reads is read on the driver
+    * ([[org.apache.spark.sql.execution.datasources.parquet.FooterSchemaParquetFileFormat]]).
+    * Same schema, same plan, no Spark job until the frame is used. */
+  def parquet(spark: SparkSession, path: String): DataFrame =
+    spark.read.format(FooterSchemaFormat).load(path)
+
+  private val FooterSchemaFormat = classOf[
+    org.apache.spark.sql.execution.datasources.parquet.FooterSchemaParquetFileFormat].getName
 
   /** Queries treat `events.ts` as int64 *nanoseconds* since epoch
     * (EventQueries contract; bit-exact with DuckDB `epoch_ns(ts)`). The
@@ -23,7 +33,7 @@ object Tables {
     */
   def events(spark: SparkSession, dir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = spark.read.parquet(s"$dir/events.parquet")
+    val raw = parquet(spark, s"$dir/events.parquet")
     raw.withColumn("ts", tsToNanos(raw.schema("ts").dataType, col("ts")))
   }
 

@@ -49,7 +49,7 @@ final class TableGraphMapper(
     catalog: GraphCatalog = GraphCatalog.empty) {
 
   def readTable(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    graft.Tables(spark, dir, name)
 
   /** Build the full PropertyGraph lazily — every node/edge table is a
     * DataFrame transform; nothing is materialized here. */
@@ -61,12 +61,13 @@ final class TableGraphMapper(
     val labelMappings: Seq[(String, NodeMapping)] =
       nodeMappings.flatMap(nm => nm.labels.map(l => (l, nm)))
     val tables = (nodeMappings.map(_.table) ++ edgeMappings.map(_.table)).distinct
-    // Table opens (parquet footer reads, and rule-4 identifier scans for
-    // labels without a declared constraint) are independent Spark actions —
-    // run them concurrently instead of paying the job-launch latency once
-    // per table and label. Each distinct table is read ONCE; its labels
-    // and edge mappings share the frame, and each label's detection starts
-    // as soon as its own table is open.
+    // Table opens (a listing and one driver-side footer read each, no
+    // job) and rule-4 identifier scans for labels without a declared
+    // constraint (Spark actions) are independent — run them concurrently
+    // instead of paying the latency once per table and label. Each
+    // distinct table is read ONCE; its labels and edge mappings share the
+    // frame, and each label's detection starts as soon as its own table
+    // is open.
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
       math.max(1, math.min(8, math.max(tables.size, labelMappings.size))))
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)

@@ -87,9 +87,11 @@ object Betweenness {
     // (isolated med 75 s vs 23.6 baseline): V·k-row frontiers made every
     // round pay a ~1-2 s driver-side collect + broadcast-relation build.
     // The full-driver form pays ONE edge collect + one tiny md5 job.
-    // Past the cap (or non-integral vids) the distributed loop runs.
-    LocalGraph.collect(e0, eRows, localStateCap, undirected = true) match {
-      case Some(g) => return pivotBetweennessLocalState(spark, g, nPivots, horizon, seed)
+    // Past the cap (or non-integral vids), or when a value outgrows a
+    // long, the distributed loop runs.
+    LocalGraph.collect(e0, eRows, localStateCap, undirected = true)
+      .flatMap(pivotBetweennessLocalState(spark, _, nPivots, horizon, seed)) match {
+      case Some(out) => return out
       case None =>
     }
     // one staging exchange keyed by the message key v (the landmark
@@ -211,15 +213,18 @@ object Betweenness {
   /** Full driver-side Brandes replay over the [[LocalGraph]] — zero
     * per-round jobs. Per-pivot BFS levels, σ accumulation, the exact
     * micro-δ truncating division and the per-vid δ sum all run in
-    * BigInteger (the legacy DECIMAL(38,0) values ARE integers, and
-    * integer arithmetic is ordering- and engine-insensitive, so the
-    * replay is bit-identical). Besides the edge collect, the ONLY
-    * distributed work is one md5 job over [[LocalGraph.vertexFrame]],
-    * so pivot selection uses the exact Dedup.md5Long expression. */
+    * `long`, with `addExact`/`multiplyExact` (the legacy DECIMAL(38,0)
+    * values ARE integers, and integer arithmetic is ordering- and
+    * engine-insensitive, so the replay is bit-identical). A value past
+    * 2⁶³ returns None and the caller runs the DECIMAL(38,0) loop. Besides
+    * the edge collect, the ONLY distributed work is one md5 job over
+    * [[LocalGraph.vertexFrame]], so pivot selection uses the exact
+    * Dedup.md5Long expression. */
   private def pivotBetweennessLocalState(spark: org.apache.spark.sql.SparkSession,
-      g: LocalGraph, nPivots: Int, horizon: Int, seed: Long): DataFrame = {
+      g: LocalGraph, nPivots: Int, horizon: Int, seed: Long): Option[DataFrame] = {
     import org.apache.spark.sql.types._
     import org.apache.spark.sql.Row
+    import java.lang.Math.{addExact, multiplyExact}
     val nV = g.numVertices
     // pivots: k minimum-(md5, vid) vertices — the same expression as the
     // legacy loop, one tiny job over a LocalRelation of the vertex ids
@@ -228,23 +233,24 @@ object Betweenness {
       .orderBy(col("p").asc, col("vid").asc).limit(nPivots)
       .select(col("vid")).collect().map(r => g.index(r.getAs[Number](0).longValue()))
 
-    val Micro = java.math.BigInteger.valueOf(1000000L)
-    val bcm = new Array[java.math.BigInteger](nV) // Σ_pivot δμ per vid
-    pivots.foreach { s =>
+    val Micro = 1000000L
+    val bcm = new Array[Long](nV) // Σ_pivot δμ per vid
+    val dist = new Array[Int](nV)
+    val sigma = new Array[Long](nV)
+    val delta = new Array[Long](nV)
+    try pivots.foreach { s =>
       // forward: BFS levels with exact σ along the shortest-path DAG
-      val dist = new Array[Int](nV)
       java.util.Arrays.fill(dist, -1)
-      val sigma = new Array[java.math.BigInteger](nV)
       dist(s) = 0
-      sigma(s) = java.math.BigInteger.ONE
+      sigma(s) = 1L
       val levels = ArrayBuffer(Array(s))
       var ell = 0
       while (ell < horizon && levels(ell).nonEmpty) {
-        val next = scala.collection.mutable.ArrayBuffer.empty[Int]
+        val next = ArrayBuffer.empty[Int]
         levels(ell).foreach { u =>
           g.foreachNbr(u) { v =>
-            if (dist(v) == -1) { dist(v) = ell + 1; sigma(v) = java.math.BigInteger.ZERO; next += v }
-            if (dist(v) == ell + 1) sigma(v) = sigma(v).add(sigma(u))
+            if (dist(v) == -1) { dist(v) = ell + 1; sigma(v) = 0L; next += v }
+            if (dist(v) == ell + 1) sigma(v) = addExact(sigma(v), sigma(u))
           }
         }
         levels += next.toArray
@@ -252,37 +258,31 @@ object Betweenness {
       }
       if (levels.last.isEmpty) { levels.remove(levels.size - 1); ell -= 1 }
       // reverse: δμ(v) += σ_v · (10⁶ + δμ(w)) div σ_w over DAG edges
-      // (v at level l−1, w at level l) — exact truncating division, and
-      // level ≥ 1 deltas accumulate into the per-vid sum (level-0 deltas
-      // belong to the pivot itself; Brandes excludes the source)
-      val delta = new Array[java.math.BigInteger](nV)
-      levels.foreach(_.foreach(v => delta(v) = java.math.BigInteger.ZERO))
+      // (v at level l−1, w at level l) — exact truncating division (all
+      // terms are non-negative), and level ≥ 1 deltas accumulate into
+      // the per-vid sum (level-0 deltas belong to the pivot itself;
+      // Brandes excludes the source)
+      levels.foreach(_.foreach(v => delta(v) = 0L))
       var l = ell
       while (l >= 1) {
         levels(l).foreach { w =>
-          val t = Micro.add(delta(w))
+          val t = addExact(Micro, delta(w))
           g.foreachNbr(w) { v =>
             if (dist(v) == l - 1)
-              delta(v) = delta(v).add(sigma(v).multiply(t).divide(sigma(w)))
+              delta(v) = addExact(delta(v), multiplyExact(sigma(v), t) / sigma(w))
           }
         }
         // this level's deltas are final once it has pushed to l−1
-        if (l >= 1) levels(l).foreach { v =>
-          bcm(v) = if (bcm(v) == null) delta(v) else bcm(v).add(delta(v))
-        }
+        levels(l).foreach(v => bcm(v) = addExact(bcm(v), delta(v)))
         l -= 1
       }
-    }
-    // one decimal→double cast per vid (BigDecimal.doubleValue — the same
-    // correctly-rounded conversion Spark's Decimal.toDouble performs),
-    // then the single IEEE division by 10⁶, exactly the legacy select
+    } catch { case _: ArithmeticException => return None }
+    // one decimal→double cast per vid (a long converts correctly
+    // rounded, as Spark's Decimal.toDouble does), then the single IEEE
+    // division by 10⁶, exactly the legacy select
     val outSchema = StructType(Seq(StructField("vid", g.vidType),
       StructField("betweenness", DoubleType)))
-    val outRows = (0 until nV).map { i =>
-      val b = bcm(i)
-      Row(g.vid(i), if (b == null) 0.0
-        else new java.math.BigDecimal(b).doubleValue() / 1000000.0)
-    }
-    org.apache.spark.sql.graft.DatasetBridge.localRelation(spark, outSchema, outRows)
+    val outRows = (0 until nV).map(i => Row(g.vid(i), bcm(i).toDouble / 1000000.0))
+    Some(org.apache.spark.sql.graft.DatasetBridge.localRelation(spark, outSchema, outRows))
   }
 }

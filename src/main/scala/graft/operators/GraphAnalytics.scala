@@ -2,8 +2,6 @@ package graft.operators
 
 import graft.cache.StageCache
 import graft.model.PropertyGraph
-import org.apache.spark.graphx.{Edge, Graph}
-import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -117,7 +115,7 @@ object GraphAnalytics {
     * DEMOTE — re-checkpoint the blocks to DISK_ONLY and free the memory
     * copy via [[org.apache.spark.sql.graft.DatasetBridge
     * .unpersistCheckpoint]]. The count is one job over the pinned blocks
-    * ([[org.apache.spark.sql.graft.DatasetBridge.checkpointRows]]), so
+    * ([[org.apache.spark.sql.graft.DatasetBridge.countRows]]), so
     * pin and count take two jobs. The demote pass costs one extra scan
     * exactly when the table is 10× past design volume; below the
     * ceiling (every driver-gate SF and sf1) nothing changes. Returns
@@ -126,7 +124,7 @@ object GraphAnalytics {
     * partitioning-advertising cache use persist([[pinLevel]]) instead. */
   private[graft] def pinTwoPhase(df: DataFrame): (DataFrame, Long) = {
     val p0 = df.localCheckpoint(true)
-    val rows = org.apache.spark.sql.graft.DatasetBridge.checkpointRows(p0)
+    val rows = org.apache.spark.sql.graft.DatasetBridge.countRows(p0)
     if (rows <= pinRowCeiling(df.sparkSession)) (p0, rows)
     else {
       val demoted =
@@ -319,13 +317,18 @@ object GraphAnalytics {
   }
 
   /** Cheap upper bound on [[unifiedEdges]]' row count — Σ per-pattern rel
-    * rows, each a column-free parquet scan count, no union/encode lineage
-    * executed. Feeds `stagingRowsHint` params so staging gates don't run
-    * the unified lineage once for the count and again for the staging
-    * exchange. EXACT for the unified graph (every pattern row becomes
-    * exactly one edge row), an upper bound for filtered projections. */
+    * rows, counted in ONE job over the union of the pattern frames
+    * projected to no columns (column-free parquet scans; no encode
+    * lineage, no aggregate exchange:
+    * [[org.apache.spark.sql.graft.DatasetBridge.countRows]]). Feeds
+    * `stagingRowsHint` params so staging gates don't run the unified
+    * lineage once for the count and again for the staging exchange.
+    * EXACT for the unified graph (every pattern row becomes exactly one
+    * edge row), an upper bound for filtered projections. */
   def unifiedEdgeRowsBound(g: PropertyGraph): Long =
-    g.rels.values.map(_.count()).sum
+    if (g.rels.isEmpty) 0L
+    else org.apache.spark.sql.graft.DatasetBridge.countRows(
+      g.rels.values.map(_.select()).reduce(_ unionAll _))
 
   /** Decode global vertex ids back to (label, node_id). */
   def decode(df: DataFrame, idCol: String, labels: Seq[String]): DataFrame = {
@@ -333,45 +336,6 @@ object GraphAnalytics {
     df.withColumn("label", element_at(labelArr, (shiftright(col(idCol), LabelShift) + 1).cast("int")))
       .withColumn("node_id", col(idCol).bitwiseAND(lit((1L << LabelShift) - 1)))
       .drop(idCol)
-  }
-
-  private def toGraphX(edges: DataFrame): Graph[Int, Int] = {
-    val edgeRdd: RDD[Edge[Int]] = edges.select(col("src"), col("dst")).rdd
-      .map(r => Edge(r.getLong(0), r.getLong(1), 1))
-    Graph.fromEdges(edgeRdd, defaultValue = 0)
-  }
-
-  /** Static PageRank over the unified graph. */
-  def pageRank(g: PropertyGraph, numIter: Int = 10, resetProb: Double = 0.15): DataFrame = {
-    val (edges, labels) = unifiedEdges(g)
-    val spark = edges.sparkSession
-    val ranks = toGraphX(edges).staticPageRank(numIter, resetProb).vertices
-    import spark.implicits._
-    decode(ranks.toDF("vid", "pagerank"), "vid", labels)
-      .select(col("label"), col("node_id"), col("pagerank"))
-  }
-
-  /** Connected components (undirected) via GraphX. */
-  def connectedComponents(g: PropertyGraph): DataFrame = {
-    val (edges, labels) = unifiedEdges(g)
-    val spark = edges.sparkSession
-    val cc = toGraphX(edges).connectedComponents().vertices
-    import spark.implicits._
-    decode(cc.toDF("vid", "component"), "vid", labels)
-      .select(col("label"), col("node_id"), col("component"))
-  }
-
-  /** Per-vertex triangle counts via GraphX (canonicalized edges). */
-  def triangleCounts(g: PropertyGraph): DataFrame = {
-    val (edges, labels) = unifiedEdges(g)
-    val spark = edges.sparkSession
-    val canonical = edges.where(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).as("src"), greatest(col("src"), col("dst")).as("dst"))
-      .distinct()
-    val tc = toGraphX(canonical).triangleCount().vertices
-    import spark.implicits._
-    decode(tc.toDF("vid", "triangles"), "vid", labels)
-      .select(col("label"), col("node_id"), col("triangles").cast("long").as("triangles"))
   }
 
   /** RDD-free per-vertex triangle counting on canonical (u < v) edges —
@@ -1827,7 +1791,7 @@ object GraphAnalytics {
       .partitionBy("pid").orderBy("vid")
       .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
     // global window, bounded input: one row per range partition (cumPartitions)
-    val wOff = org.apache.spark.sql.expressions.Window.orderBy("pid")
+    val wOff = GlobalWindow.orderBy(col("pid"))
       .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
     val offsets = parted.groupBy("pid").agg(sum(col("w")).as("psum"))
       .select(col("pid"), coalesce(sum(col("psum")).over(wOff), lit(0L)).as("off"))
@@ -2768,7 +2732,7 @@ object GraphAnalytics {
     val zeroPad = (deltas.size + 1 to rounds).map(t =>
       spark.range(1).select(lit(t).as("t"), lit(0).cast(dec).as("d")))
     // global window, bounded input: one row per round (rounds + 1 rows)
-    val w = org.apache.spark.sql.expressions.Window.orderBy("t")
+    val w = GlobalWindow.orderBy(col("t"))
       .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
     (Seq(nf0) ++ deltaRows ++ zeroPad).reduce(_ unionAll _)
       .withColumn("approx_pairs", sum(col("d")).over(w).cast(dec))

@@ -396,7 +396,7 @@ object TextAnalysis {
     // where long docs push ln(u)/w inside the 6dp rounding radius of 0)
     val key = round(log(u) / weight, 6) + lit(0.0)
     // global window, bounded input: it ranks the n rows left by limit(n)
-    val w = Window.orderBy(col("sample_key").desc, col(idCol))
+    val w = GlobalWindow.orderBy(col("sample_key").desc, col(idCol))
     df.where(weight > 0)
       .withColumn("sample_key", key)
       .orderBy(col("sample_key").desc, col(idCol)).limit(n)
@@ -478,7 +478,7 @@ object TextAnalysis {
       (col("logw") + round(-log(-log(u)), 6).cast("decimal(18,6)"))
         .cast("double") + lit(0.0))
     // global window, bounded input: it ranks the topK rows left by limit(topK)
-    val w = Window.orderBy(col("sample_key").desc, col("doc_id"))
+    val w = GlobalWindow.orderBy(col("sample_key").desc, col("doc_id"))
     keyed.orderBy(col("sample_key").desc, col("doc_id")).limit(topK)
       .select(col("doc_id"), col("n_feats"),
         col("logw").cast("double").as("log_weight"), col("sample_key"),
@@ -489,16 +489,16 @@ object TextAnalysis {
       alpha: Double = 0.3): DataFrame = {
     val counts = df.groupBy(col(langCol)).agg(count(lit(1)).as("n_in"))
     val withP = counts
-      .withColumn("total", sum(col("n_in")).over(Window.partitionBy()))
+      .withColumn("total", sum(col("n_in")).over(GlobalWindow.all))
       .withColumn("p", col("n_in").cast("double") / col("total").cast("double"))
       // q_raw quantized to 6dp and summed as decimal: exact,
       // order-independent normalization (a double sum would depend on
       // window aggregation order and diverge across engines)
       .withColumn("q_raw", round(pow(col("p"), lit(alpha)), 6).cast("decimal(18,6)"))
       .withColumn("q", col("q_raw").cast("double") /
-        sum(col("q_raw")).over(Window.partitionBy()).cast("double"))
+        sum(col("q_raw")).over(GlobalWindow.all).cast("double"))
       .withColumn("ratio", col("q") / col("p"))
-      .withColumn("rate", col("ratio") / max(col("ratio")).over(Window.partitionBy()))
+      .withColumn("rate", col("ratio") / max(col("ratio")).over(GlobalWindow.all))
       // integer threshold out of 256 md5 buckets, rounded half-up like
       // round(); 1-ulp pow differences cannot flip it off a .5 boundary
       .withColumn("accept_thr", round(col("rate") * 256).cast("long"))

@@ -78,7 +78,7 @@ object TextClassifier {
       .select(col("__cls").as("label"), col("nd").as("n_docs"),
         coalesce(col("t"), lit(0L)).as("n_tokens"), lit(vocab).as("vocab"),
         round(log(col("nd").cast("double") /
-          sum(col("nd")).over(org.apache.spark.sql.expressions.Window.partitionBy())
+          sum(col("nd")).over(GlobalWindow.all)
             .cast("double")), 6).cast("decimal(18,6)").as("prior"),
         round(log(lit(1.0) / (coalesce(col("t"), lit(0L)) + vocab).cast("double")), 6)
           .cast("decimal(18,6)").as("dflt_logp"))

@@ -21,8 +21,8 @@ object AnalyticsQueries {
     * replay as chained CTEs in the oracle — the same technique as
     * g_label_propagation. Under [[LocalGraph.EdgeCap]] edge rows the
     * rounds run on the driver, past it as a distributed loop. Agreement
-    * with GraphX staticPageRank ([[GraphAnalytics.pageRank]], the only
-    * other PageRank operator) is spec-checked. */
+    * with GraphX staticPageRank (the test tree's `GraphXOracles.pageRank`)
+    * is spec-checked. */
   def pagerank(s: SparkSession, dir: String): DataFrame = {
     val (edges, labels) = GraphAnalytics.unifiedEdges(TpchGraph.load(s, dir))
     GraphAnalytics.decode(
@@ -96,8 +96,8 @@ object AnalyticsQueries {
     * path (star rounds + adaptive local fallback). Output is identical to
     * GraphX's connectedComponents — both label every vertex with the
     * minimum global vid of its component (GraphX/DF agreement is
-    * spec-checked); the GraphX operator stays available as
-    * [[GraphAnalytics.connectedComponents]]. */
+    * spec-checked against the test tree's
+    * `GraphXOracles.connectedComponents`). */
   def connectedComponents(s: SparkSession, dir: String): DataFrame = {
     val (edges, labels) = GraphAnalytics.unifiedEdges(TpchGraph.load(s, dir))
     GraphAnalytics.decode(

@@ -2,13 +2,8 @@ package graft.cache
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
-import graft.{SparkEntry, SparkTestBase, Tables}
+import graft.{SparkEntry, SparkTestBase, Tables, WarnLines}
 import graft.operators.{Bpe, GraphAnalytics, Similarity}
-import org.apache.logging.log4j.{Level, LogManager}
-import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
-import org.apache.logging.log4j.core.appender.AbstractAppender
-import org.apache.logging.log4j.core.config.Property
-import org.apache.logging.log4j.core.layout.PatternLayout
 import org.apache.spark.graft.JobCount
 import org.apache.spark.sql.graft.DatasetBridge
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
@@ -134,21 +129,6 @@ class StageCacheSpec extends SparkTestBase {
     assert(after == before)
   }
 
-  /** The WARN lines Spark logs while `body` runs. */
-  private def warnsDuring(body: => Unit): Seq[String] = {
-    val lines = new java.util.concurrent.ConcurrentLinkedQueue[String]
-    val catcher = new AbstractAppender("graft-warn-catcher", null,
-        PatternLayout.createDefaultLayout(), false, Property.EMPTY_ARRAY) {
-      override def append(e: LogEvent): Unit =
-        if (e.getLevel.isMoreSpecificThan(Level.WARN)) lines.add(e.getMessage.getFormattedMessage)
-    }
-    catcher.start()
-    val root = LogManager.getContext(false).asInstanceOf[LoggerContext].getConfiguration.getRootLogger
-    root.addAppender(catcher, Level.WARN, null)
-    try body finally root.removeAppender(catcher.getName)
-    lines.toArray(Array.empty[String]).toSeq
-  }
-
   private val Truncated = "was locally checkpointed, its lineage has been truncated"
 
   test("the Bench sweep frees local checkpoints without a lineage-truncated WARN") {
@@ -159,9 +139,9 @@ class StageCacheSpec extends SparkTestBase {
     val control = spark.range(10).toDF().localCheckpoint(true)
     val controlRdd = DatasetBridge.analyzedPlan(control)
       .collectFirst { case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd }.get
-    assert(warnsDuring(controlRdd.unpersist(blocking = true)).exists(_.contains(Truncated)))
+    assert(WarnLines.during(controlRdd.unpersist(blocking = true)).exists(_.contains(Truncated)))
     assert(spark.sparkContext.getPersistentRDDs.size >= 2)
-    val warns = warnsDuring(DatasetBridge.unpersistAll(spark.sparkContext))
+    val warns = WarnLines.during(DatasetBridge.unpersistAll(spark.sparkContext))
     assert(!warns.exists(_.contains(Truncated)), warns.mkString("\n"))
     assert(spark.sparkContext.getPersistentRDDs.isEmpty)
   }

@@ -3,6 +3,7 @@ package graft.model
 import graft.SparkTestBase
 import graft.operators.{NodeTableBuilder, RelTableBuilder}
 import graft.schema.GraphCatalog
+import org.apache.spark.graft.JobCount
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{col, expr}
 
@@ -18,6 +19,12 @@ class TableGraphMapperSpec extends SparkTestBase {
       "Customer" -> "c_custkey", "Supplier" -> "s_suppkey",
       "Part" -> "p_partkey", "Order" -> "o_orderkey")
     assert(want.keys.map(l => l -> g.schema.identifierOf(l).orNull).toMap == want)
+  }
+
+  test("TpchGraph.load runs no Spark job: declared keys, tables opened without a schema job") {
+    val (g, jobs) = JobCount(spark.sparkContext)(TpchGraph.load(spark, "/root/testdata/sf0.001"))
+    assert(jobs == 0)
+    assert(g.nodes.size == 6 && g.rels.size == 6)
   }
 
   test("one shared read per table returns the rows of separate reads: endpoint checks, " +

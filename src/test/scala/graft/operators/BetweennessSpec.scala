@@ -1,6 +1,9 @@
 package graft.operators
 
 import graft.SparkTestBase
+import graft.model.TpchGraph
+import org.apache.spark.graft.JobCount
+import org.apache.spark.sql.functions.{concat, lit}
 
 class BetweennessSpec extends SparkTestBase {
   import spark.implicits._
@@ -67,6 +70,47 @@ class BetweennessSpec extends SparkTestBase {
         localStateCap = 0L).as[(Long, Double)].collect().toMap
       assert(local == legacy, s"diverged on $g with k=$k h=$h")
     }
+  }
+
+  test("g_betweenness at sf0.001: the edge bound is one job, the driver path two") {
+    val g = TpchGraph.load(spark, "/root/testdata/sf0.001")
+    val (edges, _) = GraphAnalytics.unifiedEdges(g)
+    val (bound, boundJobs) = JobCount(spark.sparkContext)(GraphAnalytics.unifiedEdgeRowsBound(g))
+    assert(boundJobs == 1)
+    assert(bound == edges.count())
+    // the edge collect and the pivot md5 job; the replay runs no job
+    val (out, bcJobs) = JobCount(spark.sparkContext)(Betweenness.pivotBetweenness(edges,
+      nPivots = 4, horizon = 6, seed = 11L, stagingRowsHint = Some(bound)))
+    assert(bcJobs == 2)
+    assert(out.where("betweenness > 0").count() > 0)
+  }
+
+  test("a σ·(10⁶+δ) past 2⁶³ leaves the long replay for the DECIMAL loop, same rows") {
+    // root, then `depth` layers of 8 vertices, each layer joined to the
+    // next completely: σ at layer l is 8^(l−1), so the last reverse step
+    // multiplies σ = 8^(depth−2) by 10⁶ — 3.5e19 > 2⁶³ at depth 17, and
+    // at most 4.4e18 (no overflow) at depth 16. The root is the vertex the
+    // single md5 pivot picks, so the BFS from it reaches every layer.
+    val depth = 17
+    val vids = 0L until 1L + 8L * depth
+    val root = vids.toDF("vid")
+      .withColumn("p", Dedup.md5Long(concat(lit("11:"), $"vid".cast("string"))))
+      .orderBy($"p", $"vid").as[(Long, Long)].head()._1
+    val others = vids.filter(_ != root)
+    val layers = Seq(root) +: others.grouped(8).toSeq
+    val edges = layers.sliding(2).flatMap { case Seq(a, b) =>
+      for (u <- a; v <- b) yield (u, v) }.toSeq.toDF("src", "dst")
+    def run(horizon: Int, cap: Long) = JobCount(spark.sparkContext) {
+      Betweenness.pivotBetweenness(edges, nPivots = 1, horizon = horizon,
+        localStateCap = cap).as[(Long, Double)].collect().sortBy(_._1).toSeq
+    }
+    val (below, belowJobs) = run(depth - 1, LocalGraph.EdgeCap)
+    val (past, pastJobs) = run(depth, LocalGraph.EdgeCap)
+    val (loop, _) = run(depth, 0L)
+    assert(belowJobs <= 3, "below 2⁶³ the replay stays on the driver")
+    assert(pastJobs > belowJobs + 2 * depth, "past 2⁶³ the DECIMAL loop runs")
+    assert(past == loop)
+    assert(below.map(_._2).max > 0.0 && past.map(_._2).max > below.map(_._2).max)
   }
 
   test("disconnected vertices score zero; short-circuit past the true diameter") {

@@ -24,7 +24,7 @@ class GraphAnalyticsSpec extends SparkTestBase {
 
   test("connected components: two components, GraphX and DataFramePregel agree") {
     val g = tinyGraph()
-    val gx = GraphAnalytics.connectedComponents(g)
+    val gx = GraphXOracles.connectedComponents(g)
       .as[(String, Long, Long)].collect().toSet
     // component ids are min global vid per component; comp1 = {A1,A2,B1}, comp2 = {A3,B9}
     val comps = gx.groupBy(_._3).values.map(_.map(t => (t._1, t._2)).toSet).toSet
@@ -213,7 +213,7 @@ class GraphAnalyticsSpec extends SparkTestBase {
     val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L)).toDF("N_nid_source", "N_nid_target")
     val g = PropertyGraph(Map("N" -> nodes), Map(RelPattern("N", "KNOWS", "N") -> edges),
       GraphSchema(Nil, Nil))
-    val got = GraphAnalytics.triangleCounts(g)
+    val got = GraphXOracles.triangleCounts(g)
       .as[(String, Long, Long)].collect().map(t => t._2 -> t._3).toMap
     assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 0L))
   }
@@ -254,7 +254,7 @@ class GraphAnalyticsSpec extends SparkTestBase {
     val g = PropertyGraph(Map("N" -> nodes),
       Map(RelPattern("N", "LINKS", "N") -> edgeSeq.toDF("N_nid_source", "N_nid_target")),
       GraphSchema(Nil, Nil))
-    val gx = GraphAnalytics.pageRank(g, numIter = 10)
+    val gx = GraphXOracles.pageRank(g, numIter = 10)
       .as[(String, Long, Double)].collect().map(t => t._2 -> t._3).toMap
     val (edges, _) = GraphAnalytics.unifiedEdges(g)
     // the fixed-point (oracle-able) DataFrame loop stays within micro-unit
@@ -273,7 +273,7 @@ class GraphAnalyticsSpec extends SparkTestBase {
     val edges = Seq((2L, 1L), (3L, 1L), (4L, 1L), (5L, 1L)).toDF("N_nid_source", "N_nid_target")
     val g = PropertyGraph(Map("N" -> nodes), Map(RelPattern("N", "LINKS", "N") -> edges),
       GraphSchema(Nil, Nil))
-    val pr = GraphAnalytics.pageRank(g, numIter = 20)
+    val pr = GraphXOracles.pageRank(g, numIter = 20)
       .as[(String, Long, Double)].collect().map(t => t._2 -> t._3).toMap
     assert(pr(1L) > pr(2L))
     assert(math.abs(pr.values.sum - 5.0) < 0.3)

@@ -51,6 +51,14 @@ if grep -q "was locally checkpointed, its lineage has been truncated" /tmp/graft
   echo "[gate] FAIL: a freed local checkpoint logged Spark's lineage-truncated WARN"
   exit 1
 fi
+# Deliberate global windows over bounded input use graft.operators
+# .GlobalWindow, whose one-group key keeps WindowExec from logging this
+# WARN each time it plans a keyless window; one of these lines means a
+# keyless Window.orderBy / Window.partitionBy() is back.
+if grep -q "No Partition Defined for Window operation" /tmp/graft_gate_verify.log; then
+  echo "[gate] FAIL: a keyless window logged Spark's No-Partition-Defined WARN (use GlobalWindow)"
+  exit 1
+fi
 
 echo "[gate] 2/4 oracle compare"
 python3 tools/check_oracle.py "$SF" "$OUT"

@@ -45,23 +45,11 @@ object DatasetBridge {
       case _ => ()
     }
 
-  /** Row count in one job wherever the plan allows it. A locally
-    * checkpointed frame counts its blocks. Any other plan without an
-    * exchange counts the rows of its physical plan, projected to no
-    * columns (a parquet scan then reads no column data). `Dataset.count`
-    * plans an aggregate whose exchange adaptive execution runs as a
-    * second job; a plan that shuffles anyway still counts through it. */
-  def countRows(df: DataFrame): Long = df.queryExecution.analyzed match {
-    case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.count()
-    case _ =>
-      val qe = df.select().queryExecution
-      val shuffles = qe.executedPlan.exists {
-        case _: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => true
-        case _: org.apache.spark.sql.execution.exchange.Exchange => true
-        case _ => false
-      }
-      if (shuffles) df.count() else qe.toRdd.count()
-  }
+  /** Row count of the physical plan projected to no columns: one job
+    * for an exchange-free plan (a parquet scan then reads no column
+    * data), where `Dataset.count` plans an aggregate whose exchange
+    * adaptive execution runs as a second job. */
+  def countRows(df: DataFrame): Long = df.select().queryExecution.toRdd.count()
 
   /** Frees every persistent RDD of `sc` — the sweep between independent
     * queries — through `SparkContext.unpersistRDD`, as

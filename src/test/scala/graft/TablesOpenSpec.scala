@@ -2,6 +2,11 @@ package graft
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.parquet.example.data.simple.{NanoTime, SimpleGroupFactory}
+import org.apache.parquet.hadoop.example.ExampleParquetWriter
+import org.apache.parquet.schema.MessageTypeParser
 import org.apache.spark.graft.JobCount
 import org.apache.spark.sql.{AnalysisException, DataFrame, Row}
 import org.apache.spark.sql.functions._
@@ -85,6 +90,43 @@ class TablesOpenSpec extends SparkTestBase {
       assert(opened.schema.fieldNames.toSeq == Seq("id", "s", "extra"), name)
       assertSameOpen(opened, spark.read.parquet(d), name)
     }
+  }
+
+  test("binary, INT96 and timestamp_ntz columns follow the session's parquet read settings") {
+    // written without Spark's schema in the footer metadata, which Spark
+    // would read in place of converting the parquet types
+    val dir = Files.createTempDirectory("graft-open-conv").toString
+    val parquetSchema = MessageTypeParser.parseMessageType(
+      """message m { required int64 id; optional binary bin; optional int96 ts96;
+        |  optional int64 ntz (TIMESTAMP(MICROS,false)); }""".stripMargin)
+    val writer = ExampleParquetWriter.builder(new HPath(s"$dir/part-0.parquet"))
+      .withType(parquetSchema).withConf(new Configuration()).build()
+    try writer.write(new SimpleGroupFactory(parquetSchema).newGroup()
+      .append("id", 1L).append("bin", "a").append("ts96", new NanoTime(2460311, 0L))
+      .append("ntz", 1704067200000000L))
+    finally writer.close()
+    def schemaOrError(df: => DataFrame): Either[String, org.apache.spark.sql.types.StructType] =
+      try Right(df.schema) catch {
+        case e: Exception if !e.isInstanceOf[org.scalatest.exceptions.TestFailedException] =>
+          Left(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq.last.getMessage)
+      }
+    // each setting away from its default, and the defaults themselves
+    val settings = Seq(
+      Map.empty[String, String],
+      Map("spark.sql.parquet.binaryAsString" -> "true"),
+      Map("spark.sql.parquet.int96AsTimestamp" -> "false"),
+      Map("spark.sql.parquet.inferTimestampNTZ.enabled" -> "false"))
+    val outcomes = settings.map { kv =>
+      kv.foreach { case (k, v) => spark.conf.set(k, v) }
+      try {
+        val got = schemaOrError(openNoJob(dir))
+        val want = schemaOrError(spark.read.parquet(dir))
+        assert(got == want, s"$kv")
+        got
+      } finally kv.keys.foreach(spark.conf.unset)
+    }
+    // every setting changes the schema, so each is really exercised
+    assert(outcomes.distinct.size == settings.size, outcomes.mkString("\n"))
   }
 
   test("with schema merging on, two parts with different columns still merge") {

@@ -63,9 +63,10 @@ object Betweenness {
     * k = V for exact distributed Brandes.
     *
     * @param stagingRowsHint cheap upper bound on the DIRECTED edge rows
-    * (the [[GraphAnalytics.linkFeatures]] pattern): spares the staging
-    * gate an exact count of an expensive non-scan edge lineage, which
-    * would otherwise execute that lineage twice. */
+    * (the [[GraphAnalytics.linkFeatures]] pattern), read only past the
+    * driver cap: it sizes the distributed staging and spares it an exact
+    * count of an expensive non-scan edge lineage. Under the cap the edge
+    * read is its own gate and the hint is unused. */
   def pivotBetweenness(edges: DataFrame, nPivots: Int, horizon: Int,
       seed: Long = 11L, srcCol: String = "src", dstCol: String = "dst",
       broadcastState: Boolean = true,
@@ -75,7 +76,6 @@ object Betweenness {
     val spark = edges.sparkSession
     val e0 = edges.select(col(srcCol).as("u"), col(dstCol).as("v"))
       .where(col("u") =!= col("v"))
-    val eRows = stagingRowsHint.getOrElse(e0.count())
     // DRIVER-LOCAL Brandes under the cap: EVERY quantity in this
     // operator is exact integer arithmetic — σ sums, the micro-δ
     // `σ_v·(10⁶+δ_w) div σ_w` truncating division, the per-vid δ sum —
@@ -86,14 +86,15 @@ object Betweenness {
     // frontier broadcasts and LOST to the legacy loop at 32 cores
     // (isolated med 75 s vs 23.6 baseline): V·k-row frontiers made every
     // round pay a ~1-2 s driver-side collect + broadcast-relation build.
-    // The full-driver form pays ONE edge collect + one tiny md5 job.
-    // Past the cap (or non-integral vids), or when a value outgrows a
-    // long, the distributed loop runs.
-    LocalGraph.collect(e0, eRows, localStateCap, undirected = true)
+    // The full-driver form pays ONE edge read (its own size gate) + one
+    // tiny md5 job. Past the cap (or non-integral vids), or when a value
+    // outgrows a long, the distributed loop runs.
+    LocalGraph.collect(e0, localStateCap, undirected = true)
       .flatMap(pivotBetweennessLocalState(spark, _, nPivots, horizon, seed)) match {
       case Some(out) => return out
       case None =>
     }
+    val eRows = stagingRowsHint.getOrElse(e0.count())
     // one staging exchange keyed by the message key v (the landmark
     // recipe): every forward σ-sum and reverse δ-sum then rides the
     // pinned layout. Level memory-budgeted ([[GraphAnalytics.pinLevel]]):
@@ -223,11 +224,10 @@ object Betweenness {
   private def pivotBetweennessLocalState(spark: org.apache.spark.sql.SparkSession,
       g: LocalGraph, nPivots: Int, horizon: Int, seed: Long): Option[DataFrame] = {
     import org.apache.spark.sql.types._
-    import org.apache.spark.sql.Row
     import java.lang.Math.{addExact, multiplyExact}
     val nV = g.numVertices
     // pivots: k minimum-(md5, vid) vertices — the same expression as the
-    // legacy loop, one tiny job over a LocalRelation of the vertex ids
+    // legacy loop, one tiny job over the broadcast vertex ids
     val pivots: Array[Int] = g.vertexFrame(spark, "vid")
       .withColumn("p", Dedup.md5Long(concat(lit(s"$seed:"), col("vid").cast("string"))))
       .orderBy(col("p").asc, col("vid").asc).limit(nPivots)
@@ -282,7 +282,7 @@ object Betweenness {
     // division by 10⁶, exactly the legacy select
     val outSchema = StructType(Seq(StructField("vid", g.vidType),
       StructField("betweenness", DoubleType)))
-    val outRows = (0 until nV).map(i => Row(g.vid(i), bcm(i).toDouble / 1000000.0))
-    Some(org.apache.spark.sql.graft.DatasetBridge.localRelation(spark, outSchema, outRows))
+    Some(org.apache.spark.sql.graft.DatasetBridge.arrayFrame(spark, outSchema,
+      Seq(g.vids, bcm.map(_.toDouble / 1000000.0))))
   }
 }

@@ -321,8 +321,9 @@ object GraphAnalytics {
     * projected to no columns (column-free parquet scans; no encode
     * lineage, no aggregate exchange:
     * [[org.apache.spark.sql.graft.DatasetBridge.countRows]]). Feeds
-    * `stagingRowsHint` params so staging gates don't run the unified
-    * lineage once for the count and again for the staging exchange.
+    * `stagingRowsHint` params so distributed staging doesn't run the
+    * unified lineage once for the count and again for the exchange; a
+    * driver replay's gate is its own edge read and needs none.
     * EXACT for the unified graph (every pattern row becomes exactly one
     * edge row), an upper bound for filtered projections. */
   def unifiedEdgeRowsBound(g: PropertyGraph): Long =
@@ -1389,8 +1390,6 @@ object GraphAnalytics {
     // bytes, and min-collapse degenerates to dedup, so stage bare
     // (u, v) pairs and attach the constant on the partitioned stream
     val eProj = if (unitWeight) e0.select(col("u"), col("v")) else e0
-    val eDirRows = eProj.count()
-    val eRowsBound = (if (undirected) 2L else 1L) * eDirRows
     // DRIVER-LOCAL bounded relaxation under the cap: every quantity in
     // this operator is exact integer min-plus — distances are long sums
     // of long weights folded with min, the frontier is "strictly
@@ -1398,14 +1397,16 @@ object GraphAnalytics {
     // so a synchronous replay over the [[LocalGraph]] is provably
     // bit-identical to the distributed rounds. Replaces ~3 jobs/round
     // (two broadcast builds + the materializing count) with ONE edge
-    // collect and zero staging exchange. Past the cap (or non-integral
-    // vids) the distributed loop runs; `localStateCap = 0` forces it.
-    LocalGraph.collect(eProj, eDirRows, localStateCap, undirected,
+    // read, its own size gate, and zero staging exchange. Past the cap
+    // (or non-integral vids) the distributed loop runs;
+    // `localStateCap = 0` forces it.
+    LocalGraph.collect(eProj, localStateCap, undirected,
         weightCol = if (unitWeight) None else Some("w"),
         extraVids = Some(sources)) match {
       case Some(g) => return ssspLocalState(edges.sparkSession, g, rounds, collectStats)
       case None =>
     }
+    val eRowsBound = (if (undirected) 2L else 1L) * eProj.count()
     val (eBase, eParts) = volumeStage(eProj, eRowsBound)
     val eRaw =
       if (!undirected) eBase
@@ -1498,7 +1499,6 @@ object GraphAnalytics {
   private def ssspLocalState(spark: SparkSession, g: LocalGraph, rounds: Int,
       collectStats: Boolean): (DataFrame, Seq[Long]) = {
     import org.apache.spark.sql.types._
-    import org.apache.spark.sql.Row
     val (nV, offsets, nbrs) = (g.numVertices, g.offsets, g.nbrs)
     val unitWeight = g.weights.isEmpty
     val w = g.weights.getOrElse(Array.emptyLongArray)
@@ -1535,10 +1535,9 @@ object GraphAnalytics {
     }
     val outSchema = StructType(Seq(StructField("vid", g.vidType),
       StructField("dist", LongType)))
-    val outRows = (0 until nV).filter(dist(_) != Unreached)
-      .map(i => Row(g.vid(i), dist(i)))
-    (org.apache.spark.sql.graft.DatasetBridge.localRelation(spark, outSchema,
-      outRows), frontierSizes.toList)
+    val reached = (0 until nV).filter(dist(_) != Unreached).toArray
+    (org.apache.spark.sql.graft.DatasetBridge.arrayFrame(spark, outSchema,
+      Seq(reached.map(g.vids), reached.map(dist))), frontierSizes.toList)
   }
 
   // ----------------------------------------------------- walk-family staging
@@ -2040,8 +2039,9 @@ object GraphAnalytics {
     * the vids are integral, the rounds run on the DRIVER over one
     * collected [[LocalGraph]] — a full recompute per round on primitive
     * arrays, with the same rows, per-round frontier sizes and sentinel
-    * rows — and the output is a LocalRelation. Otherwise the
-    * dense/frontier join loop above runs. */
+    * rows — and the output is served from a broadcast
+    * ([[org.apache.spark.sql.graft.DatasetBridge.arrayFrame]]). Otherwise
+    * the dense/frontier join loop above runs. */
   def coreness(edges: DataFrame, rounds: Int = 12,
       srcCol: String = "src", dstCol: String = "dst",
       toFixpoint: Boolean = false, maxRounds: Int = 96): DataFrame =
@@ -2065,25 +2065,23 @@ object GraphAnalytics {
     val e0 = edges.select(col(srcCol).as("u"), col(dstCol).as("v"))
       .where(col("u") =!= col("v"))
     val budget = if (toFixpoint) maxRounds else rounds
-    // eager pin BEFORE anything reads the edges: the caller hands over a
-    // raw join lineage (unified edges), and reading it lazily would run
-    // that lineage once for the count and AGAIN for the collect or the
-    // doubled repartition below — the pin makes every later read a cache
-    // scan, and its exact row count gates the driver replay
-    val (e0cp, eRows) = pinTwoPhase(e0)
     // DRIVER-LOCAL rounds under the cap: values are exact integers and a
     // frontier round only skips recomputes that would reproduce the old
     // value, so a full-recompute replay over the [[LocalGraph]] (deduped,
     // both directions) is bit-identical to the join loop — values, moved
-    // counts, sentinels. Pin, count, collect: three jobs in all. Past
-    // the cap (or non-integral vids) the join loop runs on the same pin.
-    LocalGraph.collect(e0cp, eRows, localStateCap, undirected = true) match {
+    // counts, sentinels. One job in all: the edge read is its own gate.
+    LocalGraph.collect(e0, localStateCap, undirected = true) match {
       case Some(g) =>
-        org.apache.spark.sql.graft.DatasetBridge.unpersistCheckpoint(e0cp)
         return corenessLocalState(edges.sparkSession, g, rounds, budget, toFixpoint,
           collectStats)
       case None =>
     }
+    // past the cap, an eager pin before the join loop reads the edges:
+    // the caller hands over a raw join lineage (unified edges), and
+    // reading it lazily would run that lineage once for the count and
+    // AGAIN for the doubled repartition below — the pin makes every later
+    // read a cache scan
+    val (e0cp, eRows) = pinTwoPhase(e0)
     // vertex values broadcast under the guard (the SSSP bake-off
     // shape): the per-round join never shuffles edges; the one window
     // exchange per round now carries only the candidates' adjacency.
@@ -2266,7 +2264,6 @@ object GraphAnalytics {
   private def corenessLocalState(spark: SparkSession, g: LocalGraph, rounds: Int,
       budget: Int, toFixpoint: Boolean, collectStats: Boolean): (DataFrame, Seq[Long]) = {
     import org.apache.spark.sql.types._
-    import org.apache.spark.sql.Row
     val (n, offsets, nbrs) = (g.numVertices, g.offsets, g.nbrs)
     def deg(u: Int): Int = offsets(u + 1) - offsets(u)
     var cv = Array.tabulate(n)(deg(_).toLong)
@@ -2295,9 +2292,8 @@ object GraphAnalytics {
       if (collectStats) frontierSizes += lastMoved
     }
     val schema = StructType(Seq(StructField("vid", g.vidType), StructField("coreness", LongType)))
-    (withCorenessSentinels(org.apache.spark.sql.graft.DatasetBridge.localRelation(spark, schema,
-      (0 until n).map(u => Row(g.vid(u), cv(u)))), lastMoved, r, rounds, toFixpoint),
-      frontierSizes.toSeq)
+    (withCorenessSentinels(org.apache.spark.sql.graft.DatasetBridge.arrayFrame(spark, schema,
+      Seq(g.vids, cv)), lastMoved, r, rounds, toFixpoint), frontierSizes.toSeq)
   }
 
   /** Coreness's (vid, coreness) rows plus its sentinel rows: (−1, the
@@ -2478,50 +2474,47 @@ object GraphAnalytics {
     * exact legacy recurrence — registers never shrink, a vertex
     * re-absorbs nothing from an unchanged neighbor), and the round's
     * old/new estimates come from ONE [[Sketches.hllEstimateGrouped]] job
-    * over a LocalRelation of the changed vertices' register rows — the
+    * over a broadcast frame of the changed vertices' register rows — the
     * same expressions, the same bits. Returns the same (est0, deltas,
     * frontierSizes) triple. */
   private def hllBallDeltasLocal(spark: SparkSession, g: LocalGraph,
       rounds: Int, b: Int,
       collectStats: Boolean): (DataFrame, Seq[DataFrame], Seq[Long]) = {
     import org.apache.spark.sql.types._
-    import org.apache.spark.sql.Row
     val m = 1 << b
     val (nV, vids) = (g.numVertices, g.vids)
     // ball(src) ∪= ball(dst) per edge; the reverse adjacency drives the
     // candidate scan (who absorbs from d?)
     val inG = g.reverse
-    // initial registers: the SAME hash/rho expressions, one job over a
-    // LocalRelation of the vertex ids
+    // initial registers: the SAME hash/rho expressions, one job over
+    // the vertex frame
     val regs: Array[Array[Byte]] = Array.fill(nV)(new Array[Byte](m))
     Sketches.hllRegistersGrouped(g.vertexFrame(spark, "vid"), "vid", col("vid"), b).collect()
       .foreach { r =>
         regs(g.index(r.getLong(0)))(r.getLong(1).toInt) = r.getInt(2).toByte
       }
     // one estimate job over (k, register) rows — hllEstimateGrouped only
-    // reads the register column and the per-group row count
+    // reads the register column and the per-group row count; one row
+    // per nonzero register of each (key, registers) pair, in order
     val estSchema = StructType(Seq(
       StructField("k", LongType), StructField("register", IntegerType)))
-    def estimates(rows: IndexedSeq[Row]): java.util.HashMap[Long, Double] = {
+    def estimates(regs: Iterator[(Long, Array[Byte])]): java.util.HashMap[Long, Double] = {
+      val (ks, rs) = (Array.newBuilder[Long], Array.newBuilder[Long])
+      regs.foreach { case (k, a) =>
+        var j = 0
+        while (j < m) { if (a(j) != 0) { ks += k; rs += a(j).toLong }; j += 1 }
+      }
       val out = new java.util.HashMap[Long, Double]()
       Sketches.hllEstimateGrouped(org.apache.spark.sql.graft.DatasetBridge
-          .localRelation(spark, estSchema, rows), "k", b)
+          .arrayFrame(spark, estSchema, Seq(ks.result(), rs.result())), "k", b)
         .collect().foreach(r => out.put(r.getLong(0), r.getDouble(1)))
       out
     }
-    def regRows(k: Long, a: Array[Byte]): Seq[Row] = {
-      val buf = scala.collection.mutable.ArrayBuffer.empty[Row]
-      var j = 0
-      while (j < m) { if (a(j) != 0) buf += Row(k, a(j).toInt); j += 1 }
-      buf.toSeq
-    }
-    val est0Map = estimates(
-      (0 until nV).flatMap(i => regRows(i.toLong, regs(i))).toIndexedSeq)
+    val est0Map = estimates(Iterator.range(0, nV).map(i => (i.toLong, regs(i))))
     val estOutSchema = StructType(Seq(
       StructField("vid", LongType), StructField("approx_distinct", DoubleType)))
-    val est0 = org.apache.spark.sql.graft.DatasetBridge.localRelation(spark,
-      estOutSchema,
-      (0 until nV).map(i => Row(vids(i), est0Map.get(i.toLong))).toIndexedSeq)
+    val est0 = org.apache.spark.sql.graft.DatasetBridge.arrayFrame(spark, estOutSchema,
+      Seq(vids, Array.tabulate(nV)(i => est0Map.get(i.toLong))))
 
     val deltaSchema = StructType(Seq(StructField("vid", LongType),
       StructField("old_est", DoubleType), StructField("new_est", DoubleType)))
@@ -2560,14 +2553,12 @@ object GraphAnalytics {
         if (updates.isEmpty) changedPrev = Array.empty
         else {
           // the round's one estimate job: old at even keys, new at odd
-          val rows = updates.iterator.flatMap { case (i, old, nw) =>
-            regRows(2L * i, old) ++ regRows(2L * i + 1, nw)
-          }.toIndexedSeq
-          val estMap = estimates(rows)
-          deltas += org.apache.spark.sql.graft.DatasetBridge.localRelation(spark,
-            deltaSchema, updates.map { case (i, _, _) =>
-              Row(vids(i), estMap.get(2L * i), estMap.get(2L * i + 1))
-            }.toIndexedSeq)
+          val estMap = estimates(updates.iterator.flatMap { case (i, old, nw) =>
+            Iterator((2L * i, old), (2L * i + 1, nw))
+          })
+          val ix = updates.map(_._1).toArray
+          deltas += org.apache.spark.sql.graft.DatasetBridge.arrayFrame(spark, deltaSchema,
+            Seq(ix.map(vids), ix.map(i => estMap.get(2L * i)), ix.map(i => estMap.get(2L * i + 1))))
           updates.foreach { case (i, _, nw) => regs(i) = nw }
           changedPrev = updates.map(_._1).toArray
         }
@@ -2580,24 +2571,27 @@ object GraphAnalytics {
       srcCol: String, dstCol: String,
       collectStats: Boolean = false,
       localStateCap: Long = LocalGraph.WideStateCap): (DataFrame, Seq[DataFrame], Seq[Long]) = {
-    val eFull = edges.select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
+    val eDistinct = edges.select(col(srcCol).cast("long").as("src"),
+        col(dstCol).cast("long").as("dst"))
       .where(col("src").isNotNull && col("dst").isNotNull)
-      .distinct().localCheckpoint(true)
-    val eRows = eFull.count()
+      .distinct()
     // LOCAL-STATE register loop under the wide-state cap: register
     // state is V·2^b BYTES of pure integer max — the driver replays the
     // exact recurrence — while every FLOATING value (initial registers'
     // hashes, all estimates) still comes out of the same Sketches
-    // expressions run over LocalRelations, so the output is
+    // expressions run over broadcast frames, so the output is
     // bit-identical to the distributed loop. The legacy loop pays ~4
     // jobs per round (broadcast builds + the materializing count) over
     // frontier frames that are metadata-sized here; the local path pays
-    // one tiny estimate job per round.
-    LocalGraph.collect(eFull, eRows, localStateCap, undirected = false) match {
+    // one tiny estimate job per round. The edge read is its own gate;
+    // the distributed loop pins and counts after it.
+    LocalGraph.collect(eDistinct, localStateCap, undirected = false) match {
       case Some(g) =>
         return hllBallDeltasLocal(edges.sparkSession, g, rounds, b, collectStats)
       case None =>
     }
+    val eFull = eDistinct.localCheckpoint(true)
+    val eRows = eFull.count()
     // volume-sized scan width over the cached edge blocks (narrow — each
     // coalesced task reads several cached partitions; no shuffle)
     val eParts = volumeParts(edges.sparkSession, eRows)

@@ -1,6 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.graft.{ColumnBridge, DatasetBridge}
 import org.apache.spark.sql.types._
 
 /** Driver-local CSR graph — the one adjacency every collect-and-replay
@@ -18,7 +20,9 @@ import org.apache.spark.sql.types._
   * built by sorting — no boxed pair, set or map per edge.
   *
   * The contract [[LocalGraph.collect]] gives every replay:
-  *   - ONE `collect()` of the edge frame, and nothing else for edges;
+  *   - ONE job reads the edge frame, packed into primitive arrays, and
+  *     nothing else reads edges; its row count is the size gate, so a
+  *     caller runs no count or pin before it;
   *   - edges are deduplicated, and parallel weighted edges keep their
   *     minimum weight (the distributed loops' min-collapse);
   *   - or, with `sumParallel`, every row counts (the rank family's
@@ -26,10 +30,12 @@ import org.apache.spark.sql.types._
   *     weights, or its multiplicity (row count) when unweighted, so the
   *     graph is always weighted;
   *   - `undirected` stores both directions of every edge;
+  *   - the weight column is integral under either collapse;
   *   - under min-collapse, rows with a null endpoint or weight are
   *     dropped, as the distributed equi-joins and `min` drop them; under
   *     sum-collapse such a row makes the graph `None`, since dropping it
-  *     would change every count it belongs to;
+  *     would change every count it belongs to. Either way it counts
+  *     toward the gate;
   *   - self-loops are kept: callers that exclude them filter first.
   */
 final class LocalGraph private (
@@ -64,17 +70,13 @@ final class LocalGraph private (
     LocalGraph.build(vids, nbrs, src, weights, extra, vidType)
   }
 
-  /** Vertex `i`'s id as a value of [[vidType]], for output rows. */
-  def vid(i: Int): Any = LocalGraph.narrow(vids(i), vidType)
-
-  /** The vertex ids as a one-column LocalRelation of [[vidType]]: the
-    * frame a replay runs the distributed loop's own hash expressions
-    * over (Bc pivots, MIS priorities, HLL registers), so those values
-    * come out of the same Spark expressions in both paths. */
+  /** The vertex ids as a one-column frame of [[vidType]], served from a
+    * broadcast ([[DatasetBridge.arrayFrame]]): the frame a replay runs the
+    * distributed loop's own hash expressions over (Bc pivots, MIS
+    * priorities, HLL registers), so those values come out of the same
+    * Spark expressions in both paths. */
   def vertexFrame(spark: SparkSession, colName: String): DataFrame =
-    org.apache.spark.sql.graft.DatasetBridge.localRelation(spark,
-      StructType(Seq(StructField(colName, vidType))),
-      vids.indices.map(i => Row(vid(i))))
+    DatasetBridge.arrayFrame(spark, StructType(Seq(StructField(colName, vidType))), Seq(vids))
 }
 
 object LocalGraph {
@@ -90,37 +92,37 @@ object LocalGraph {
   val WideStateCap = 131072L
 
   /** The edge frame's first two columns as a [[LocalGraph]], or `None`
-    * when `directedRows > cap`, `cap <= 0` (the hook specs use to force
-    * the distributed loop), or an endpoint or extra-vid column (under
-    * `sumParallel`, also the weight column) is not Byte/Short/Int/Long.
+    * when the frame has more than `cap` rows, `cap <= 0` (the hook specs
+    * use to force the distributed loop; no job runs), or an endpoint,
+    * extra-vid or weight column is not Byte/Short/Int/Long.
     *
-    * @param directedRows the caller's bound on the edge frame's rows;
-    *   the gate never executes the lineage
+    * The edges are read in ONE job, which is also the gate: each task
+    * reads its endpoints (and weight) with typed getters into primitive
+    * `long` arrays, counts its rows as it goes — null rows included —
+    * and ships one block compressed with Spark's I/O codec, or only its
+    * count once its partition passes `cap`. The driver keeps a running
+    * total; once it passes `cap` the blocks are dropped and the job is
+    * cancelled, so the driver never holds more than `cap` rows plus the
+    * blocks in flight.
+    *
     * @param weightCol integral weight column of `edges`, if weighted
     * @param extraVids frame whose first column names vertices to keep
     *   even when isolated (SSSP sources); their indices are [[LocalGraph.extra]]
     * @param sumParallel sum-collapse instead of min-collapse (see the
     *   class contract); also `None` when a row has a null
     */
-  def collect(edges: DataFrame, directedRows: Long, cap: Long,
-      undirected: Boolean, weightCol: Option[String] = None,
-      extraVids: Option[DataFrame] = None, sumParallel: Boolean = false): Option[LocalGraph] = {
-    val wIdx = weightCol.map(edges.schema.fieldIndex)
-    val types = edges.schema.take(2).map(_.dataType) ++
-      extraVids.map(_.schema.head.dataType)
-    val wIntegral = !sumParallel || wIdx.forall(i => rank(edges.schema(i).dataType) >= 0)
-    if (cap <= 0 || directedRows > cap || !types.forall(rank(_) >= 0) || !wIntegral)
-      return None
-    def complete(r: Row): Boolean =
-      !r.isNullAt(0) && !r.isNullAt(1) && wIdx.forall(!r.isNullAt(_))
-    val all = edges.collect()
-    val rows = if (!sumParallel) all.filter(complete)
-      else if (all.forall(complete)) all
-      else return None
-    def long(r: Row, i: Int): Long = r.getAs[Number](i).longValue()
+  def collect(edges: DataFrame, cap: Long, undirected: Boolean,
+      weightCol: Option[String] = None, extraVids: Option[DataFrame] = None,
+      sumParallel: Boolean = false): Option[LocalGraph] = {
+    val attrs = edges.queryExecution.analyzed.output
+    val read = attrs.take(2) ++ weightCol.map(c => attrs(edges.schema.fieldIndex(c)))
+    val vidTypes = attrs.take(2).map(_.dataType) ++ extraVids.map(_.schema.head.dataType)
+    if (cap <= 0 || !(vidTypes ++ read.map(_.dataType)).forall(rank(_) >= 0)) return None
+    val edgeCols = packed(edges.select(read.map(ColumnBridge.column): _*), cap)
+      .filter(p => !sumParallel || !p.nulls).getOrElse(return None).cols
     val extraRaw = extraVids.fold(Array.emptyLongArray)(x =>
-      x.select(x.columns.head).collect().filter(!_.isNullAt(0)).map(long(_, 0)))
-    val (us, vs) = (rows.map(long(_, 0)), rows.map(long(_, 1)))
+      packed(x.select(x.columns.head), Long.MaxValue).get.cols.head)
+    val (us, vs) = (edgeCols(0), edgeCols(1))
     val ends = (us ++ vs ++ extraRaw).sorted
     var n = 0
     ends.indices.foreach { k =>
@@ -129,12 +131,105 @@ object LocalGraph {
     val vids = java.util.Arrays.copyOf(ends, n)
     def idx(v: Long): Int = java.util.Arrays.binarySearch(vids, v)
     val (a, b) = (us.map(idx), vs.map(idx))
-    val w = wIdx.map(i => rows.map(long(_, i)))
-      .orElse(if (sumParallel) Some(Array.fill(rows.length)(1L)) else None)
+    val w = edgeCols.lift(2)
+      .orElse(if (sumParallel) Some(Array.fill(us.length)(1L)) else None)
       .map(ws => if (undirected) ws ++ ws else ws)
     Some(build(vids, if (undirected) a ++ b else a, if (undirected) b ++ a else b,
-      w, extraRaw.map(idx).sorted.distinct, types.maxBy(rank),
+      w, extraRaw.map(idx).sorted.distinct, vidTypes.maxBy(rank),
       if (sumParallel) Math.addExact(_: Long, _: Long) else math.min(_: Long, _: Long)))
+  }
+
+  /** The complete rows of a frame of integral columns, column by column,
+    * and whether a row with a null was dropped. */
+  private final case class Packed(cols: Array[Array[Long]], nulls: Boolean)
+
+  /** One job over `df`'s integral columns (see [[collect]]): `None` once
+    * the row count, null rows included, passes `cap`. */
+  private def packed(df: DataFrame, cap: Long): Option[Packed] = {
+    val ranks = df.schema.map(f => rank(f.dataType)).toArray
+    val k = ranks.length
+    val rdd = df.queryExecution.toRdd
+    val sc = rdd.sparkContext
+    val blocks = new Array[Block](rdd.getNumPartitions)
+    var total = 0L
+    @volatile var over = false
+    @volatile var job: org.apache.spark.SimpleFutureAction[Unit] = null
+    // the scheduler calls this once per task, under the job waiter's lock
+    def received(p: Int, b: Block): Unit = if (!over) {
+      total += b.rows
+      if (total <= cap) blocks(p) = b
+      else {
+        over = true
+        blocks.indices.foreach(blocks(_) = null)
+        Option(job).foreach(_.cancel())
+      }
+    }
+    job = sc.submitJob(rdd, (it: Iterator[InternalRow]) => pack(it, ranks, cap),
+      blocks.indices, received, ())
+    if (over) job.cancel()
+    scala.concurrent.Await.ready(job, scala.concurrent.duration.Duration.Inf)
+    if (over) return None
+    job.value.get.get
+    val cols = Array.fill(k)(new Array[Long](blocks.map(_.kept).sum))
+    var at = 0
+    blocks.foreach { b =>
+      val in = new java.io.DataInputStream(DatasetBridge.decompressed(
+        new java.io.ByteArrayInputStream(b.bytes)))
+      val buf = new Array[Byte](b.kept * 8)
+      cols.foreach { c =>
+        in.readFully(buf)
+        java.nio.ByteBuffer.wrap(buf).asLongBuffer().get(c, at, b.kept)
+      }
+      at += b.kept
+    }
+    Some(Packed(cols, blocks.exists(_.nulls)))
+  }
+
+  /** One task's share of [[packed]]: its row count, whether it dropped a
+    * null row, and its complete rows as `kept` longs per column,
+    * compressed; no rows once the count passes the cap. */
+  private final case class Block(rows: Long, nulls: Boolean, kept: Int, bytes: Array[Byte])
+
+  private def pack(it: Iterator[InternalRow], ranks: Array[Int], cap: Long): Block = {
+    val k = ranks.length
+    var cols = Array.fill(k)(new Array[Long](1024))
+    var rows = 0L
+    var kept = 0
+    var nulls = false
+    while (rows <= cap && it.hasNext) {
+      val r = it.next()
+      rows += 1
+      var c = 0
+      while (c < k && !r.isNullAt(c)) c += 1
+      if (c < k) nulls = true
+      else if (rows <= cap) {
+        if (kept == cols(0).length) cols = cols.map(java.util.Arrays.copyOf(_, 2 * kept))
+        c = 0
+        while (c < k) {
+          cols(c)(kept) = ranks(c) match {
+            case 0 => r.getByte(c).toLong
+            case 1 => r.getShort(c).toLong
+            case 2 => r.getInt(c).toLong
+            case _ => r.getLong(c)
+          }
+          c += 1
+        }
+        kept += 1
+      }
+    }
+    if (rows > cap) Block(rows, nulls, 0, Array.emptyByteArray)
+    else {
+      val bytes = new java.io.ByteArrayOutputStream
+      val out = DatasetBridge.compressed(bytes)
+      val buf = java.nio.ByteBuffer.allocate(kept * 8)
+      cols.foreach { c =>
+        buf.clear()
+        buf.asLongBuffer().put(c, 0, kept)
+        out.write(buf.array())
+      }
+      out.close()
+      Block(rows, nulls, kept, bytes.toByteArray)
+    }
   }
 
   private def rank(t: DataType): Int = t match {
@@ -143,13 +238,6 @@ object LocalGraph {
     case IntegerType => 2
     case LongType => 3
     case _ => -1
-  }
-
-  private def narrow(v: Long, t: DataType): Any = t match {
-    case ByteType => v.toByte
-    case ShortType => v.toShort
-    case IntegerType => v.toInt
-    case _ => v
   }
 
   /** CSR from index-space edge arrays: an LSD radix sort (stable

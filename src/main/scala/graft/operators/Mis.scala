@@ -211,7 +211,12 @@ object Mis {
     * table that shrinks by anti-join as endpoints retire — not
     * re-derived from the full edge table — so round r's scan is the
     * surviving subgraph (Luby retires a constant expected fraction of
-    * EDGES per round; the first round necessarily pays Σdeg). */
+    * EDGES per round; the first round necessarily pays Σdeg).
+    *
+    * @param stagingRowsHint cheap upper bound on the directed edge rows,
+    * read only past [[LocalGraph.EdgeCap]], where it sizes the staging
+    * in place of an exact count; under the cap the edge read is its own
+    * gate. */
   def maximalIndependentSet(edges: DataFrame, rounds: Int = 12,
       seed: Long = 7L, srcCol: String = "src", dstCol: String = "dst",
       stagingRowsHint: Option[Long] = None): DataFrame =
@@ -233,9 +238,8 @@ object Mis {
   private def misLocalState(spark: org.apache.spark.sql.SparkSession,
       g: LocalGraph, rounds: Int, seed: Long): DataFrame = {
     import org.apache.spark.sql.types._
-    import org.apache.spark.sql.Row
     val (nV, vids, offsets, nbrs) = (g.numVertices, g.vids, g.offsets, g.nbrs)
-    // priorities: the exact md5 expression, one job over a LocalRelation
+    // priorities: the exact md5 expression, one job over the vertex frame
     val prio = new Array[Long](nV)
     g.vertexFrame(spark, "u")
       .withColumn("p", Dedup.md5Long(concat(lit(s"$seed:"), col("u").cast("string"))))
@@ -244,7 +248,7 @@ object Mis {
     val active = new Array[Boolean](nV)
     java.util.Arrays.fill(active, true)
     var nActive = nV
-    val selected = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
+    val (selVid, selRound) = (Array.newBuilder[Long], Array.newBuilder[Long])
     var i = 0
     while (i < rounds && nActive > 0) {
       i += 1
@@ -269,19 +273,19 @@ object Mis {
       }
       // the selected set and its neighbors retire together
       sel.foreach { s =>
-        selected += ((vids(s), i.toLong))
+        selVid += vids(s)
+        selRound += i.toLong
         if (active(s)) { active(s) = false; nActive -= 1 }
         g.foreachNbr(s) { v =>
           if (active(v)) { active(v) = false; nActive -= 1 }
         }
       }
     }
-    val outSchema = StructType(Seq(
-      StructField("vid", LongType), StructField("mis_round", LongType)))
-    val outRows = selected.iterator
-      .map { case (v, r) => Row(v, r) }.toIndexedSeq ++
-      (if (nActive > 0) Seq(Row(-1L, nActive.toLong)) else Nil)
-    org.apache.spark.sql.graft.DatasetBridge.localRelation(spark, outSchema, outRows)
+    // the sentinel row (−1, still active) closes an unfinished run
+    if (nActive > 0) { selVid += -1L; selRound += nActive.toLong }
+    org.apache.spark.sql.graft.DatasetBridge.arrayFrame(spark, StructType(Seq(
+      StructField("vid", LongType), StructField("mis_round", LongType))),
+      Seq(selVid.result(), selRound.result()))
   }
 
   /** [[maximalIndependentSet]] plus the per-round ACTIVE-EDGE counts
@@ -299,14 +303,14 @@ object Mis {
     // LOCAL-STATE replay under the directed-edge cap (see
     // [[misLocalState]]); the spec's stats path keeps the legacy loop —
     // its per-round active-edge counts ARE the maintained shrinking
-    // table's property. With a caller hint the gate is free (no lineage
-    // execution before the one collect).
-    val eRows = stagingRowsHint.getOrElse(e0.count())
+    // table's property. The edge read is its own gate: no lineage
+    // execution before it, and the hint only sizes past-cap staging.
     if (!collectStats)
-      LocalGraph.collect(e0, eRows, LocalGraph.EdgeCap, undirected = true) match {
+      LocalGraph.collect(e0, LocalGraph.EdgeCap, undirected = true) match {
         case Some(g) => return (misLocalState(edges.sparkSession, g, rounds, seed), Seq.empty)
         case None =>
       }
+    val eRows = stagingRowsHint.getOrElse(e0.count())
     // the coreness staging/round recipe, whole: ONE shuffle stages the
     // doubled edge list hash(u)-partitioned (dedup exchange-free on top),
     // and the shrinking active-edge table stays PERSISTED — never

@@ -2,7 +2,7 @@ package graft.operators
 
 import java.math.BigInteger
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession, functions}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession, functions}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.DatasetBridge
 import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
@@ -24,26 +24,27 @@ import GraphAnalytics.{maxBroadcastRows, maxBroadcastVerticesDyn, pinLevel, pinT
   * chained CTEs in the DuckDB oracle.
   *
   * Backends. The dense single-lane operators (PageRank, weighted
-  * PageRank, Katz) run on the DRIVER when the pinned edge rows fit
-  * `localCap` ([[LocalGraph.EdgeCap]] by default; `<= 0` forces the
-  * distributed loop, the spec hook): the count the edge pin takes
-  * anyway gates it, the pin is collected once into a sum-collapsed
-  * [[LocalGraph]] and freed, and the rounds are a plain-array loop over
+  * PageRank, Katz) run on the DRIVER when the edge rows fit `localCap`
+  * ([[LocalGraph.EdgeCap]] by default; `<= 0` forces the distributed
+  * loop, the spec hook): ONE job reads the edges into a sum-collapsed
+  * [[LocalGraph]] and its row count is the gate, so no pin or count runs
+  * under the cap, and the rounds are a plain-array loop over
   * the lane's [[DriverLane]] — the same integer steps as its SQL, with
   * `Math.multiplyExact`/`addExact` where the SQL runs in BIGINT (ANSI
   * overflow throws there) and an exact product where it runs in
   * DECIMAL(38,0). Sum-collapse, not the replays' min-collapse: every
   * edge row counts, so a pair carries its multiplicity (one `deg` unit
   * and one contribution per row) or, for weighted PageRank, its weight
-  * sum. The output is a LocalRelation of the same rows, types and value
+  * sum. The output is a broadcast-served frame
+  * ([[DatasetBridge.arrayFrame]]) of the same rows, types and value
   * classes as the distributed fill, holding neither the collected rows
   * nor the graph. Input with a null endpoint or weight, non-integral
-  * vids, or past the cap runs distributed, as PPR and HITS always do.
+  * vids, or past the cap runs distributed, as PPR and HITS always do:
+  * the edge pin and its count are taken then, after the stopped read.
   *
   * Distributed staging:
   *   - the edge pin, two-phase (DISK_ONLY past the heap ceiling): a
-  *     localCheckpoint of the input rows ([[GraphAnalytics.pinTwoPhase]]),
-  *     the one pin both backends read;
+  *     localCheckpoint of the input rows ([[GraphAnalytics.pinTwoPhase]]);
   *   - the per-source table: the payload aggregate (out-degree, weight
   *     sum) or the bare distinct sources, checkpointed. Its row count is
   *     at most V, so it gates the staging before V is known;
@@ -265,21 +266,19 @@ private[operators] object RankLoop {
   }
 
   /** One dense lane from the uniform start, `rounds` rounds, filled to
-    * every vertex as (vid, `name`): on the driver when the pinned edge
-    * rows fit `localCap` and the graph has a driver form, else on the
-    * distributed kernel with the same pin. */
+    * every vertex as (vid, `name`): on the driver when the edge rows fit
+    * `localCap` and the graph has a driver form, else on the distributed
+    * kernel over the edge pin. */
   private def dense(edges: DataFrame, width: Int, payload: Option[Column], sumWeights: Boolean,
       ceiling: Long, localCap: Long, rounds: Int, name: String)(lane: Lane,
       driver: DriverLane): DataFrame = {
     require(rounds >= 1, s"a rank loop needs a round, got $rounds")
-    val pinned @ (pin, eRows) = pinTwoPhase(edges)
-    LocalGraph.collect(pin, eRows, localCap, undirected = false,
+    LocalGraph.collect(edges, localCap, undirected = false,
         weightCol = if (sumWeights) Some("w") else None, sumParallel = true) match {
-      case Some(g) =>
-        DatasetBridge.unpersistCheckpoint(pin)
-        onDriver(edges.sparkSession, g, rounds, driver, lane.default.get, name)
+      case Some(g) => onDriver(edges.sparkSession, g, rounds, driver, lane.default.get, name)
       case None =>
-        val g = stagePinned(pinned, width, payload, sumWeights, pinVertices = true, ceiling)
+        val g = stagePinned(pinTwoPhase(edges), width, payload, sumWeights, pinVertices = true,
+          ceiling)
         val Seq(scores) = g.iterate(rounds)(lane)
         g.fill((scores, lane.default.get, name))
     }
@@ -310,9 +309,9 @@ private[operators] object RankLoop {
       }
       score = Array.tabulate(n)(v => if (reached(v)) update(in(v)) else default)
     }
-    DatasetBridge.localRelation(spark,
+    DatasetBridge.arrayFrame(spark,
       StructType(Seq(StructField("vid", g.vidType), StructField(name, DoubleType))),
-      (0 until n).map(i => Row(g.vid(i), score(i).toDouble / Micro.toDouble)))
+      Seq(g.vids, score.map(_.toDouble / Micro.toDouble)))
   }
 
   /** a·b div d as the DECIMAL(38,0) product and `div` compute it: the

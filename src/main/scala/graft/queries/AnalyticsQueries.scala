@@ -240,12 +240,9 @@ object AnalyticsQueries {
   def betweenness(s: SparkSession, dir: String): DataFrame = {
     val g = TpchGraph.load(s, dir)
     val (edges, labels) = GraphAnalytics.unifiedEdges(g)
-    // staging bound from per-pattern scan counts — the unified join/union
-    // lineage must not execute once for the gate count and again staging
     GraphAnalytics.decode(
       Betweenness.pivotBetweenness(edges, nPivots = BcPivots,
-        horizon = BcHorizon, seed = BcSeed,
-        stagingRowsHint = Some(GraphAnalytics.unifiedEdgeRowsBound(g))),
+        horizon = BcHorizon, seed = BcSeed),
       "vid", labels)
       .select(col("label"), col("node_id"), col("betweenness"))
   }
@@ -875,10 +872,7 @@ object AnalyticsQueries {
   def misQuery(s: SparkSession, dir: String): DataFrame = {
     val g = graft.model.TpchGraph.load(s, dir)
     val (edges, _) = GraphAnalytics.unifiedEdges(g)
-    // staging bound from per-pattern scan counts (the betweenness
-    // pattern): the local-state gate then needs no lineage execution
-    graft.operators.Mis.maximalIndependentSet(edges, rounds = MisRounds, seed = MisSeed,
-      stagingRowsHint = Some(GraphAnalytics.unifiedEdgeRowsBound(g)))
+    graft.operators.Mis.maximalIndependentSet(edges, rounds = MisRounds, seed = MisSeed)
   }
 
   private val MisRounds = 8
@@ -1076,7 +1070,7 @@ object AnalyticsQueries {
     * wide-state cap (per-source closures), for the exact-closure sides;
     * past it the distributed loops run. */
   private def localFixture(e: DataFrame): Option[LocalGraph] =
-    LocalGraph.collect(e, e.count(), LocalGraph.WideStateCap, undirected = false)
+    LocalGraph.collect(e, LocalGraph.WideStateCap, undirected = false)
 
   /** Effective diameter (90%, linearly interpolated) and mean distance
     * from the HyperANF curve — the graph-shape statistics the
@@ -1126,7 +1120,7 @@ object AnalyticsQueries {
     // both formulations
     val exact: DataFrame = localFixture(e) match {
       case Some(g) =>
-        val rows = (0 until g.numVertices).map { a =>
+        val scores = (0 until g.numVertices).map { a =>
           val seen = new java.util.HashSet[Int]()
           seen.add(a)
           var frontier = List(a)
@@ -1139,13 +1133,14 @@ object AnalyticsQueries {
             h += (GraphAnalytics.HarmonicScale / t) * next.size
             frontier = next.toList
           }
-          org.apache.spark.sql.Row(g.vid(a), h)
-        }.filter(_.getLong(1) != 0L)
-        org.apache.spark.sql.graft.DatasetBridge.localRelation(s,
+          h
+        }.toArray
+        val scored = scores.indices.filter(scores(_) != 0L).toArray
+        org.apache.spark.sql.graft.DatasetBridge.arrayFrame(s,
           org.apache.spark.sql.types.StructType(Seq(
             org.apache.spark.sql.types.StructField("vid", g.vidType),
             org.apache.spark.sql.types.StructField("exact_h_scaled",
-              org.apache.spark.sql.types.LongType))), rows)
+              org.apache.spark.sql.types.LongType))), Seq(scored.map(g.vids), scored.map(scores)))
       case None =>
         var pairs = e.select(col("src").as("a")).unionAll(e.select(col("dst").as("a")))
           .distinct().select(col("a"), col("a").as("b"), lit(0).as("t"))

@@ -1,6 +1,5 @@
 package graft.schema
 
-import graft.model.PropertyMeta
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -16,10 +15,7 @@ import org.apache.spark.sql.functions._
   */
 object SchemaInference {
 
-  final case class ColumnStats(name: String, typeToken: String, total: Long, nonNull: Long) {
-    def nullable: Boolean = nonNull < total
-    def meta: PropertyMeta = PropertyMeta(name, typeToken, nullable)
-  }
+  final case class ColumnStats(name: String, typeToken: String, total: Long, nonNull: Long)
 
   /** One aggregation pass: per-column non-null counts + total row count. */
   def columnStats(df: DataFrame): Seq[ColumnStats] = {
@@ -31,10 +27,6 @@ object SchemaInference {
       ColumnStats(c, TypeInference.fromCatalyst(df.schema(c).dataType), total, row.getLong(i + 1))
     }
   }
-
-  /** Property metadata for one label's node table: name → {type, nullable}.
-    * Ordering follows the DataFrame schema. */
-  def inferProperties(df: DataFrame): Seq[PropertyMeta] = columnStats(df).map(_.meta)
 
   /** ANALYZE-style column profile: per column, null count, exact distinct
     * count, and min/max (rendered as strings so one schema carries every

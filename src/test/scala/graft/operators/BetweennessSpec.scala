@@ -78,11 +78,16 @@ class BetweennessSpec extends SparkTestBase {
     val (bound, boundJobs) = JobCount(spark.sparkContext)(GraphAnalytics.unifiedEdgeRowsBound(g))
     assert(boundJobs == 1)
     assert(bound == edges.count())
-    // the edge collect and the pivot md5 job; the replay runs no job
+    // the edge read (its own gate) and the pivot md5 job, with or without
+    // a hint; the replay runs no job
     val (out, bcJobs) = JobCount(spark.sparkContext)(Betweenness.pivotBetweenness(edges,
       nPivots = 4, horizon = 6, seed = 11L, stagingRowsHint = Some(bound)))
     assert(bcJobs == 2)
+    val (noHint, noHintJobs) = JobCount(spark.sparkContext)(Betweenness.pivotBetweenness(edges,
+      nPivots = 4, horizon = 6, seed = 11L))
+    assert(noHintJobs == 2)
     assert(out.where("betweenness > 0").count() > 0)
+    assert(noHint.collect().toSet == out.collect().toSet)
   }
 
   test("a σ·(10⁶+δ) past 2⁶³ leaves the long replay for the DECIMAL loop, same rows") {

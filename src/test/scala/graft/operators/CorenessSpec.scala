@@ -117,13 +117,13 @@ class CorenessSpec extends RandomGraphs {
       "string vids diverged from the replay")
   }
 
-  test("sf0.001 unified graph: 3 jobs on the driver") {
+  test("sf0.001 unified graph: 1 job on the driver") {
     val (e, _) = GraphAnalytics.unifiedEdges(TpchGraph.load(spark, "/root/testdata/sf0.001"))
     val ((driver, driverSizes), jobs) =
       JobCount(spark.sparkContext)(GraphAnalytics.corenessWithStats(e, rounds = 16))
     val (dist, distSizes) = GraphAnalytics.corenessWithStats(e, rounds = 16, localStateCap = 0L)
-    // pin, count, collect
-    assert(jobs <= 3, s"$jobs jobs under the cap")
+    // the edge read, which is its own gate
+    assert(jobs == 1, s"$jobs jobs under the cap")
     assert(rows(driver) == rows(dist))
     assert(driverSizes == distSizes)
   }

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.SparkTestBase
+import org.apache.spark.graft.JobCount
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -15,8 +16,7 @@ class LocalGraphSpec extends SparkTestBase {
   private def collect(df: org.apache.spark.sql.DataFrame, undirected: Boolean,
       weightCol: Option[String] = None,
       extraVids: Option[org.apache.spark.sql.DataFrame] = None): LocalGraph =
-    LocalGraph.collect(df, df.count(), LocalGraph.EdgeCap, undirected,
-      weightCol, extraVids).get
+    LocalGraph.collect(df, LocalGraph.EdgeCap, undirected, weightCol, extraVids).get
 
   test("directed: duplicates collapse, self-loops stay, CSR sorted by (src, dst)") {
     val g = collect(Seq((3L, 1L), (1L, 2L), (3L, 1L), (2L, 2L), (1L, 3L))
@@ -51,7 +51,7 @@ class LocalGraphSpec extends SparkTestBase {
       (1L, 2L, 7L), (1L, 2L, 3L), (2L, 3L, 5L), (1L, 2L, 4L), (2L, 2L, 1L))
       .toDF("src", "dst", "w")
     def sums(df: org.apache.spark.sql.DataFrame, w: Option[String]) =
-      LocalGraph.collect(df, df.count(), LocalGraph.EdgeCap, undirected = false,
+      LocalGraph.collect(df, LocalGraph.EdgeCap, undirected = false,
         weightCol = w, sumParallel = true)
     val g = sums(df, Some("w")).get
     assert(edgesOf(g) == Seq((1L, 2L), (2L, 2L), (2L, 3L)))
@@ -73,7 +73,7 @@ class LocalGraphSpec extends SparkTestBase {
     assert(g.offsets.toSeq == Seq(0, 0, 1, 2, 2))
     assert(g.vidType == LongType)
     val i = collect(Seq((5, 6)).toDF("src", "dst"), undirected = true)
-    assert(i.vidType == IntegerType && i.vid(0) == 5)
+    assert(i.vidType == IntegerType)
     val f = i.vertexFrame(spark, "v")
     assert(f.schema == StructType(Seq(StructField("v", IntegerType))))
     assert(f.as[Int].collect().toSeq == Seq(5, 6))
@@ -105,14 +105,84 @@ class LocalGraphSpec extends SparkTestBase {
 
   test("None: non-integral vids, rows over the cap, or a non-positive cap") {
     val longs = Seq((1L, 2L), (2L, 3L)).toDF("src", "dst")
-    assert(LocalGraph.collect(Seq(("a", "b")).toDF("src", "dst"), 1, 10,
+    assert(LocalGraph.collect(Seq(("a", "b")).toDF("src", "dst"), 10,
       undirected = true).isEmpty)
-    assert(LocalGraph.collect(longs, 2, 10, undirected = true,
+    assert(LocalGraph.collect(longs, 10, undirected = true,
       extraVids = Some(Seq("a").toDF("vid"))).isEmpty)
-    assert(LocalGraph.collect(longs.select(col("src").cast("double"), col("dst")), 2, 10,
+    assert(LocalGraph.collect(longs.select(col("src").cast("double"), col("dst")), 10,
       undirected = true).isEmpty)
-    assert(LocalGraph.collect(longs, 3, 2, undirected = true).isEmpty)
-    assert(LocalGraph.collect(longs, 2, 2, undirected = true).isDefined)
-    assert(LocalGraph.collect(longs, 0, 0, undirected = true).isEmpty)
+    assert(LocalGraph.collect(longs, 1, undirected = true).isEmpty)
+    assert(LocalGraph.collect(longs, 2, undirected = true).isDefined)
+    val (none, jobs) = JobCount(spark.sparkContext)(
+      LocalGraph.collect(longs, 0, undirected = true))
+    assert(none.isEmpty && jobs == 0, s"cap 0 ran $jobs jobs")
+  }
+
+  test("a non-integral weight gives None under either collapse") {
+    val df = Seq((1L, 2L, 1.5), (2L, 3L, 2.0)).toDF("src", "dst", "w")
+    Seq(false, true).foreach { sum =>
+      assert(LocalGraph.collect(df, LocalGraph.EdgeCap, undirected = false,
+        weightCol = Some("w"), sumParallel = sum).isEmpty, s"sumParallel = $sum")
+      assert(LocalGraph.collect(df.select(col("src"), col("dst"),
+        col("w").cast("decimal(10,2)").as("w")), LocalGraph.EdgeCap, undirected = false,
+        weightCol = Some("w"), sumParallel = sum).isEmpty, s"DECIMAL, sumParallel = $sum")
+    }
+  }
+
+  /** `rows` (i, i + 1) edges spread over 64 partitions. */
+  private def spread(rows: Long): org.apache.spark.sql.DataFrame =
+    spark.range(0L, rows, 1L, 64).select(col("id").as("src"), (col("id") + 1).as("dst"))
+
+  test("gate: exactly cap rows is Some in one job") {
+    val (g, jobs) = JobCount(spark.sparkContext)(
+      LocalGraph.collect(spread(500), 500, undirected = false))
+    assert(jobs == 1, s"$jobs jobs")
+    assert(g.get.vids.toSeq == (0L to 500L) && g.get.nbrs.length == 500)
+  }
+
+  test("gate: cap + 1 rows is None in at most one job, and stops early") {
+    val (g, jobs) = JobCount(spark.sparkContext)(
+      LocalGraph.collect(spread(501), 500, undirected = false))
+    assert(g.isEmpty && jobs <= 1, s"$jobs jobs")
+    // far past the cap a task packs nothing: the job ends without
+    // shipping a million rows, and the context stays usable
+    val (big, bigJobs) = JobCount(spark.sparkContext)(
+      LocalGraph.collect(spark.range(0L, 1000000L, 1L, 64)
+        .select(col("id").as("src"), col("id").as("dst")), 1000, undirected = true))
+    assert(big.isEmpty && bigJobs <= 1, s"$bigJobs jobs")
+    assert(spread(10).count() == 10)
+  }
+
+  test("gate: null-endpoint rows count toward the cap; min-collapse drops them") {
+    val e = spark.range(0L, 200L, 1L, 50).select(
+      when(col("id") % 4 === 0, lit(null)).otherwise(col("id")).as("src"),
+      (col("id") + 1).as("dst"))
+    assert(LocalGraph.collect(e, 199, undirected = false).isEmpty)
+    val g = LocalGraph.collect(e, 200, undirected = false).get
+    val kept = (0L until 200L).filter(_ % 4 != 0)
+    assert(edgesOf(g) == kept.map(i => (i, i + 1)))
+    assert(g.vids.toSeq == kept.flatMap(i => Seq(i, i + 1)).distinct.sorted)
+  }
+
+  test("gate: a null under sum-collapse gives None") {
+    val e = spark.range(0L, 200L, 1L, 50).select(col("id").as("src"),
+      when(col("id") === 123, lit(null)).otherwise(col("id") + 1).as("dst"))
+    assert(LocalGraph.collect(e, LocalGraph.EdgeCap, undirected = false,
+      sumParallel = true).isEmpty)
+    assert(LocalGraph.collect(e, LocalGraph.EdgeCap, undirected = false).isDefined)
+  }
+
+  test("Byte, Short and Int vid columns give the same graph as Long") {
+    val e = spark.range(0L, 120L, 1L, 50).select((col("id") % 37).as("src"),
+      (col("id") * 7 % 41).as("dst"), (col("id") % 5 + 1).as("w"))
+    val want = LocalGraph.collect(e, LocalGraph.EdgeCap, undirected = true,
+      weightCol = Some("w")).get
+    Seq(ByteType, ShortType, IntegerType).foreach { t =>
+      val g = LocalGraph.collect(e.select(col("src").cast(t), col("dst").cast(t),
+        col("w").cast(t)), LocalGraph.EdgeCap, undirected = true, weightCol = Some("w")).get
+      assert(g.vidType == t)
+      assert(g.vids.toSeq == want.vids.toSeq && g.offsets.toSeq == want.offsets.toSeq &&
+        g.nbrs.toSeq == want.nbrs.toSeq && g.weights.get.toSeq == want.weights.get.toSeq, t)
+    }
   }
 }

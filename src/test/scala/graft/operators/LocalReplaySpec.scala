@@ -79,7 +79,7 @@ class LocalReplaySpec extends RandomGraphs {
         .map(r => ((r.get(0).toString.toLong, r.get(1).toString.toLong),
           (r.getLong(2), r.getLong(3)))).toMap
       def pairs(w: Option[String]): Map[(Long, Long), Long] = {
-        val lg = LocalGraph.collect(g.df, g.edges.size, LocalGraph.EdgeCap, undirected,
+        val lg = LocalGraph.collect(g.df, LocalGraph.EdgeCap, undirected,
           weightCol = w, sumParallel = true).get
         lg.vids.indices.flatMap(i => (lg.offsets(i) until lg.offsets(i + 1))
           .map(j => (lg.vids(i), lg.vids(lg.nbrs(j))) -> lg.weights.get(j))).toMap

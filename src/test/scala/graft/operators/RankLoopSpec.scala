@@ -122,15 +122,26 @@ class RankLoopSpec extends RandomGraphs {
     }
   }
 
-  test("pageRankQuantizedDF on the sf0.001 unified graph: 3 jobs on the driver") {
+  test("pageRankQuantizedDF on the sf0.001 unified graph: 1 job on the driver") {
     val (e, _) = GraphAnalytics.unifiedEdges(TpchGraph.load(spark, "/root/testdata/sf0.001"))
     val (driver, driverJobs) =
       JobCount(spark.sparkContext)(GraphAnalytics.pageRankQuantizedDF(e, numIter = 10))
     val (dist, distJobs) =
       JobCount(spark.sparkContext)(RankLoop.pageRank(e, 10, 0.15, localCap = 0L))
-    assert(driverJobs <= 3, s"$driverJobs jobs under the cap")
+    // the edge read, which is its own gate
+    assert(driverJobs == 1, s"$driverJobs jobs under the cap")
     assert(distJobs == DistributedJobs, s"$distJobs jobs with localCap = 0")
     assert(rows(driver) == rows(dist))
+  }
+
+  test("past the cap: at most the distributed loop's jobs plus the stopped read") {
+    val (e, _) = GraphAnalytics.unifiedEdges(TpchGraph.load(spark, "/root/testdata/sf0.001"))
+    val (past, pastJobs) =
+      JobCount(spark.sparkContext)(RankLoop.pageRank(e, 10, 0.15, localCap = 10L))
+    val (dist, distJobs) =
+      JobCount(spark.sparkContext)(RankLoop.pageRank(e, 10, 0.15, localCap = 0L))
+    assert(pastJobs <= distJobs + 1, s"$pastJobs jobs past the cap, $distJobs at 0")
+    assert(rows(past) == rows(dist))
   }
 }
 

@@ -60,6 +60,15 @@ if grep -q "No Partition Defined for Window operation" /tmp/graft_gate_verify.lo
   exit 1
 fi
 
+# Driver replays serve their V-row outputs from one broadcast
+# (DatasetBridge.arrayFrame), not from rows serialized into the tasks of
+# a LocalTableScan; one of these lines means a replay-sized frame is back
+# on a LocalRelation (or another closure carries data).
+if grep -q "contains a task of very large size" /tmp/graft_gate_verify.log; then
+  echo "[gate] FAIL: a stage shipped rows inside its tasks (task of very large size)"
+  exit 1
+fi
+
 echo "[gate] 2/4 oracle compare"
 python3 tools/check_oracle.py "$SF" "$OUT"
 

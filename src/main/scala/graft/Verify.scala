@@ -21,11 +21,16 @@ object Verify {
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }
       .foreach { case (name, fn) =>
+      // markers on stderr, where Spark logs: every WARN a key causes sits
+      // between its start and end lines
+      System.err.println(s"[verify] start $name")
+      val t0 = System.nanoTime()
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
+      System.err.println(s"[verify] end $name ${(System.nanoTime() - t0) / 1000000} ms")
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

@@ -1,9 +1,18 @@
 package graft.export
 
+import java.io.{BufferedOutputStream, OutputStreamWriter}
+import java.nio.charset.Charset
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration.Duration
 import scala.jdk.CollectionConverters._
+import org.apache.spark.TaskContext
+import org.apache.spark.rdd.UnionRDD
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.csv.{CSVOptions, UnivocityGenerator}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** CSV export matching the reference's writer behavior
   * (neo4j_export.py:319-327): header row, missing values rendered as the
@@ -13,9 +22,10 @@ import org.apache.spark.sql.functions._
   *   - `singleFile = false` (default): a distributed write — one
   *     directory of part files per table. The only mode that makes sense
   *     at 100 TB; Data Importer-style consumers glob the directory.
-  *   - `singleFile = true`: `coalesce(1)` then rename the part file to
-  *     `<name>.csv` — byte-compatible with the reference's one-file-per-
-  *     label layout for small exports.
+  *   - `singleFile = true`: one `<name>.csv` per table, written by one
+  *     task of one Spark job for all tables ([[writeSingleFiles]]) —
+  *     byte-compatible with the reference's one-file-per-label layout
+  *     for small exports.
   */
 object CsvPackageWriter {
 
@@ -27,7 +37,9 @@ object CsvPackageWriter {
     * consumers misparse. Values are written verbatim like the reference's
     * `csv.DictWriter`: Spark's CSV *writer* trims leading and trailing
     * whitespace unless told not to (its readers already default to not
-    * trimming). */
+    * trimming). The default emptyValue (a quoted `""`) keeps empty strings
+    * distinguishable from the NULL sentinel, so export -> import
+    * round-trips losslessly. */
   val CsvOptions: Map[String, String] = Map("header" -> "true", "escape" -> "\"",
     "ignoreLeadingWhiteSpace" -> "false", "ignoreTrailingWhiteSpace" -> "false")
 
@@ -40,32 +52,66 @@ object CsvPackageWriter {
     df.select(cols.toSeq: _*)
   }
 
-  def write(df: DataFrame, outputDir: String, name: String, singleFile: Boolean = false): Path = {
-    // default emptyValue (quoted "") keeps empty strings distinguishable
-    // from the NULL sentinel, so export -> import round-trips losslessly
-    val out = stringified(df)
-    if (singleFile) {
-      val tmp = Paths.get(outputDir, s".__${name}_tmp")
-      out.coalesce(1).write.mode("overwrite").options(CsvOptions).csv(tmp.toString)
-      val listing = Files.list(tmp)
-      val part = try {
-        listing.filter(p => p.getFileName.toString.startsWith("part-")
-          && p.getFileName.toString.endsWith(".csv")).findFirst().get()
-      } finally listing.close()
+  def write(df: DataFrame, outputDir: String, name: String, singleFile: Boolean = false): Path =
+    if (singleFile) writeSingleFiles(Seq(name -> df), outputDir).head
+    else {
       val target = Paths.get(outputDir, s"$name.csv")
-      Files.createDirectories(target.getParent)
-      Files.move(part, target, StandardCopyOption.REPLACE_EXISTING)
-      // clean the temp dir (part metadata files)
-      val walk = Files.walk(tmp)
-      try walk.sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => Files.deleteIfExists(p))
-      finally walk.close()
-      target
-    } else {
-      val target = Paths.get(outputDir, s"$name.csv")
-      out.write.mode("overwrite").options(CsvOptions).csv(target.toString)
+      stringified(df).write.mode("overwrite").options(CsvOptions).csv(target.toString)
       target
     }
+
+  /** Writes each `(name, table)` to `<outputDir>/<name>.csv` in ONE Spark
+    * job, byte for byte the part file of
+    * `stringified(table).coalesce(1).write.options(CsvOptions).csv`
+    * (an adaptive plan with a shuffle still runs its shuffle stages when
+    * it is built, as Spark's writer would).
+    *
+    * The tables' `stringified(table).coalesce(1)` plans are built
+    * concurrently on `ec`, and their RDDs are unioned so that task `i`
+    * reads table `i`'s one partition (a table whose plan has no
+    * partition gets an empty one, and so its header-only file). Each
+    * task streams its rows through Spark's own CSV generator as
+    * `CsvOutputWriter` does: headers at open, one `write` per row. It
+    * writes a temp file in `outputDir` named for its attempt and renames
+    * it to `<name>.csv`; a failed attempt deletes its temp file. There is
+    * no commit protocol, so `outputDir` must be a filesystem the tasks
+    * share with the driver. Returns the files in the order of `tables`. */
+  def writeSingleFiles(tables: Seq[(String, DataFrame)], outputDir: String)
+      (implicit ec: ExecutionContext = ExecutionContext.parasitic): Seq[Path] = {
+    val names = tables.map(_._1)
+    require(names.distinct.size == names.size, s"duplicate CSV names: ${names.mkString(", ")}")
+    Files.createDirectories(Paths.get(outputDir))
+    if (tables.isEmpty) return Nil
+    val spark = tables.head._2.sparkSession
+    val sc = spark.sparkContext
+    val plans = Await.result(Future.traverse(tables) { case (_, df) => Future {
+      val out = stringified(df).coalesce(1)
+      val rdd = out.queryExecution.toRdd
+      // Spark's CoalesceExec gives even an empty input one partition; a
+      // plan that scans none would still get its header-only file
+      val one = if (rdd.getNumPartitions == 0) sc.parallelize(Seq.empty[InternalRow], 1) else rdd
+      require(one.getNumPartitions == 1, s"a coalesce(1) plan has ${one.getNumPartitions} partitions")
+      (out.schema, one)
+    }}, Duration.Inf)
+    val schemas = plans.map(_._1).toArray
+    val nameArr = names.toArray
+    val opts = new CSVOptions(CsvOptions, false, spark.sessionState.conf.sessionLocalTimeZone)
+    sc.runJob(new UnionRDD(sc, plans.map(_._2)), (ctx: TaskContext, rows: Iterator[InternalRow]) =>
+      writeTask(ctx, rows, outputDir, nameArr(ctx.partitionId()), schemas(ctx.partitionId()), opts))
+    names.map(n => Paths.get(outputDir, s"$n.csv"))
+  }
+
+  private def writeTask(ctx: TaskContext, rows: Iterator[InternalRow], outputDir: String,
+      name: String, schema: StructType, opts: CSVOptions): Unit = {
+    val tmp = Paths.get(outputDir, s".$name.csv.${ctx.taskAttemptId()}.tmp")
+    val gen = new UnivocityGenerator(schema, new OutputStreamWriter(
+      new BufferedOutputStream(Files.newOutputStream(tmp), 1 << 16), Charset.forName(opts.charset)), opts)
+    ctx.addTaskFailureListener((_, _) => try gen.close() finally Files.deleteIfExists(tmp))
+    if (opts.headerFlag) gen.writeHeaders()
+    rows.foreach(gen.write)
+    gen.close()
+    // rename(2): atomic, and it replaces an existing file
+    Files.move(tmp, Paths.get(outputDir, s"$name.csv"), StandardCopyOption.ATOMIC_MOVE)
   }
 
   /** First data row of a table [[write]] wrote to `target`, as column ->

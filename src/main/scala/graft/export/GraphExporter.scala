@@ -68,34 +68,37 @@ object GraphExporter {
     import scala.concurrent.duration.Duration
     Files.createDirectories(Paths.get(outputDir))
 
-    // Per-table exports run CONCURRENTLY: each is one Spark action (the
-    // CSV write) whose fixed job-launch latency would otherwise serialize
-    // across labels+patterns jobs; the sample is then read back from the
-    // head of the written file on the driver, with no job. Spark schedules
-    // concurrent actions from separate threads; output paths are distinct
-    // per table so the writes never contend.
+    // Single-file CSVs are written by ONE Spark job for all tables, with
+    // the tables' plans built concurrently on the pool; a distributed
+    // export runs one write job per table, concurrently from the pool so
+    // that their fixed job-launch latencies overlap (output paths are
+    // distinct per table, so the writes never contend). Either way each
+    // sample is then read back from the head of the written file on the
+    // driver, with no job.
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
       math.min(8, graph.schema.labels.size + graph.schema.rels.size max 1))
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
     try {
-      // --- node CSVs (identifier-first ordering is already the table shape)
-      val nodeF = Future.traverse(graph.schema.labels) { ls => Future {
-        val df = graph.nodes(ls.label)
-        val csv = CsvPackageWriter.write(df, outputDir, ls.label, singleFileCsv)
-        NodeExport(ls.label, ls.identifier, df.columns.toSeq,
-          CsvPackageWriter.firstRow(csv, df.columns.toSeq))
-      }}
-
-      // --- relationship CSVs
-      val relF = Future.traverse(graph.schema.rels) { rs => Future {
-        val df = graph.rels(rs.pattern)
-        val csv = CsvPackageWriter.write(df, outputDir, rs.pattern.key, singleFileCsv)
+      // identifier-first ordering is already the node tables' shape
+      val nodes = graph.schema.labels.map(ls => ls.label -> graph.nodes(ls.label))
+      val rels = graph.schema.rels.map(rs => rs.pattern.key -> graph.rels(rs.pattern))
+      val tables = nodes ++ rels
+      val files =
+        if (singleFileCsv) CsvPackageWriter.writeSingleFiles(tables, outputDir)
+        else Await.result(Future.traverse(tables) { case (name, df) =>
+          Future(CsvPackageWriter.write(df, outputDir, name))
+        }, Duration.Inf)
+      val samples = Await.result(Future.traverse(tables.zip(files)) { case ((_, df), csv) =>
+        Future(CsvPackageWriter.firstRow(csv, df.columns.toSeq))
+      }, Duration.Inf)
+      val (nodeSamples, relSamples) = samples.splitAt(nodes.size)
+      val nodeExports = graph.schema.labels.lazyZip(nodes).lazyZip(nodeSamples).map {
+        case (ls, (_, df), sample) => NodeExport(ls.label, ls.identifier, df.columns.toSeq, sample)
+      }
+      val relExports = graph.schema.rels.lazyZip(relSamples).map { (rs, sample) =>
         RelExport(rs.pattern, rs.srcIdProp, rs.dstIdProp, rs.srcColName, rs.dstColName,
-          rs.properties.map(_.name).sorted, CsvPackageWriter.firstRow(csv, df.columns.toSeq))
-      }}
-
-      val nodeExports = Await.result(nodeF, Duration.Inf)
-      val relExports = Await.result(relF, Duration.Inf)
+          rs.properties.map(_.name).sorted, sample)
+      }
       finish(graph, outputDir, formatVersion, createZip, zipName, nodeExports, relExports)
     } finally pool.shutdown()
   }

@@ -1,6 +1,7 @@
 package graft.export
 
 import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 import graft.SparkTestBase
 import graft.model.{GraphSchema, LabelSchema, PropertyGraph, PropertyMeta, TableGraphMapper, TpchGraph}
 import graft.schema.GraphCatalog
@@ -202,22 +203,92 @@ class ExporterSpec extends SparkTestBase {
   }
 
   test("an empty-catalog TPC-H load plus exportAll runs one read per table, two jobs per " +
-    "rule-4 label and one write per table, in both CSV modes") {
+    "rule-4 label, then one job for all single-file CSVs or one job per multi-part table") {
     // 7 distinct tables, each read once and opened with no job (the
     // footer schema is read on the driver), 6 labels whose first property
-    // is their key, and 6 node + 6 relationship CSVs; the samples are read
-    // from the files
+    // is their key, and 6 node + 6 relationship CSVs written by one job;
+    // the samples are read from the files
     val (g, jobs) = JobCount(spark.sparkContext) {
       val g = new TableGraphMapper(TpchGraph.nodes, TpchGraph.edges, GraphCatalog.empty)
         .load(spark, "/root/testdata/sf0.001")
       GraphExporter.exportAll(g, Files.createTempDirectory("graft-jobs").toString)
       g
     }
-    assert(jobs == 2 * 6 + 12)
+    assert(jobs == 2 * 6 + 1)
     // and a distributed export of the same graph: one job per table
     val (_, distJobs) = JobCount(spark.sparkContext)(GraphExporter.exportAll(g,
       Files.createTempDirectory("graft-jobs-dist").toString, singleFileCsv = false))
     assert(distJobs == 12)
+  }
+
+  test("a single-file CSV keeps every row when Spark's writer would split it into files") {
+    import spark.implicits._
+    val df = (1L to 5L).map(i => (i, s"v$i")).toDF("id", "v")
+    spark.conf.set("spark.sql.files.maxRecordsPerFile", "2")
+    try {
+      val dir = Files.createTempDirectory("graft-max-records").toString
+      val csv = CsvPackageWriter.write(df, dir, "T", singleFile = true)
+      assert(Files.readString(csv) == "id,v\n1,v1\n2,v2\n3,v3\n4,v4\n5,v5\n")
+    } finally spark.conf.unset("spark.sql.files.maxRecordsPerFile")
+  }
+
+  test("writeSingleFiles writes each table's file byte for byte as Spark's coalesce(1) CSV " +
+    "writer does, in one job") {
+    val prop = Prop.forAllNoShrink(Gen.choose(1, 4).flatMap(n => Gen.listOfN(n, genTable))) { ts =>
+      val tables = ts.zipWithIndex.map { case (t, i) => s"T$i" -> t.toDF(spark) }
+      val dir = Files.createTempDirectory("graft-single").toString
+      val (files, jobs) = JobCount(spark.sparkContext)(CsvPackageWriter.writeSingleFiles(tables, dir))
+      val same = tables.zip(files).map { case ((name, df), file) =>
+        val ref = Paths.get(Files.createTempDirectory("graft-spark-csv").toString, name)
+        CsvPackageWriter.stringified(df).coalesce(1).write.options(CsvPackageWriter.CsvOptions)
+          .csv(ref.toString)
+        java.util.Arrays.equals(Files.readAllBytes(file), Files.readAllBytes(sparkPart(ref)))
+      }
+      Prop(jobs == 1 && same.forall(identity)) :| s"jobs=$jobs same=$same tables=$ts"
+    }
+    val res = Test.check(Test.Parameters.default
+      .withMinSuccessfulTests(30).withWorkers(1).withInitialSeed(Seed(20261020L)), prop)
+    assert(res.passed, Pretty.pretty(res))
+  }
+
+  test("writeSingleFiles writes an empty table's header-only file as Spark's writer does") {
+    import org.apache.spark.sql.functions.col
+    import spark.implicits._
+    // empty before planning, and empty only once a shuffle stage has run
+    val empties = Seq(
+      "Local" -> Seq.empty[(Long, String)].toDF("id", "v"),
+      "Shuffled" -> spark.range(10).repartition(3).where(col("id") < 0)
+        .select(col("id"), col("id").cast("string").as("v")))
+    val dir = Files.createTempDirectory("graft-empty").toString
+    val files = CsvPackageWriter.writeSingleFiles(empties, dir)
+    empties.zip(files).foreach { case ((name, df), csv) =>
+      assert(Files.readString(csv) == "id,v\n", name)
+      val ref = Paths.get(dir, s"spark-$name")
+      df.coalesce(1).write.options(CsvPackageWriter.CsvOptions).csv(ref.toString)
+      assert(Files.readString(sparkPart(ref)) == "id,v\n", name)
+    }
+  }
+
+  test("a task that fails mid-table fails writeSingleFiles and leaves no temp file") {
+    import org.apache.spark.sql.functions.{col, udf}
+    import spark.implicits._
+    // over a range, not a local relation, whose projection the optimizer
+    // would evaluate on the driver
+    val boom = udf((i: Long) => if (i == 2) throw new IllegalStateException("boom") else i)
+    val bad = spark.range(4).select(boom(col("id")).as("v"))
+    val ok = Seq("x", "y").toDF("v")
+    val dir = Files.createTempDirectory("graft-failed-write")
+    val e = intercept[org.apache.spark.SparkException](
+      CsvPackageWriter.writeSingleFiles(Seq("Ok" -> ok, "Bad" -> bad), dir.toString))
+    assert(e.getMessage.contains("boom"), e.getMessage)
+    // a sibling task the failed job killed cleans up on its own thread
+    val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+    while (spark.sparkContext.statusTracker.getExecutorInfos.exists(_.numRunningTasks > 0) &&
+      System.nanoTime() < deadline) Thread.sleep(20)
+    val ls = Files.list(dir)
+    val names = try ls.iterator().asScala.map(_.getFileName.toString).toList finally ls.close()
+    assert(!names.exists(_.endsWith(".tmp")), names)
+    assert(!names.contains("Bad.csv"), names)
   }
 
   test("the sample read from the written CSV is buildExports' sniff, in both CSV modes") {
@@ -239,6 +310,17 @@ class ExporterSpec extends SparkTestBase {
 }
 
 object ExporterSpec {
+
+  /** The one part file Spark's CSV writer wrote into `dir`. */
+  def sparkPart(dir: java.nio.file.Path): java.nio.file.Path = {
+    val ls = Files.list(dir)
+    val parts = try ls.iterator().asScala.filter { p =>
+      val n = p.getFileName.toString
+      n.startsWith("part-") && n.endsWith(".csv")
+    }.toList finally ls.close()
+    assert(parts.size == 1, parts)
+    parts.head
+  }
 
   /** String values a CSV dialect can get wrong: quotes, separators, line
     * breaks, the empty string and the literal "NULL" (both sentinels in

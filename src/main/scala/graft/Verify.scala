@@ -1,4 +1,5 @@
 package graft
+import graft.cache.StageCache
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
@@ -24,13 +25,21 @@ object Verify {
       // markers on stderr, where Spark logs: every WARN a key causes sits
       // between its start and end lines
       System.err.println(s"[verify] start $name")
+      val cached = StageCache.counts
       val t0 = System.nanoTime()
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      System.err.println(s"[verify] end $name ${(System.nanoTime() - t0) / 1000000} ms")
+      val ms = (System.nanoTime() - t0) / 1000000
+      // what the key's StageCache lookups did, per op: hits/misses
+      val cache = StageCache.counts.toSeq.sorted.flatMap { case (op, (h, m)) =>
+        val (h0, m0) = cached.getOrElse(op, (0L, 0L))
+        if (h == h0 && m == m0) None else Some(s"$op=${h - h0}/${m - m0}")
+      }
+      System.err.println(s"[verify] end $name $ms ms cache ${
+        if (cache.isEmpty) "-" else cache.mkString(",")}")
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

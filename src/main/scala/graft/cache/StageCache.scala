@@ -1,5 +1,7 @@
 package graft.cache
 
+import java.util.concurrent.atomic.AtomicLong
+
 import scala.collection.concurrent.TrieMap
 import scala.jdk.CollectionConverters._
 
@@ -7,12 +9,15 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.hadoop.util.ShutdownHookManager
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{CurrentDate, CurrentTime,
+  CurrentTimestampLike, LocalTimestamp}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 
 /** The one cache for what graft reuses across calls: trained driver-side
-  * models, localCheckpointed code tables and staged directories.
+  * models, localCheckpointed code tables, staged directories and the
+  * driver-local graphs of the replays ([[graft.operators.LocalGraph]]).
   *
   * An entry's key is (session, op, params, input fingerprint):
   *  - the session is held weakly and compared by object identity, so a
@@ -28,21 +33,51 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
   *
   * A changed file list misses and recomputes; the new value replaces the
   * entry with the same (session, op, params, plan hash), so nothing stale
-  * is served and [[only]] still finds one entry after a rewrite.
+  * is served and [[only]] still finds one entry after a rewrite. An input
+  * whose analyzed plan has a nondeterministic expression (`uuid()`,
+  * `rand()`, a nondeterministic UDF) or reads the query's clock
+  * (`current_timestamp()`, `current_date()`, which Spark counts as
+  * deterministic because they are fixed within one query) can change
+  * under the same plan hash and files, so such a call computes and
+  * caches nothing.
   *
   * A cached frame is served only while every RDD it reads from is still
   * persisted: a localCheckpointed frame whose blocks an unpersist sweep
   * dropped would fail with "Checkpoint block not found", so it is
   * recomputed instead. Directories made by [[stageDir]] are deleted by
-  * one JVM shutdown hook. There is no eviction and no size bound.
+  * one JVM shutdown hook.
+  *
+  * Values that hold driver memory in proportion to their input are
+  * [[Sized]] (a graph, or `Some(graph)`): once their bytes, summed over
+  * every session, pass [[SizedBudget]], the least recently used of them
+  * are evicted until the sum is back under it. Other values are small
+  * (models, frames of checkpointed RDDs, paths) and are not evicted.
+  *
+  * [[counts]] reports the hits and misses per op since the JVM started.
   */
 object StageCache {
 
-  private final case class Slot(op: String, params: Any, plans: Seq[Int])
-  private final case class Entry(files: Seq[(String, Long, Long)], value: Any)
+  /** A value whose driver memory the cache bounds (see [[SizedBudget]]). */
+  trait Sized { def sizeInBytes: Long }
 
+  /** The bytes the [[Sized]] values of all sessions may hold together:
+    * 1/16 of the driver heap. */
+  private val SizedBudget: Long = Runtime.getRuntime.maxMemory / 16
+
+  private final case class Slot(op: String, params: Any, plans: Seq[Int])
+  private final class Entry(val files: Seq[(String, Long, Long)], val value: Any) {
+    val bytes: Long = value match {
+      case s: Sized => s.sizeInBytes
+      case Some(s: Sized) => s.sizeInBytes
+      case _ => 0L
+    }
+    @volatile var used: Long = clock.incrementAndGet()
+  }
+
+  private val clock = new AtomicLong
   private val sessions = new java.util.WeakHashMap[SparkSession, TrieMap[Slot, Entry]]()
   private val staged = scala.collection.mutable.ArrayBuffer.empty[(Path, Configuration)]
+  private val tally = TrieMap.empty[String, (AtomicLong, AtomicLong)]
 
   ShutdownHookManager.get().addShutdownHook(() => staged.synchronized {
     staged.foreach { case (p, conf) =>
@@ -56,6 +91,11 @@ object StageCache {
   def getOrCompute[V](spark: SparkSession, op: String, params: Any, inputs: DataFrame*)(
       compute: => V): V = {
     val plans = inputs.map(_.queryExecution.analyzed)
+    val (hits, misses) = tally.getOrElseUpdate(op, (new AtomicLong, new AtomicLong))
+    if (plans.exists(changing)) {
+      misses.incrementAndGet()
+      return compute
+    }
     val slot = Slot(op, params, plans.map(_.semanticHash()))
     val files = plans.flatMap(inputFiles).sorted
     val entries = sessions.synchronized {
@@ -63,11 +103,34 @@ object StageCache {
       sessions.computeIfAbsent(spark, _ => TrieMap.empty[Slot, Entry])
     }
     entries.get(slot) match {
-      case Some(Entry(`files`, v)) if live(spark, v) => v.asInstanceOf[V]
+      case Some(e) if e.files == files && live(spark, e.value) =>
+        e.used = clock.incrementAndGet()
+        hits.incrementAndGet()
+        e.value.asInstanceOf[V]
       case _ =>
-        val v = compute
-        entries.put(slot, Entry(files, v))
-        v
+        misses.incrementAndGet()
+        val e = new Entry(files, compute)
+        entries.put(slot, e)
+        if (e.bytes > 0) evict(SizedBudget)
+        e.value.asInstanceOf[V]
+    }
+  }
+
+  /** Hits and misses per op since the JVM started. A call on an input
+    * that can change is a miss. */
+  def counts: Map[String, (Long, Long)] =
+    tally.readOnlySnapshot().map { case (op, (h, m)) => op -> ((h.get, m.get)) }.toMap
+
+  /** Evicts the least recently used [[Sized]] entries of every session
+    * until their bytes sum to at most `budget`. */
+  private[graft] def evict(budget: Long): Unit = sessions.synchronized {
+    val sized = sessions.values.asScala.toSeq.flatMap(m => m.toSeq.collect {
+      case (slot, e) if e.bytes > 0 => (m, slot, e)
+    }).sortBy(-_._3.used)
+    var total = 0L
+    sized.foreach { case (m, slot, e) =>
+      total += e.bytes
+      if (total > budget) m.remove(slot, e)
     }
   }
 
@@ -102,6 +165,14 @@ object StageCache {
           .map(f => (f.getPath.toString, f.getLen, f.getModificationTime))
       case _ => Nil
     }
+
+  /** Whether `plan`'s rows can change under the same plan and files. */
+  private def changing(plan: LogicalPlan): Boolean =
+    plan.collectWithSubqueries { case p => p.expressions }.flatten.exists(_.exists {
+      case e if !e.deterministic => true
+      case _: CurrentTimestampLike | _: CurrentDate | _: CurrentTime | _: LocalTimestamp => true
+      case _ => false
+    })
 
   private def live(spark: SparkSession, value: Any): Boolean = value match {
     case ds: Dataset[_] =>

@@ -67,11 +67,14 @@ object CsvPackageWriter {
     * it is built, as Spark's writer would).
     *
     * The tables' `stringified(table).coalesce(1)` plans are built
-    * concurrently on `ec`, and their RDDs are unioned so that task `i`
-    * reads table `i`'s one partition (a table whose plan has no
-    * partition gets an empty one, and so its header-only file). Each
-    * task streams its rows through Spark's own CSV generator as
-    * `CsvOutputWriter` does: headers at open, one `write` per row. It
+    * concurrently on `ec`, and their RDDs are unioned so that each task
+    * reads one table's one partition (a table whose plan has no
+    * partition gets an empty one, and so its header-only file). The
+    * union takes the tables largest first, by their optimized plans'
+    * `sizeInBytes` estimates, so the longest task is not queued behind
+    * the small ones. Each task streams its rows through Spark's own CSV
+    * generator as `CsvOutputWriter` does: headers at open, one `write`
+    * per row. It
     * writes a temp file in `outputDir` named for its attempt and renames
     * it to `<name>.csv`; a failed attempt deletes its temp file. There is
     * no commit protocol, so `outputDir` must be a filesystem the tasks
@@ -91,13 +94,15 @@ object CsvPackageWriter {
       // plan that scans none would still get its header-only file
       val one = if (rdd.getNumPartitions == 0) sc.parallelize(Seq.empty[InternalRow], 1) else rdd
       require(one.getNumPartitions == 1, s"a coalesce(1) plan has ${one.getNumPartitions} partitions")
-      (out.schema, one)
+      (out.schema, one, out.queryExecution.optimizedPlan.stats.sizeInBytes)
     }}, Duration.Inf)
-    val schemas = plans.map(_._1).toArray
-    val nameArr = names.toArray
+    val order = plans.indices.sortBy(i => -plans(i)._3).toArray // stable: ties keep input order
+    val schemas = order.map(plans(_)._1)
+    val nameArr = order.map(names)
     val opts = new CSVOptions(CsvOptions, false, spark.sessionState.conf.sessionLocalTimeZone)
-    sc.runJob(new UnionRDD(sc, plans.map(_._2)), (ctx: TaskContext, rows: Iterator[InternalRow]) =>
-      writeTask(ctx, rows, outputDir, nameArr(ctx.partitionId()), schemas(ctx.partitionId()), opts))
+    sc.runJob(new UnionRDD(sc, order.toSeq.map(plans(_)._2)),
+      (ctx: TaskContext, rows: Iterator[InternalRow]) =>
+        writeTask(ctx, rows, outputDir, nameArr(ctx.partitionId()), schemas(ctx.partitionId()), opts))
     names.map(n => Paths.get(outputDir, s"$n.csv"))
   }
 

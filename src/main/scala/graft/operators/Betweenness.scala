@@ -86,8 +86,9 @@ object Betweenness {
     // frontier broadcasts and LOST to the legacy loop at 32 cores
     // (isolated med 75 s vs 23.6 baseline): V·k-row frontiers made every
     // round pay a ~1-2 s driver-side collect + broadcast-relation build.
-    // The full-driver form pays ONE edge read (its own size gate) + one
-    // tiny md5 job. Past the cap (or non-integral vids), or when a value
+    // The full-driver form pays ONE edge read (its own size gate, and
+    // none when MIS or coreness read the same frame first) + one tiny md5
+    // job. Past the cap (or non-integral vids), or when a value
     // outgrows a long, the distributed loop runs.
     LocalGraph.collect(e0, localStateCap, undirected = true)
       .flatMap(pivotBetweennessLocalState(spark, _, nPivots, horizon, seed)) match {

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.cache.StageCache
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.graft.{ColumnBridge, DatasetBridge}
@@ -20,9 +21,15 @@ import org.apache.spark.sql.types._
   * built by sorting — no boxed pair, set or map per edge.
   *
   * The contract [[LocalGraph.collect]] gives every replay:
-  *   - ONE job reads the edge frame, packed into primitive arrays, and
-  *     nothing else reads edges; its row count is the size gate, so a
-  *     caller runs no count or pin before it;
+  *   - at most one job per frame and file set per session reads the edge
+  *     frame, packed into primitive arrays, and nothing else reads edges;
+  *     its row count is the size gate, so a caller runs no count or pin
+  *     before it. The result is cached in [[graft.cache.StageCache]], so
+  *     operators over the same frame share one graph, and a repeat runs
+  *     no job;
+  *   - the arrays are shared between every caller that reads the same
+  *     frame: a replay reads `vids`, `offsets`, `nbrs`, `weights` and
+  *     `extra` and never writes into them;
   *   - edges are deduplicated, and parallel weighted edges keep their
   *     minimum weight (the distributed loops' min-collapse);
   *   - or, with `sumParallel`, every row counts (the rank family's
@@ -47,9 +54,12 @@ final class LocalGraph private (
     val extra: Array[Int],
     /** The widest integral type among the input vid columns — the type
       * the distributed loops' unions widen their vid column to. */
-    val vidType: DataType) {
+    val vidType: DataType) extends StageCache.Sized {
 
   def numVertices: Int = vids.length
+
+  def sizeInBytes: Long = 8L * vids.length + 4L * offsets.length + 4L * nbrs.length +
+    weights.fold(0L)(8L * _.length) + 4L * extra.length
 
   /** Index of `vid`, or -1 when it is not a vertex. */
   def index(vid: Long): Int = {
@@ -96,6 +106,12 @@ object LocalGraph {
     * use to force the distributed loop; no job runs), or an endpoint,
     * extra-vid or weight column is not Byte/Short/Int/Long.
     *
+    * The result, `None` included, is cached in [[StageCache]] under
+    * (cap, undirected, weightCol, sumParallel) and the fingerprints of
+    * `edges` and `extraVids`, so a repeat on the same frame and files
+    * runs no job; a `cap <= 0` or non-integral call is neither read nor
+    * cached.
+    *
     * The edges are read in ONE job, which is also the gate: each task
     * reads its endpoints (and weight) with typed getters into primitive
     * `long` arrays, counts its rows as it goes — null rows included —
@@ -115,10 +131,21 @@ object LocalGraph {
       weightCol: Option[String] = None, extraVids: Option[DataFrame] = None,
       sumParallel: Boolean = false): Option[LocalGraph] = {
     val attrs = edges.queryExecution.analyzed.output
-    val read = attrs.take(2) ++ weightCol.map(c => attrs(edges.schema.fieldIndex(c)))
+    val cols = attrs.take(2) ++ weightCol.map(c => attrs(edges.schema.fieldIndex(c)))
     val vidTypes = attrs.take(2).map(_.dataType) ++ extraVids.map(_.schema.head.dataType)
-    if (cap <= 0 || !(vidTypes ++ read.map(_.dataType)).forall(rank(_) >= 0)) return None
-    val edgeCols = packed(edges.select(read.map(ColumnBridge.column): _*), cap)
+    if (cap <= 0 || !(vidTypes ++ cols.map(_.dataType)).forall(rank(_) >= 0)) return None
+    StageCache.getOrCompute(edges.sparkSession, "LocalGraph.collect",
+        (cap, undirected, weightCol, sumParallel), edges +: extraVids.toSeq: _*) {
+      read(edges.select(cols.map(ColumnBridge.column): _*), cap, undirected, extraVids,
+        sumParallel, vidTypes.maxBy(rank))
+    }
+  }
+
+  /** [[collect]]'s read and build, uncached: `edges` is the projected
+    * (src, dst[, weight]) frame. */
+  private def read(edges: DataFrame, cap: Long, undirected: Boolean,
+      extraVids: Option[DataFrame], sumParallel: Boolean, vidType: DataType): Option[LocalGraph] = {
+    val edgeCols = packed(edges, cap)
       .filter(p => !sumParallel || !p.nulls).getOrElse(return None).cols
     val extraRaw = extraVids.fold(Array.emptyLongArray)(x =>
       packed(x.select(x.columns.head), Long.MaxValue).get.cols.head)
@@ -135,7 +162,7 @@ object LocalGraph {
       .orElse(if (sumParallel) Some(Array.fill(us.length)(1L)) else None)
       .map(ws => if (undirected) ws ++ ws else ws)
     Some(build(vids, if (undirected) a ++ b else a, if (undirected) b ++ a else b,
-      w, extraRaw.map(idx).sorted.distinct, vidTypes.maxBy(rank),
+      w, extraRaw.map(idx).sorted.distinct, vidType,
       if (sumParallel) Math.addExact(_: Long, _: Long) else math.min(_: Long, _: Long)))
   }
 

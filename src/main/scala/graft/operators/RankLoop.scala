@@ -28,9 +28,10 @@ import GraphAnalytics.{maxBroadcastRows, maxBroadcastVerticesDyn, pinLevel, pinT
   * ([[LocalGraph.EdgeCap]] by default; `<= 0` forces the distributed
   * loop, the spec hook): ONE job reads the edges into a sum-collapsed
   * [[LocalGraph]] and its row count is the gate, so no pin or count runs
-  * under the cap, and the rounds are a plain-array loop over
-  * the lane's [[DriverLane]] — the same integer steps as its SQL, with
-  * `Math.multiplyExact`/`addExact` where the SQL runs in BIGINT (ANSI
+  * under the cap; the graph is cached, so PageRank and Katz over the
+  * same frame share one read per session. The rounds are a plain-array
+  * loop over the lane's [[DriverLane]] — the same integer steps as its
+  * SQL, with `Math.multiplyExact`/`addExact` where the SQL runs in BIGINT (ANSI
   * overflow throws there) and an exact product where it runs in
   * DECIMAL(38,0). Sum-collapse, not the replays' min-collapse: every
   * edge row counts, so a pair carries its multiplicity (one `deg` unit

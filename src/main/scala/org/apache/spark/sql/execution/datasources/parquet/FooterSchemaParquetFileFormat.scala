@@ -1,10 +1,16 @@
 package org.apache.spark.sql.execution.datasources.parquet
 
+import java.io.DataOutput
+
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.FileStatus
+import org.apache.hadoop.io.{Text, WritableUtils}
 import org.apache.parquet.hadoop.ParquetFileWriter
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FileSourceOptions
+import org.apache.spark.sql.catalyst.{FileSourceOptions, InternalRow}
 import org.apache.spark.sql.catalyst.util.CaseInsensitiveMap
+import org.apache.spark.sql.execution.datasources.PartitionedFile
+import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types.StructType
 
 /** The parquet source with schema inference that runs no Spark job.
@@ -24,7 +30,13 @@ import org.apache.spark.sql.types.StructType
   * .parquet`. The format equals `ParquetFileFormat` and hashes like it,
   * so a relation opened either way has the same plan and the same
   * `semanticHash`. Lives in Spark's package because the footer reader
-  * is `private[parquet]`. */
+  * is `private[parquet]`.
+  *
+  * Each scan broadcasts its Hadoop conf. `Configuration.write` gzips,
+  * for every one of its ~1,100 properties, the list of resources that
+  * set it, which no reader of the broadcast uses; this format
+  * broadcasts a copy that writes the same keys and values without
+  * those lists ([[FooterSchemaParquetFileFormat.SourcelessConf]]). */
 class FooterSchemaParquetFileFormat extends ParquetFileFormat {
 
   override def inferSchema(sparkSession: SparkSession, parameters: Map[String, String],
@@ -57,6 +69,35 @@ class FooterSchemaParquetFileFormat extends ParquetFileFormat {
     }
   }
 
+  override def buildReaderWithPartitionValues(sparkSession: SparkSession,
+      dataSchema: StructType, partitionSchema: StructType, requiredSchema: StructType,
+      filters: Seq[Filter], options: Map[String, String],
+      hadoopConf: Configuration): PartitionedFile => Iterator[InternalRow] =
+    super.buildReaderWithPartitionValues(sparkSession, dataSchema, partitionSchema,
+      requiredSchema, filters, options,
+      new FooterSchemaParquetFileFormat.SourcelessConf(hadoopConf))
+
   // ParquetFileFormat.equals accepts any ParquetFileFormat; hash like it
   override def hashCode(): Int = classOf[ParquetFileFormat].hashCode()
+}
+
+object FooterSchemaParquetFileFormat {
+
+  /** A copy of `conf` whose `write` emits its keys and values with a
+    * null source array each: the wire format `Configuration.readFields`
+    * reads (a source count of -1, written by `writeInt` as
+    * `WritableUtils.writeCompressedStringArray` writes a null), so the
+    * reader gets the same key/value set and loses only the record of
+    * which resource set each key. */
+  final class SourcelessConf(conf: Configuration) extends Configuration(conf) {
+    override def write(out: DataOutput): Unit = {
+      val props = getProps
+      WritableUtils.writeVInt(out, props.size)
+      props.forEach { (k, v) =>
+        Text.writeString(out, k.asInstanceOf[String])
+        Text.writeString(out, v.asInstanceOf[String])
+        out.writeInt(-1)
+      }
+    }
+  }
 }

@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.parquet.example.data.simple.{NanoTime, SimpleGroupFactory}
@@ -9,7 +11,9 @@ import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.schema.MessageTypeParser
 import org.apache.spark.graft.JobCount
 import org.apache.spark.sql.{AnalysisException, DataFrame, Row}
+import org.apache.spark.sql.execution.datasources.parquet.FooterSchemaParquetFileFormat
 import org.apache.spark.sql.functions._
+import org.apache.spark.util.SerializableConfiguration
 
 /** `Tables.apply`/`Tables.parquet` open a table with the schema, plan and
   * rows of `spark.read.parquet`, without the schema-inference job. */
@@ -122,6 +126,10 @@ class TablesOpenSpec extends SparkTestBase {
         val got = schemaOrError(openNoJob(dir))
         val want = schemaOrError(spark.read.parquet(dir))
         assert(got == want, s"$kv")
+        // the scan reads the settings from the conf it broadcasts
+        if (got.isRight) {
+          assert(openNoJob(dir).collect().toSeq == spark.read.parquet(dir).collect().toSeq, s"$kv")
+        }
         got
       } finally kv.keys.foreach(spark.conf.unset)
     }
@@ -153,5 +161,27 @@ class TablesOpenSpec extends SparkTestBase {
     assert(got.getCondition == "PATH_NOT_FOUND")
     assert(got.getCondition == want.getCondition)
     assert(got.getMessage == want.getMessage)
+  }
+
+  test("a scan's broadcast conf round-trips to the same keys and values, in fewer bytes") {
+    val conf = spark.sessionState.newHadoopConf()
+    conf.set("graft.spec.key", "graft.spec.value")
+    def serialized(c: Configuration): Array[Byte] = {
+      val bytes = new java.io.ByteArrayOutputStream
+      val out = new java.io.ObjectOutputStream(bytes)
+      try out.writeObject(new SerializableConfiguration(c)) finally out.close()
+      bytes.toByteArray
+    }
+    def roundTrip(c: Configuration): Configuration = new java.io.ObjectInputStream(
+      new java.io.ByteArrayInputStream(serialized(c))).readObject()
+      .asInstanceOf[SerializableConfiguration].value
+    def pairs(c: Configuration): Map[String, String] =
+      c.iterator.asScala.map(e => e.getKey -> e.getValue).toMap
+    val copy = new FooterSchemaParquetFileFormat.SourcelessConf(conf)
+    val back = roundTrip(copy)
+    assert(pairs(copy) == pairs(conf))
+    assert(pairs(back) == pairs(roundTrip(conf)))
+    assert(back.get("graft.spec.key") == "graft.spec.value")
+    assert(serialized(copy).length < serialized(conf).length)
   }
 }

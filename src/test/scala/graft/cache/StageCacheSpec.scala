@@ -3,7 +3,7 @@ package graft.cache
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
 import graft.{SparkEntry, SparkTestBase, Tables, WarnLines}
-import graft.operators.{Bpe, GraphAnalytics, Similarity}
+import graft.operators.{Bpe, GraphAnalytics, LocalGraph, Similarity}
 import org.apache.spark.graft.JobCount
 import org.apache.spark.sql.graft.DatasetBridge
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
@@ -12,17 +12,20 @@ import org.apache.spark.sql.functions._
 /** StageCache on a scratch copy of sf0.001: a corpus rewritten under the
   * same path is never served stale, sessions do not share entries, the
   * Bench unpersist sweep cannot break a cached checkpointed frame and
-  * logs no WARN for it, and an unchanged input hits. */
+  * logs no WARN for it, an unchanged input hits, and an input that can
+  * change under the same plan is never cached. */
 class StageCacheSpec extends SparkTestBase {
 
   private val Source = Paths.get("/root/testdata/sf0.001")
 
   /** A test run on a fresh corpus dir holding copies of the sf0.001
     * tables the specs use; the dir is deleted afterwards. */
-  private def corpusTest(name: String)(body: String => Unit): Unit = test(name) {
+  private def corpusTest(name: String,
+      tables: Seq[String] = Seq("orders", "customer", "embeddings", "documents"))(
+      body: String => Unit): Unit = test(name) {
     val dir = Files.createTempDirectory("graft_stage_cache_spec")
     try {
-      Seq("orders", "customer", "embeddings", "documents").foreach { t =>
+      tables.foreach { t =>
         Files.copy(Source.resolve(s"$t.parquet"), dir.resolve(s"$t.parquet"))
       }
       body(dir.toString)
@@ -151,5 +154,33 @@ class StageCacheSpec extends SparkTestBase {
     val (warm, warmJobs) = JobCount(spark.sparkContext)(sorted(run("dd_semantic", dir)))
     assert(warm == cold)
     assert(warmJobs < coldJobs, s"cold $coldJobs jobs, warm $warmJobs")
+  }
+
+  corpusTest("g_pagerank and g_betweenness reflect a rewritten lineitem",
+      Seq("region", "nation", "customer", "supplier", "part", "orders", "lineitem")) { dir =>
+    val keys = Seq("g_pagerank", "g_betweenness")
+    val before = keys.map(k => sorted(run(k, dir)))
+    rewrite(dir, "lineitem")(_.where(col("l_orderkey") % 2 === 0))
+    val after = keys.map(k => sorted(run(k, dir)))
+    // a new session has no cached graph: what an uncached read returns
+    val fresh = spark.newSession()
+    val want = keys.map(k => sorted(SparkEntry.queries(k)(fresh, dir).collect()))
+    keys.indices.foreach { i =>
+      assert(after(i) != before(i), s"${keys(i)}: the rewrite changed nothing")
+      assert(after(i) == want(i), s"${keys(i)}: served the graph of the old lineitem")
+    }
+  }
+
+  test("an edge frame with a nondeterministic or clock-reading filter is read on every call") {
+    val s = spark.newSession()
+    def edges = s.range(0L, 250L, 1L, 4).select(col("id").as("src"), (col("id") + 1).as("dst"))
+    val sometimes = udf((id: Long) => id >= 0).asNondeterministic()
+    def reads(e: => DataFrame): Seq[Int] = (1 to 2).map(_ => JobCount(spark.sparkContext)(
+      LocalGraph.collect(e, LocalGraph.EdgeCap, undirected = false))._2)
+    assert(reads(edges) == Seq(1, 0))
+    assert(reads(edges.where(rand(3) >= 0)) == Seq(1, 1))
+    assert(reads(edges.where(sometimes(col("src")))) == Seq(1, 1))
+    assert(reads(edges.where(current_timestamp() > lit("2000-01-01").cast("timestamp"))) ==
+      Seq(1, 1))
   }
 }

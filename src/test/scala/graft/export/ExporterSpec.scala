@@ -291,6 +291,28 @@ class ExporterSpec extends SparkTestBase {
     assert(!names.contains("Bad.csv"), names)
   }
 
+  test("writeSingleFiles runs the largest-estimate table as partition 0 and returns files " +
+    "in the order of its tables") {
+    import org.apache.spark.TaskContext
+    import org.apache.spark.sql.functions.{col, udf}
+    // each table records the union partition its task ran as; over ranges,
+    // whose size estimates grow with their row counts
+    def table(name: String, rows: Long) = {
+      val mark = udf { (id: Long) =>
+        ExporterSpec.partitionOf.put(name, TaskContext.getPartitionId())
+        id
+      }
+      name -> spark.range(rows).select(mark(col("id")).as("id"))
+    }
+    ExporterSpec.partitionOf.clear()
+    val tables = Seq(table("Small", 10), table("Big", 5000), table("Mid", 100))
+    val dir = Files.createTempDirectory("graft-largest-first").toString
+    val files = CsvPackageWriter.writeSingleFiles(tables, dir)
+    assert(files == tables.map { case (name, _) => Paths.get(dir, s"$name.csv") })
+    assert(ExporterSpec.partitionOf.asScala.toMap == Map("Big" -> 0, "Mid" -> 1, "Small" -> 2))
+    assert(files.map(f => Files.readAllLines(f).size) == Seq(11, 5001, 101))
+  }
+
   test("the sample read from the written CSV is buildExports' sniff, in both CSV modes") {
     val prop = Prop.forAllNoShrink(genTable) { t =>
       val df = t.toDF(spark)
@@ -310,6 +332,10 @@ class ExporterSpec extends SparkTestBase {
 }
 
 object ExporterSpec {
+
+  /** Table name -> the partition its task ran as, written by the tasks
+    * of the local-mode executor this JVM hosts. */
+  val partitionOf = new java.util.concurrent.ConcurrentHashMap[String, Int]()
 
   /** The one part file Spark's CSV writer wrote into `dir`. */
   def sparkPart(dir: java.nio.file.Path): java.nio.file.Path = {

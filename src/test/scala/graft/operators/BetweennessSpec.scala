@@ -73,7 +73,9 @@ class BetweennessSpec extends SparkTestBase {
   }
 
   test("g_betweenness at sf0.001: the edge bound is one job, the driver path two") {
-    val g = TpchGraph.load(spark, "/root/testdata/sf0.001")
+    // each read in a fresh session, where no graph of these files is cached
+    def load() = TpchGraph.load(spark.newSession(), "/root/testdata/sf0.001")
+    val g = load()
     val (edges, _) = GraphAnalytics.unifiedEdges(g)
     val (bound, boundJobs) = JobCount(spark.sparkContext)(GraphAnalytics.unifiedEdgeRowsBound(g))
     assert(boundJobs == 1)
@@ -83,11 +85,16 @@ class BetweennessSpec extends SparkTestBase {
     val (out, bcJobs) = JobCount(spark.sparkContext)(Betweenness.pivotBetweenness(edges,
       nPivots = 4, horizon = 6, seed = 11L, stagingRowsHint = Some(bound)))
     assert(bcJobs == 2)
-    val (noHint, noHintJobs) = JobCount(spark.sparkContext)(Betweenness.pivotBetweenness(edges,
-      nPivots = 4, horizon = 6, seed = 11L))
+    val (noHint, noHintJobs) = JobCount(spark.sparkContext)(Betweenness.pivotBetweenness(
+      GraphAnalytics.unifiedEdges(load())._1, nPivots = 4, horizon = 6, seed = 11L))
     assert(noHintJobs == 2)
+    // the same frame again: the cached graph, so the md5 job alone
+    val (again, againJobs) = JobCount(spark.sparkContext)(Betweenness.pivotBetweenness(edges,
+      nPivots = 4, horizon = 6, seed = 11L))
+    assert(againJobs == 1)
     assert(out.where("betweenness > 0").count() > 0)
     assert(noHint.collect().toSet == out.collect().toSet)
+    assert(again.collect().toSet == out.collect().toSet)
   }
 
   test("a σ·(10⁶+δ) past 2⁶³ leaves the long replay for the DECIMAL loop, same rows") {

@@ -118,7 +118,9 @@ class CorenessSpec extends RandomGraphs {
   }
 
   test("sf0.001 unified graph: 1 job on the driver") {
-    val (e, _) = GraphAnalytics.unifiedEdges(TpchGraph.load(spark, "/root/testdata/sf0.001"))
+    // a fresh session: no other spec's read of these files is cached in it
+    val (e, _) = GraphAnalytics.unifiedEdges(
+      TpchGraph.load(spark.newSession(), "/root/testdata/sf0.001"))
     val ((driver, driverSizes), jobs) =
       JobCount(spark.sparkContext)(GraphAnalytics.corenessWithStats(e, rounds = 16))
     val (dist, distSizes) = GraphAnalytics.corenessWithStats(e, rounds = 16, localStateCap = 0L)

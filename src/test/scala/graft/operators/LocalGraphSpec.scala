@@ -1,7 +1,9 @@
 package graft.operators
 
 import graft.SparkTestBase
+import graft.cache.StageCache
 import org.apache.spark.graft.JobCount
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -184,5 +186,50 @@ class LocalGraphSpec extends SparkTestBase {
       assert(g.vids.toSeq == want.vids.toSeq && g.offsets.toSeq == want.offsets.toSeq &&
         g.nbrs.toSeq == want.nbrs.toSeq && g.weights.get.toSeq == want.weights.get.toSeq, t)
     }
+  }
+
+  /** `rows` (i, i + 1) edges over 8 partitions of `s`'s range. */
+  private def chain(s: SparkSession, rows: Long): DataFrame =
+    s.range(0L, rows, 1L, 8).select(col("id").as("src"), (col("id") + 1).as("dst"))
+
+  // the cache specs read in a fresh session, whose StageCache entries no
+  // other spec can have made
+
+  test("cache: a second collect of the same frame runs no job and returns the same arrays") {
+    val s = spark.newSession()
+    def run() = JobCount(spark.sparkContext)(
+      LocalGraph.collect(chain(s, 300), LocalGraph.EdgeCap, undirected = true))
+    val (g, jobs) = run()
+    val (again, againJobs) = run()
+    assert(jobs == 1 && againJobs == 0, s"$jobs then $againJobs jobs")
+    assert(again.get.vids.toSeq == g.get.vids.toSeq && again.get.offsets.toSeq ==
+      g.get.offsets.toSeq && again.get.nbrs.toSeq == g.get.nbrs.toSeq)
+    assert(again.get eq g.get)
+  }
+
+  test("cache: a different cap gets its own entry") {
+    val s = spark.newSession()
+    def run(cap: Long) = JobCount(spark.sparkContext)(
+      LocalGraph.collect(chain(s, 300), cap, undirected = false))._2
+    assert(Seq(300L, 400L, 300L, 400L).map(run) == Seq(1, 1, 0, 0))
+  }
+
+  test("cache: an over-cap result repeats with no job") {
+    val s = spark.newSession()
+    val runs = (1 to 2).map(_ => JobCount(spark.sparkContext)(
+      LocalGraph.collect(chain(s, 300), 100, undirected = false)))
+    assert(runs.forall(_._1.isEmpty))
+    assert(runs.map(_._2) == Seq(1, 0))
+  }
+
+  test("cache: the least recently used graphs are evicted past the byte budget") {
+    val s = spark.newSession()
+    def run(rows: Long) = JobCount(spark.sparkContext)(
+      LocalGraph.collect(chain(s, rows), LocalGraph.EdgeCap, undirected = false))
+    val Seq(a, b, c) = Seq(100L, 200L, 300L).map(run(_)._1.get)
+    assert(run(100L)._2 == 0) // a is now the most recently used
+    StageCache.evict(a.sizeInBytes + c.sizeInBytes)
+    assert(Seq(300L, 100L, 200L).map(run(_)._2) == Seq(0, 0, 1))
+    assert(a.sizeInBytes == 8L * 101 + 4L * 102 + 4L * 100)
   }
 }

@@ -7,7 +7,9 @@ import org.apache.spark.sql.functions._
   * distributed side is forced through each operator's spec hook —
   * `localStateCap = 0`, or `collectStats = true` for MIS. The rank
   * family's sum-collapse is checked against a Spark `groupBy` here; its
-  * driver backend is checked in [[RankLoopSpec]]. */
+  * driver backend is checked in [[RankLoopSpec]]. Each replay, run
+  * twice on one frame, reads the cached graph the second time and
+  * returns the same rows: no replay writes into the shared arrays. */
 class LocalReplaySpec extends RandomGraphs {
 
   test("betweenness: local Brandes ≡ distributed loop") {
@@ -97,6 +99,37 @@ class LocalReplaySpec extends RandomGraphs {
         (rows(est0), deltas.map(rows), sizes)
       }
       same(run(LocalGraph.WideStateCap), run(0L), g)
+    }
+  }
+
+  test("every driver replay, run twice on one frame, returns identical rows") {
+    check("replay twice") { g =>
+      val pe = g.df.select("src", "dst")
+      val runs = Seq[(String, () => Any)](
+        "betweenness" -> (() => rows(Betweenness.pivotBetweenness(g.df, 2, 3))),
+        "mis" -> (() => rows(Mis.maximalIndependentSet(g.df, 3))),
+        "sssp" -> (() => {
+          val (d, sizes) = GraphAnalytics.ssspDistancesWithStats(g.df, g.sourceDf, rounds = 4)
+          (rows(d), sizes)
+        }),
+        "bfs" -> (() => rows(GraphAnalytics.bfsDistances(pe, g.sourceDf, maxHops = 3))),
+        "coreness" -> (() => {
+          val (c, sizes) = GraphAnalytics.corenessWithStats(g.df, 3, toFixpoint = true)
+          (rows(c), sizes)
+        }),
+        "pagerank" -> (() => rows(RankLoop.pageRank(pe, 3, 0.15))),
+        "weighted" -> (() => rows(RankLoop.weighted(
+          g.df.selectExpr("src", "dst", "w + 1 AS w"), 3, 0.15))),
+        "katz" -> (() => rows(RankLoop.katz(pe, 3, 2L))),
+        "hllBallDeltas" -> (() => {
+          val (est0, deltas, sizes) = GraphAnalytics.hllBallDeltas(g.df, 3, 6, "src", "dst",
+            collectStats = true)
+          (rows(est0), deltas.map(rows), sizes)
+        }))
+      runs.map { case (name, run) =>
+        val first = run()
+        same(first, run(), g) :| name
+      }.reduce(_ && _)
     }
   }
 }

@@ -100,16 +100,20 @@ class RankLoopSpec extends RandomGraphs {
     // from every count it belongs to. The null key is one vertex on
     // every branch: broadcast, narrow band (the four sources fit, the
     // five vertices do not: 4 is dst-only) and shuffle
-    val e = Seq[(Option[Int], Option[Int], Option[Long])]((Some(1), Some(2), Some(1L)),
-      (Some(1), None, Some(2L)), (None, Some(2), Some(1L)), (Some(2), Some(3), None),
-      (Some(3), Some(1), Some(3L)), (Some(1), Some(2), Some(1L)), (Some(3), Some(4), Some(1L)))
+    // Each operator reads its own frame (vids shifted by `by`), so none
+    // is served the graph another one cached.
+    def frame(by: Int) = Seq[(Option[Int], Option[Int], Option[Long])](
+      (Some(1), Some(2), Some(1L)), (Some(1), None, Some(2L)), (None, Some(2), Some(1L)),
+      (Some(2), Some(3), None), (Some(3), Some(1), Some(3L)), (Some(1), Some(2), Some(1L)),
+      (Some(3), Some(4), Some(1L)))
+      .map { case (u, v, w) => (u.map(_ + by), v.map(_ + by), w) }
       .toDF("src", "dst", "w")
-    val pe = e.select("src", "dst")
+    val (e, pe, ke) = (frame(0), frame(0).select("src", "dst"), frame(10).select("src", "dst"))
     val default = GraphAnalytics.maxBroadcastVerticesDyn
     Seq[(String, Int, (Long, Long) => DataFrame)](
       ("pagerank", 2, (cap, c) => RankLoop.pageRank(pe, 3, 0.15, c, localCap = cap)),
       ("weighted", 4, (cap, c) => RankLoop.weighted(e, 3, 0.15, c, localCap = cap)),
-      ("katz", 3, (cap, c) => RankLoop.katz(pe, 3, 2L, c, localCap = cap))).foreach {
+      ("katz", 3, (cap, c) => RankLoop.katz(ke, 3, 2L, c, localCap = cap))).foreach {
       case (op, width, run) =>
         val (under, underJobs) =
           JobCount(spark.sparkContext)(rows(run(LocalGraph.EdgeCap, default)))
@@ -123,7 +127,9 @@ class RankLoopSpec extends RandomGraphs {
   }
 
   test("pageRankQuantizedDF on the sf0.001 unified graph: 1 job on the driver") {
-    val (e, _) = GraphAnalytics.unifiedEdges(TpchGraph.load(spark, "/root/testdata/sf0.001"))
+    // a fresh session: no other spec's read of these files is cached in it
+    val (e, _) = GraphAnalytics.unifiedEdges(
+      TpchGraph.load(spark.newSession(), "/root/testdata/sf0.001"))
     val (driver, driverJobs) =
       JobCount(spark.sparkContext)(GraphAnalytics.pageRankQuantizedDF(e, numIter = 10))
     val (dist, distJobs) =
